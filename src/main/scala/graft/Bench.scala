@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main (driver contract): times every SparkEntry query at the
   * SPARK_GRAFT_SF_DIR scale and prints ONE JSON line.
   *
@@ -13,17 +11,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.functions.GraftExtensions.register(spark)
+    val spark = GraftSession.build()
 
     // SPARK_GRAFT_ONLY=q49,q52 narrows the run to matching name prefixes —
     // local iteration aid; the driver never sets it.
@@ -32,37 +20,21 @@ object Bench {
       only.forall(_.exists(n.startsWith))
     }
 
-    def load1(): Double =
-      java.lang.management.ManagementFactory.getOperatingSystemMXBean
-        .getSystemLoadAverage
-    // Ambient load BEFORE any Spark work — the drain target below is
-    // relative to it (the ScaleSweep discipline: an absolute bar on a
-    // busy host would stall the bound and still stamp high).
-    val ambient = math.max(0.0, load1())
-
     // warmup: run every query once so catalog build, parquet footers, and
     // whole-stage-codegen/classloader compilation happen off the clock —
     // measured numbers then reflect steady-state throughput (what a warm
     // cluster sustains), not first-use JIT. The cache is cleared afterwards
-    // so measured runs still pay their real data-side costs.
-    try {
-      CubeCatalog.forDir(spark, sfDir)
-      selected.foreach { case (_, fn) =>
-        try { fn(spark, sfDir).count() } catch { case _: Throwable => () }
-      }
-      spark.catalog.clearCache()
-    } catch { case _: Throwable => () }
-
-    // Drain the warmup's own load before stamping/measuring — without it
-    // the loadBefore stamp can only ever read the warmup pass's 32
-    // threads, never the ambient machine, and the measured pass starts
-    // into the warmup's scheduler residue (the r15 artifact drift). Same
-    // bounded decay wait ScaleSweep uses between its warmup and measure.
-    val threshold = math.max(ambient + 0.5,
-      Runtime.getRuntime.availableProcessors / 8.0)
-    val tDrain = System.nanoTime()
-    while (load1() > threshold && System.nanoTime() - tDrain < 240e9.toLong)
-      Thread.sleep(5000)
+    // so measured runs still pay their real data-side costs. The drain
+    // after it keeps the warmup's load out of the loadBefore stamp.
+    graft.tools.Probe.warmThenDrain {
+      try {
+        CubeCatalog.forDir(spark, sfDir)
+        selected.foreach { case (_, fn) =>
+          try { fn(spark, sfDir).count() } catch { case _: Throwable => () }
+        }
+        spark.catalog.clearCache()
+      } catch { case _: Throwable => () }
+    }
 
     // two measured passes, per-query MIN: host contention on this box swings
     // single-shot numbers several-fold; the min is the steady-state capability
@@ -76,11 +48,11 @@ object Bench {
     // artifact showed a uniform ~1.17× drift on untouched queries with no
     // attributable cause — load averages on the row make (or rule out)
     // that case without a re-run.
-    val loadBefore = load1()
+    val loadBefore = graft.tools.Probe.load1()
     val p1 = pass()
     spark.catalog.clearCache()
     val p2 = pass().toMap
-    val loadAfter = load1()
+    val loadAfter = graft.tools.Probe.load1()
     val results = p1.map { case (n, t) => n -> math.min(t, p2.getOrElse(n, t)) }
     // The harness that invokes this main keeps only the LAST ~2000 chars of
     // stdout, and sbt appends its own "[success] …" line after ours. Order

@@ -38,6 +38,13 @@ final class CubeCatalog(
     rollupReg.asScala.toSeq
   }
 
+  // directories this catalog owns (a side catalog's agg-table parquet),
+  // deleted by close so a flush-and-rebuild cycle leaves nothing behind
+  private val ownedDirs = TrieMap.empty[String, Unit]
+
+  /** Hand `dir` to this catalog: [[close]] deletes it. */
+  def deleteOnClose(dir: String): Unit = ownedDirs.put(dir, ())
+
   /** Swap the registered rollup with the same (cube, level-set) identity —
     * the streaming refresh re-registers after every batch swap, because a
     * parquet-backed frame pins its file listing at read time and the swap
@@ -276,7 +283,7 @@ final class CubeCatalog(
   }
 
   /** Release executor-side state this catalog pinned (persisted member
-    * frames, cached rollups). Without this, /flush would only drop the
+    * frames, cached rollups) and delete the directories it owns. Without this, /flush would only drop the
     * TrieMap while Spark's CacheManager kept the InMemoryRelations
     * registered — canonically-equal plans from the rebuilt catalog would
     * silently reuse stale cached data. */
@@ -295,16 +302,30 @@ final class CubeCatalog(
     memberCountCache.clear()
     navKeyCache.clear()
     resultCache.synchronized(resultCache.clear())
+    ownedDirs.keys.foreach { d =>
+      val p = new org.apache.hadoop.fs.Path(d)
+      p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
+    }
+    ownedDirs.clear()
   }
 }
 
 object CubeCatalog {
-  // One catalog per (session, data dir) — dims stay registered across queries,
-  // the analog of the reference's schema/member cache (api_helpers.rb:10-16).
-  private val cache = TrieMap.empty[(SparkSession, String), CubeCatalog]
+  // One catalog per (session, data dir, variant) — dims stay registered
+  // across queries, the analog of the reference's schema/member cache
+  // (api_helpers.rb:10-16).
+  private val cache = TrieMap.empty[(SparkSession, String, String), CubeCatalog]
 
   def forDir(spark: SparkSession, sfDir: String): CubeCatalog =
-    cache.getOrElseUpdate((spark, sfDir), TpchCatalog.build(spark, sfDir))
+    shared(spark, sfDir, "")(TpchCatalog.build(spark, sfDir))
+
+  /** The catalog `variant` over `sfDir`, built by `build` on first use and
+    * then shared like [[forDir]]'s, until [[flush]] closes it. For side
+    * catalogs that must not leak into the default one (an XML-declared
+    * schema, registered rollups). */
+  private[graft] def shared(spark: SparkSession, sfDir: String,
+      variant: String)(build: => CubeCatalog): CubeCatalog =
+    cache.getOrElseUpdate((spark, sfDir, variant), build)
 
   /** Drop cached catalogs — the `/flush` analog (ref api.rb:52-70).
     * Unpersists every frame each catalog pinned before forgetting it, so a

@@ -19,12 +19,10 @@ object SparkEntry {
 
   // q82: the Mondrian XML migration path — a catalog declared in the
   // reference's own schema grammar (src/main/resources/graft/
-  // tpch_orders.xml), bound to the testdata star and cached per
-  // (session, dir) exactly like CubeCatalog.forDir
-  private val xmlCatalogs = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), CubeCatalog]
-  private def xmlCatalogFor(s: SparkSession, dir: String): CubeCatalog =
-    xmlCatalogs.getOrElseUpdate((s, dir), {
+  // tpch_orders.xml), bound to the testdata star and shared per
+  // (session, dir) next to CubeCatalog.forDir's
+  private[graft] def xmlCatalogFor(s: SparkSession, dir: String): CubeCatalog =
+    CubeCatalog.shared(s, dir, "xml") {
       val xml = scala.io.Source.fromInputStream(
         getClass.getResourceAsStream("/graft/tpch_orders.xml"),
         "UTF-8").mkString
@@ -32,7 +30,7 @@ object SparkEntry {
         "orders" -> s.read.parquet(s"$dir/orders.parquet"),
         "customer" -> s.read.parquet(s"$dir/customer.parquet"),
         "nation" -> s.read.parquet(s"$dir/nation.parquet")))
-    })
+    }
 
   private def L(dim: String, level: String, hier: String = null) =
     LevelRef(dim, Option(level), Option(hier))
@@ -2032,7 +2030,7 @@ object SparkEntry {
       // partials re-aggregate exactly, so the rollup path must hash-match
       // the same SQL as a fact scan would.
       "q35_rollup_routed" -> ((s: SparkSession, dir: String) => {
-        val c = rollupCatalogs.getOrElseUpdate((s, dir), {
+        val c = CubeCatalog.shared(s, dir, "rollup") {
           val cc = TpchCatalog.build(s, dir)
           val r = Rollups.build(cc, cc.cube("sales"), Seq(
             LevelRef("Geography", Some("Region")),
@@ -2042,17 +2040,15 @@ object SparkEntry {
           val path = java.nio.file.Files
             .createTempDirectory("graft-aggtable").toString
           Rollups.save(r, path)
+          cc.deleteOnClose(path)
           cc.addRollup(Rollups.load(s, r.cube, r.levels, path), cache = false)
           cc
-        })
+        }
         Planner.plan(c, CubeQuery("sales",
           Seq(drill("Geography", "Region"), drill("Part", "Brand", "Brands")),
           Seq("revenue", "cnt"),
           cuts = Seq(RangeCut(L("ShipDate", "Year", "Monthly"), 1996, 1997))))
       }))
-
-  private val rollupCatalogs =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), CubeCatalog]
 
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     cubeQueries.map { case (n, q) => n -> cq(q) } ++ opsQueries

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -12,18 +11,10 @@ object Verify {
     val only = args.lift(2).map(_.split(",").map(_.trim).toSeq)
     def selected[T](m: Map[String, T]): Map[String, T] =
       m.filter { case (n, _) => only.forall(_.exists(n.startsWith)) }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // graft extensions active during the gate: SQL functions, the GroupedTopK
-    // strategy, and the TopKRewrite rule — the rewrite must never change a
-    // result, and running the whole oracle gate with it on proves that
-    graft.functions.GraftExtensions.register(spark)
+    // graft extensions are active during the gate: the TopKRewrite rule
+    // must never change a result, and running the whole oracle gate with
+    // it on proves that
+    val spark = GraftSession.build()
     new java.io.File(outDir).mkdirs()
     selected(SparkEntry.queries).foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")

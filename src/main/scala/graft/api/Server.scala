@@ -522,14 +522,7 @@ object ServerMain {
     }
     val sfDir = rest.headOption.getOrElse("/root/testdata/sf0.001")
     val port = rest.lift(1).map(_.toInt).getOrElse(4567)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.build()
     val server = new Server(spark, sfDir, port, catalogXml = catalogXml)
     server.start()
     val src = catalogXml.map(x => s"catalog $x over ").getOrElse("")

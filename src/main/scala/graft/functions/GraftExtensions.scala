@@ -7,12 +7,12 @@ import graft.model.GraftException
 
 /** SparkSessionExtensions entry point: registers graft's native Catalyst
   * expressions as SQL functions, so `spark.sql("SELECT simhash64(...)")`
-  * works next to the Column API. Activate with
-  *
-  *   SparkSession.builder().withExtensions(new GraftExtensions)
-  *
-  * or `spark.sql.extensions=graft.functions.GraftExtensions`, or call
-  * [[GraftExtensions.register]] on an existing session.
+  * works next to the Column API. The normal way in is
+  * [[graft.GraftSession.build]], which calls [[GraftExtensions.register]]
+  * on the session it builds. An embedding application that owns its
+  * session can call `register` itself, or set
+  * `spark.sql.extensions=graft.functions.GraftExtensions`; the optimizer
+  * rule then runs in a different batch than the one `register` adds it to.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {

@@ -801,17 +801,9 @@ object Dedup {
     val cand = (if (nHot == 0) {
       val b = prefix.select(col("block").as("block_b"),
         col("doc_id").as("id_b"), col("n").as("nb"), col("s").as("s_b"))
-      // The checkpointed posting RDD inherits the corpus scan's partition
-      // count, so when the planner broadcasts the index side the whole
-      // probe ⋈ index ⋈ partial-distinct pipeline runs at FILE-SPLIT
-      // parallelism (one task on a one-file corpus — measured 1.6 s in a
-      // single task at sf0.1). Hash-repartitioning the probe by the join
-      // keys to the session's shuffle partitions is a REPARTITION_BY_NUM
-      // exchange AQE never coalesces: at small scale it buys the stage
-      // full parallelism; at corpus scale (index side past the broadcast
-      // budget) it IS the exchange the shuffled join would insert anyway,
-      // satisfied instead of duplicated (guide §2 — partitioning derives
-      // from the session knob, not the accidental file layout).
+      // The probe keeps the posting RDD's partitioning (no repartition
+      // here); the single-task fix is the post-distinct repartition before
+      // the verify joins below.
       a.join(b,
         col("block_a") === col("block_b") && col("s_a") === col("s_b") &&
           col("id_a") < col("id_b") &&

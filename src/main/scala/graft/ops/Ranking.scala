@@ -84,8 +84,8 @@ object Ranking {
   private[graft] def withRangeBuckets(df: DataFrame, n: Int,
       keys: Seq[Column]): DataFrame = {
     // Skip the input persist when the frame is just narrow ops over an
-    // already-materialized scan (a checkpoint's LogicalRDD or a cached
-    // relation): the sample pass re-reads those blocks anyway, and a
+    // already-materialized scan (a checkpoint's LogicalRDD): the sample
+    // pass re-reads those blocks anyway, and a
     // second stored copy of a trivially-recomputable projection is pure
     // memory cost (callers like the difficulty/DSIR pipelines feed
     // checkpointed scoring frames).
@@ -98,7 +98,6 @@ object Ranking {
         case s: org.apache.spark.sql.catalyst.plans.logical.SubqueryAlias =>
           materialized(s.child)
         case _: org.apache.spark.sql.execution.LogicalRDD => true
-        case _: org.apache.spark.sql.execution.columnar.InMemoryRelation => true
         case _ => false
       }
     val in = if (materialized(df.queryExecution.analyzed)) df

@@ -703,20 +703,6 @@ object Similarity {
     (pqKnn(emb, queryIds, k, m, ksub, iters, shortlist, dim), shortlist)
   }
 
-  /** [[quantizedKnn]] with [[suggestedShortlist]] wired in. */
-  def quantizedKnnAuto(emb: DataFrame, queryIds: Seq[Long], k: Int)
-      : (DataFrame, Int) = {
-    val shortlist = suggestedShortlist(emb.count(), k)
-    (quantizedKnn(emb, queryIds, k, shortlist), shortlist)
-  }
-
-  /** [[projectedKnn]] with [[suggestedShortlist]] wired in. */
-  def projectedKnnAuto(emb: DataFrame, queryIds: Seq[Long], k: Int,
-      projDim: Int = 16, dim: Int = 64): (DataFrame, Int) = {
-    val shortlist = suggestedShortlist(emb.count(), k)
-    (projectedKnn(emb, queryIds, k, projDim, shortlist, dim), shortlist)
-  }
-
   /** The IVF-PQ index (Jégou et al. §IV, "IVFADC" — the layout
     * billion-scale ANN deployments actually run): an IVF coarse quantizer
     * partitions the corpus into cells, and product quantization encodes

@@ -1429,12 +1429,6 @@ object Planner {
       rows.head.toSeq
     }.asInstanceOf[Seq[Any]]
 
-  /** TopCount named set (ref B9, foodmart.xml:405-410): k member keys by
-    * measure, descending — TakeOrderedAndProject, no full sort. */
-  def namedSetKeys(cat: CubeCatalog, cube: CubeDef, ns: NamedSetDef): DataFrame =
-    topKKeys(cat, cube, resolve(cube, LevelRef(ns.dim, Some(ns.level))),
-      ns.k, ns.byMeasure)
-
   /** The k member keys of a TopCount set, collected once per catalog and
     * memoized (the reference resolves named sets against its member cache
     * the same way; /flush rebuilds the catalog and drops this too). Cuts

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.ops.Similarity
 
@@ -18,14 +17,7 @@ object AnnTune {
       .split(",").map(_.trim.toInt).toSeq
     val baseDir = args.lift(1).getOrElse("/root/testdata/sf0.1")
     val workDir = args.lift(2).getOrElse("/tmp/graft_scale")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.build()
     factors.foreach(f => ScaleSweep.buildCorpus(spark, baseDir, workDir, f))
 
     val K = ScaleSweep.K

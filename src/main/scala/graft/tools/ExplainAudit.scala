@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import graft.SparkEntry
 
 /** Plan auditor: prints the physical plan of selected queries and greps for
@@ -67,16 +66,11 @@ object ExplainAudit {
         "q96_mdx_pinned_tuple", "q97_mdx_pinned_mixed",
         "q98_mdx_pinned_coarser", "m23_flac32_decode",
         "q99_mdx_pinned_nav", "q100_mdx_tuple_axis")
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // AQE applies CollapseCodegenStages at stage materialization, which
-      // hides WholeStageCodegen from the printed plan; disable it here (and
-      // only here) so codegen coverage is statically visible.
-      .config("spark.sql.adaptive.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession.build()
+    // AQE applies CollapseCodegenStages at stage materialization, which
+    // hides WholeStageCodegen from the printed plan; disable it here (and
+    // only here) so codegen coverage is statically visible.
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
 
     names.foreach { n =>
       val df = SparkEntry.queries(n)(spark, sfDir)

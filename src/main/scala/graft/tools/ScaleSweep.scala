@@ -47,17 +47,7 @@ object ScaleSweep {
     val outJson = args.lift(2).getOrElse("BENCH_scaling.json")
     val factors = args.lift(3).getOrElse("1,10,100")
       .split(",").map(_.trim.toInt).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.build()
 
     factors.foreach(f => buildCorpus(spark, baseDir, workDir, f))
     factors.foreach(f => buildDocsCorpus(spark, baseDir, workDir, f))
@@ -69,29 +59,12 @@ object ScaleSweep {
     def fragPath(f: Int) = java.nio.file.Paths.get(s"$workDir/result_x$f.json")
     val missing = factors.filter(f => !java.nio.file.Files.exists(fragPath(f)))
     if (missing.nonEmpty) {
-      val sysLoad = () => java.lang.management.ManagementFactory
-        .getOperatingSystemMXBean.getSystemLoadAverage
-      // Ambient load BEFORE the warmup: the drain target must be relative
-      // to what the host was already doing — an absolute threshold on a
-      // shared host whose ambient load exceeds it would stall the full
-      // bound every run and still stamp the high load.
-      val ambient = math.max(0.0, sysLoad())
-      runFactor(spark, workDir, missing.min, warm = true) // JVM/codegen warmup
-      // The warmup's own 32 threads dominate the 1-minute load average for
-      // ~2 minutes after it finishes, so without a drain the measured
-      // factor's host_load1[before] stamp can only ever read the warmup,
-      // never the ambient machine — exactly the ambiguity the stamps exist
-      // to remove. Wait (bounded) for the EMA to decay back toward ambient
-      // (+0.5 slack for EMA tail), floored at cpus/8 — a ~quiet bar that
-      // scales with the host instead of hardcoding this box's 32 cores.
-      val threshold = math.max(ambient + 0.5,
-        Runtime.getRuntime.availableProcessors / 8.0)
-      val t0 = System.nanoTime()
-      while (sysLoad() > threshold && System.nanoTime() - t0 < 240e9.toLong)
-        Thread.sleep(5000)
-      println(f"[scalesweep] post-warmup drain: load1 ${sysLoad()}%.2f " +
-        f"(ambient $ambient%.2f, threshold $threshold%.2f) " +
-        f"after ${(System.nanoTime() - t0) / 1e9}%.0f s")
+      val d = Probe.warmThenDrain { // JVM/codegen warmup
+        runFactor(spark, workDir, missing.min, warm = true)
+      }
+      println(f"[scalesweep] post-warmup drain: load1 ${Probe.load1()}%.2f " +
+        f"(ambient ${d.ambient}%.2f, threshold ${d.threshold}%.2f) " +
+        f"after ${d.seconds}%.0f s")
     }
     missing.foreach { f =>
       val r = runFactor(spark, workDir, f, warm = false)
@@ -290,16 +263,13 @@ object ScaleSweep {
     // carried a q49 factor-100 regression with no attributable cause ON
     // the row — load + heap per op and load per factor block make (or
     // rule out) the contention/session-pressure case without a re-run.
-    def load1(): Double =
-      java.lang.management.ManagementFactory.getOperatingSystemMXBean
-        .getSystemLoadAverage
     def loadJson(v: Double): String = if (v < 0) "null" else fmt(v)
     def heapUsedMb: Long = {
       val rt = Runtime.getRuntime
       (rt.totalMemory - rt.freeMemory) / (1L << 20)
     }
     def time(name: String)(body: => (Long, Map[String, String])): Unit = {
-      val l0 = load1()
+      val l0 = Probe.load1()
       val t0 = System.nanoTime()
       val (rows, extra) = body
       val sec = (System.nanoTime() - t0) / 1e9
@@ -322,7 +292,7 @@ object ScaleSweep {
         .foreach(_.unpersist(blocking = true))
       System.gc()
     }
-    val loadBefore = load1()
+    val loadBefore = Probe.load1()
     def recallOf(pairs: DataFrame): (Long, Double) = {
       val found = pairs.join(truth,
         col("vec_a") === col("t_a") && col("vec_b") === col("t_b"))
@@ -653,7 +623,7 @@ object ScaleSweep {
       }
     }
 
-    val loadAfter = load1()
+    val loadAfter = Probe.load1()
     val params =
       s"""{"bits_auto":$bitsAuto,"tables_auto":$tablesAuto,""" +
         s""""nlist_auto":$nlistAuto,"k_sem_auto":$kSemAuto,""" +

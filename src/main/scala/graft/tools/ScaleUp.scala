@@ -24,23 +24,15 @@ object ScaleUp {
   def main(args: Array[String]): Unit = {
     val Array(src, dst, factorS) = args.take(3)
     val factor = factorS.toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.build()
     build(spark, src, dst, factor)
     spark.stop()
   }
 
   /** The replication itself, callable from other harnesses
     * ([[ScaleSweep]] builds its factor-100 OLAP corpus with it). Requires
-    * a session with `spark.sql.legacy.parquet.nanosAsLong=true` when the
-    * source events carry TIMESTAMP(NANOS). */
+    * a [[graft.GraftSession]] (nanosAsLong) when the source events carry
+    * TIMESTAMP(NANOS). */
   def build(spark: SparkSession, src: String, dst: String,
       factor: Int): Unit = {
     def load(name: String): DataFrame =

@@ -31,8 +31,15 @@ class GroupedTopKSpec extends AnyFunSuite {
         col("l_linenumber").asc), k)
 
   test("grouped top-k equals the row_number window form exactly") {
+    // the reference runs as Spark plans it, without graft's rewrite
+    val rule = "spark.sql.optimizer.excludedRules"
     Seq(1, 5, 40).foreach { k =>
-      val exp = windowed(k).collect().map(_.toSeq).toSet
+      spark.conf.set(rule, graft.plans.TopKRewrite.ruleName)
+      val exp = try {
+        val plan = windowed(k).queryExecution.executedPlan.toString
+        assert(plan.contains("Window") && !plan.contains("GroupedTopK"), plan)
+        windowed(k).collect().map(_.toSeq).toSet
+      } finally spark.conf.unset(rule)
       val got = viaOperator(k).collect().map(_.toSeq).toSet
       assert(got == exp, s"k=$k")
     }
@@ -48,7 +55,6 @@ class GroupedTopKSpec extends AnyFunSuite {
   }
 
   test("TopKRewrite turns the row_number window spelling into GroupedTopK") {
-    graft.functions.GraftExtensions.register(spark)
     val df = windowed(5)
     val plan = df.queryExecution.executedPlan.toString()
     assert("GroupedTopK \\[".r.findAllIn(plan).length == 2, plan)
@@ -59,7 +65,6 @@ class GroupedTopKSpec extends AnyFunSuite {
   }
 
   test("TopKRewrite keeps residual predicates and rn = 1 semantics") {
-    graft.functions.GraftExtensions.register(spark)
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("l_returnflag")
       .orderBy(col("l_extendedprice").desc, col("l_orderkey").asc,

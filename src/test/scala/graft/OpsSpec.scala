@@ -3548,7 +3548,6 @@ class OpsSpec extends AnyFunSuite {
   }
 
   test("stratified sample: exactly k per stratum, rides GroupedTopK") {
-    graft.functions.GraftExtensions.register(spark)
     val out = TextOps.stratifiedSample(docs, 2)
     // every (lang, source) stratum with >= 2 docs yields exactly 2 rows,
     // smaller strata yield all their docs

@@ -5,16 +5,11 @@ import org.apache.spark.sql.SparkSession
 /** One shared session for the whole test run (suites reuse via getOrCreate). */
 object SparkTestSession {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[8]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // keep saveAsTable (bucketing tests) out of the repo working tree
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
-      .getOrCreate()
+    // keep saveAsTable (bucketing tests) out of the repo working tree; the
+    // warehouse dir is static, so it must be set before the session exists
+    System.setProperty("spark.sql.warehouse.dir",
+      java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
+    val s = GraftSession.build() // 8 cores: SPARK_GRAFT_CPUS in build.sbt
     s.sparkContext.setLogLevel("ERROR")
     s
   }

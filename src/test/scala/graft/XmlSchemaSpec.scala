@@ -257,4 +257,33 @@ class XmlSchemaSpec extends AnyFunSuite {
     assert(ex2.getMessage.contains("customer") &&
       ex2.getMessage.contains("nation"))
   }
+
+  test("/flush closes the side catalogs: q82 and q35 rebuild, q35's agg table is deleted") {
+    val sf = SparkTestSession.sf
+    val q82 = SparkEntry.queries("q82_xml_catalog")
+    val before = q82(spark, sf).collect()
+    val old = SparkEntry.xmlCatalogFor(spark, sf)
+    val pinned = old.cachedMemberFrame(("orders_xml", "__flush_probe", false)) {
+      spark.range(5).toDF("id")
+    }
+    pinned.count()
+    assert(pinned.storageLevel.useMemory)
+    val q35 = SparkEntry.queries("q35_rollup_routed")
+    val q35Before = q35(spark, sf).collect()
+    def aggDirs = CubeCatalog.shared(spark, sf, "rollup")(
+      fail("q35 registers its rollup catalog")).rollups
+      .flatMap(_.df.inputFiles).map(f => new java.io.File(new java.net.URI(f))
+        .getParentFile).distinct
+    val oldDirs = aggDirs
+    assert(oldDirs.nonEmpty && oldDirs.forall(_.isDirectory))
+    CubeCatalog.flush()
+    assert(pinned.storageLevel == org.apache.spark.storage.StorageLevel.NONE,
+      "flush must close the side catalog and unpersist what it pinned")
+    assert(oldDirs.forall(!_.exists), s"flush must delete $oldDirs")
+    val after = q82(spark, sf).collect()
+    assert(!(SparkEntry.xmlCatalogFor(spark, sf) eq old))
+    assert(after.toSeq == before.toSeq)
+    assert(q35(spark, sf).collect().toSeq == q35Before.toSeq)
+    assert(aggDirs.nonEmpty && aggDirs.forall(_.isDirectory))
+  }
 }
