@@ -158,43 +158,50 @@ final class CubeCatalog(
       compute: => DataFrame): DataFrame =
     timeDomainCache.getOrElseUpdate(key, compute)
 
-  // QUERY-RESULT cache — the Mondrian cell/segment-cache analog and the
-  // reason the reference exposes /flush at all (api.rb:52-64): repeated
-  // dashboard queries answer from memory without a Spark job. Keyed by the
-  // normalized CubeQuery (a case class — structural equality), values are
-  // the COLLECTED axis rows, which are axis-sized by construction (the
-  // dense-cells guard bounds them), so the LRU-capped driver footprint is
-  // cells × entries. Dropped with the catalog on /flush; access-ordered so
-  // hot dashboards stay resident. Size: spark.graft.result.cache.entries
+  // RESULT cache — the Mondrian cell/segment-cache analog and the reason
+  // the reference exposes /flush at all (api.rb:52-64): repeated dashboard
+  // queries and level-member listings answer from memory without a Spark
+  // job. Keyed by a [[CubeCatalog.ResultKey]] (case classes — structural
+  // equality), values are COLLECTED rows: axis rows are axis-sized by
+  // construction (the dense-cells guard bounds them) and a listing holds
+  // the page it answered, so the LRU-capped driver footprint is rows ×
+  // entries. Dropped with the catalog on /flush; access-ordered so hot
+  // dashboards stay resident. Size: spark.graft.result.cache.entries
   // (0 disables).
   private val resultCacheMax: Int =
     spark.conf.getOption("spark.graft.result.cache.entries")
       .map(_.toInt).getOrElse(256)
   private val resultCache =
-    new java.util.LinkedHashMap[graft.planner.CubeQuery,
+    new java.util.LinkedHashMap[CubeCatalog.ResultKey,
         (Seq[org.apache.spark.sql.Row], Seq[String])](16, 0.75f, true) {
       override def removeEldestEntry(
-          e: java.util.Map.Entry[graft.planner.CubeQuery,
+          e: java.util.Map.Entry[CubeCatalog.ResultKey,
             (Seq[org.apache.spark.sql.Row], Seq[String])]): Boolean =
         size() > resultCacheMax
     }
 
-  /** (rows, columns) for a query, computed once per catalog generation.
+  /** (rows, columns) for a query, computed once per catalog generation. */
+  def cachedResult(q: graft.planner.CubeQuery)(
+      compute: => (Seq[org.apache.spark.sql.Row], Seq[String]))
+      : (Seq[org.apache.spark.sql.Row], Seq[String]) =
+    cached(CubeCatalog.ResultKey.Query(q))(compute)
+
+  /** (rows, columns) for `key`, computed once per catalog generation.
     * `compute` runs OUTSIDE the lock (a slow plan must not serialize the
     * request pool; two racing first callers both compute, one result wins —
     * plans are deterministic so both are identical). */
-  def cachedResult(q: graft.planner.CubeQuery)(
+  def cached(key: CubeCatalog.ResultKey)(
       compute: => (Seq[org.apache.spark.sql.Row], Seq[String]))
       : (Seq[org.apache.spark.sql.Row], Seq[String]) = {
     if (resultCacheMax <= 0) return compute
-    val hit = resultCache.synchronized(resultCache.get(q))
+    val hit = resultCache.synchronized(resultCache.get(key))
     if (hit != null) hit
     else {
       val computed = compute
       resultCache.synchronized {
-        val raced = resultCache.get(q)
+        val raced = resultCache.get(key)
         if (raced != null) raced
-        else { resultCache.put(q, computed); computed }
+        else { resultCache.put(key, computed); computed }
       }
     }
   }
@@ -311,6 +318,15 @@ final class CubeCatalog(
 }
 
 object CubeCatalog {
+  /** Identity of one result-cache entry: a normalized query, or one page
+    * of an unrestricted level-member listing. */
+  sealed trait ResultKey
+  object ResultKey {
+    final case class Query(q: graft.planner.CubeQuery) extends ResultKey
+    final case class Listing(cube: String, level: String, withProps: Boolean,
+        offset: Long, limit: Option[Int]) extends ResultKey
+  }
+
   // One catalog per (session, data dir, variant) — dims stay registered
   // across queries, the analog of the reference's schema/member cache
   // (api_helpers.rb:10-16).

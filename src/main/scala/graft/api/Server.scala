@@ -37,7 +37,7 @@ final class Server(spark: SparkSession, sfDir: String, port: Int,
     flushSecret: Option[String] = sys.env.get("GRAFT_SECRET"),
     catalogXml: Option[String] = None) {
 
-  private val http = HttpServer.create(new InetSocketAddress(port), 0)
+  private val http = Server.create(port)
 
   // Catalog-XML deployment contract (ref spec_helper.rb:45 `catalog:` /
   // mondrian_rest.rb:7-12 — mondrian-rest boots by pointing the server at
@@ -314,7 +314,7 @@ final class Server(spark: SparkSession, sfDir: String, port: Int,
       else ListMap[String, Any]("members" -> members,
         "offset" -> offset,
         "total_members" ->
-          Metadata.levelMembersDf(cat, cb, ref, withProps, rf).count())
+          Metadata.levelMemberCount(cat, cb, ref, withProps, rf))
     text(200, "application/json", Json.write(doc))
   }
 
@@ -506,6 +506,18 @@ final class Server(spark: SparkSession, sfDir: String, port: Int,
     os.write(body)
     os.close()
   }
+}
+
+object Server {
+  // The JDK server leaves Nagle's algorithm on: sendResponseHeaders flushes
+  // the headers as their own segment, and the body then waits for the
+  // client's delayed ACK (>= 40 ms on Linux) on EVERY reply. The JDK reads
+  // this property once, when its server config class initializes, so it is
+  // set before the first create; an explicit -D value still wins.
+  sys.props.getOrElseUpdate("sun.net.httpserver.nodelay", "true")
+
+  private def create(port: Int): HttpServer =
+    HttpServer.create(new InetSocketAddress(port), 0)
 }
 
 /** `runMain graft.api.ServerMain [--catalog schema.xml] [sfDir] [port]` —

@@ -674,7 +674,8 @@ object Dedup {
   }
 
   /** ONE broadcast gate for the hot-df posting tail (shared by
-    * [[containmentPairsAuto]] and [[ngramJaccardAuto]]): broadcast only
+    * [[containmentPairsAuto]] and [[ngramJaccardAuto]], and by the
+    * planner's dense-fill and time-window joins): broadcast only
     * when the frame fits the session's own broadcast budget
     * (`spark.sql.autoBroadcastJoinThreshold` — the same knob that sizes
     * every other broadcast in the plan, so executors provisioned for the
@@ -692,9 +693,15 @@ object Dedup {
       rowBytes: Long = 48L, knownCount: Long = -1L): DataFrame = {
     val conf = df.sparkSession.conf
       .get("spark.sql.autoBroadcastJoinThreshold", "10MB")
-    val budget = // JavaUtils parses every spelling the conf accepts
-      try org.apache.spark.network.util.JavaUtils.byteStringAsBytes(conf.trim)
-      catch { case _: NumberFormatException => 10L << 20 }
+    // JavaUtils parses every unsigned spelling the conf accepts; the sign
+    // is split off first, as Spark's own conf parser does, so −1 disables
+    val s = conf.trim
+    val budget =
+      try {
+        if (s.startsWith("-"))
+          -org.apache.spark.network.util.JavaUtils.byteStringAsBytes(s.drop(1))
+        else org.apache.spark.network.util.JavaUtils.byteStringAsBytes(s)
+      } catch { case _: NumberFormatException => 10L << 20 }
     val n = if (knownCount >= 0) knownCount else df.count()
     if (budget > 0 && n * rowBytes <= budget) broadcast(df) else df
   }

@@ -48,15 +48,14 @@ object Ranking {
     * holds the smallest values), so the bucket id doubles as the bucket's
     * sort key.
     *
-    * The INPUT persists LAZILY: `repartitionByRange` executes its child
-    * twice (the RangePartitioner's sample sketch, then the real shuffle),
-    * but those two passes are SERIAL — the sample job materializes the
-    * cache, the shuffle map stage reads blocks — so a lazy persist gives
-    * compute-once without the eager materialization job the r16 shape
-    * paid. Skipped entirely when the input is just narrow ops over an
+    * The INPUT is localCheckpoint'ed EAGERLY (one job):
+    * `repartitionByRange` executes its child twice (the RangePartitioner's
+    * sample sketch, then the real shuffle), and both passes then read the
+    * checkpoint's blocks instead of recomputing the input. Skipped
+    * entirely when the input is just narrow ops over an
     * already-materialized scan (see the inline note).
     *
-    * The BUCKETED frame stays an EAGER localCheckpoint, for two reasons.
+    * The BUCKETED frame is an EAGER localCheckpoint too, for two reasons.
     * Compute-once here is CORRECTNESS, not tuning: it feeds BOTH the
     * offset aggregate and the rank join, and with two separate exchanges
     * the sampled partitioner would be re-derived per exchange and could
@@ -66,8 +65,7 @@ object Ranking {
     * the main stage windows the same frame), so a lazy persist lets both
     * race to compute the reduce side from shuffle files — measured ~1.3×
     * warm regression on the prefix-sum family at sf0.1 (r17) before this
-    * was made eager again. One eager job per rank call instead of the r16
-    * shape's two. Blocks are GC-released with the result (Dedup
+    * was made eager again. Blocks are GC-released with the result (Dedup
     * convention).
     *
     * AQE-safety of `spark_partition_id()` here does NOT rest on
@@ -83,7 +81,7 @@ object Ranking {
     * path with AQE + coalescing forced on and a 1-byte advisory size. */
   private[graft] def withRangeBuckets(df: DataFrame, n: Int,
       keys: Seq[Column]): DataFrame = {
-    // Skip the input persist when the frame is just narrow ops over an
+    // Skip the input checkpoint when the frame is just narrow ops over an
     // already-materialized scan (a checkpoint's LogicalRDD): the sample
     // pass re-reads those blocks anyway, and a
     // second stored copy of a trivially-recomputable projection is pure

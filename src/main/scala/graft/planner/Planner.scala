@@ -564,14 +564,14 @@ object Planner {
               LevelRef(rl.dim.name, Some(rl.level.name),
                 Some(rl.hier.name)), withProps = false).count()
           }
-        val boundedByDims = timeDomains.forall { td =>
+        def boundOf(td: TimeDomain): BigInt = {
           val unitAliases = td.unit.flatMap(levelAliases)
-          val bound = groupLevels
+          groupLevels
             .filter(rl => !unitAliases.contains(rl.level.alias))
             .map(rl => BigInt(memberCountOf(rl))).product *
             td.unit.map(rl => BigInt(memberCountOf(rl))).product
-          bound <= maxCells
         }
+        val boundedByDims = timeDomains.forall(boundOf(_) <= maxCells)
         val base = aggDf.withColumn("__present", lit(1))
         timeDomains.foldLeft(
             if (boundedByDims) base
@@ -580,10 +580,12 @@ object Planner {
           val otherAliases = groupAliases.filterNot(unitAliases.contains)
           val dom = broadcast(if (td.hasCuts) td.dom
             else td.dom.drop(td.cutFlag))
-          val full =
-            if (otherAliases.isEmpty) dom
+          // (expansion, the cell count its guard computed)
+          val (full, cells) =
+            if (otherAliases.isEmpty) (dom, boundOf(td))
             else if (boundedByDims)
-              df.select(otherAliases.map(col): _*).distinct().crossJoin(dom)
+              (df.select(otherAliases.map(col): _*).distinct().crossJoin(dom),
+                boundOf(td))
             else {
               val others = df.select(otherAliases.map(col): _*).distinct()
                 .localCheckpoint()
@@ -594,13 +596,13 @@ object Planner {
                     s"(axis × calendar; limit $maxCells; raise " +
                     "spark.graft.dense.maxCells or cut the time range / " +
                     "drop the lag measure)")
-              others.crossJoin(dom)
+              (others.crossJoin(dom), cells)
             }
-          // the agg side is ≤ the (guard-checked) cell bound — broadcast it
-          // so the expansion is a BroadcastHashJoin, not an exchange + sort
-          // of both sides (same rationale as the densify fill join)
-          full.join(
-            if (maxCells <= 4000000L) broadcast(df) else df,
+          // the agg side is ≤ the cell count — broadcast it when that fits
+          // the session's broadcast budget, so the expansion is a
+          // BroadcastHashJoin, not an exchange + sort of both sides (same
+          // rationale as the densify fill join)
+          full.join(broadcastIfSmall(df, cells),
             unitAliases ++ otherAliases, "left")
         }
       }
@@ -1971,11 +1973,21 @@ object Planner {
     // row count is ≤ cells — which just passed the guard. Broadcasting it
     // turns the dense fill into a BroadcastHashJoin: no exchange + sort of
     // the member cross product (the SMJ shape Catalyst picks otherwise,
-    // because agg-output size estimates are conservative). Deployments that
-    // raise maxCells past broadcast sanity keep the sort-merge shape.
-    domain.join(
-      if (cells <= 4000000L) broadcast(aggSide) else aggSide,
-      joinCols, "left")
+    // because agg-output size estimates are conservative). A fill whose
+    // cells outgrow the session's broadcast budget keeps the sort-merge
+    // shape.
+    domain.join(broadcastIfSmall(aggSide, cells), joinCols, "left")
+  }
+
+  /** `df` hinted for broadcast when `rows` of it fit the session's
+    * `spark.sql.autoBroadcastJoinThreshold` (threshold −1: never), at
+    * Catalyst's per-row size estimate for its schema. `rows` is a count
+    * the caller already holds, so the gate runs no job. */
+  private def broadcastIfSmall(df: DataFrame, rows: BigInt): DataFrame = {
+    val rowBytes = 8L + df.schema.fields.map(_.dataType.defaultSize.toLong).sum
+    if ((rows * rowBytes).isValidLong)
+      graft.ops.Dedup.sizeGatedBroadcast(df, rowBytes, knownCount = rows.toLong)
+    else df
   }
 
   private def comparison(c: Column, op: String, v: Double): Column = op match {

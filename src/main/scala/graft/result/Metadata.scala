@@ -109,8 +109,7 @@ object Metadata {
       // SOURCE, so paging/ordering see only visible members
       case Some(f) => levelMembersDfUncached(cat, cube, rl, withProps,
         Some(f))
-      case None => cat.cachedMemberFrame((cube.name,
-        s"${rl.dim.name}.${rl.hier.name}.${rl.level.name}", withProps)) {
+      case None => cat.cachedMemberFrame((cube.name, levelId(rl), withProps)) {
         levelMembersDfUncached(cat, cube, rl, withProps)
       }
     }
@@ -147,21 +146,31 @@ object Metadata {
       .distinct().orderBy(col("__ord"), col("key")).drop("__ord")
   }
 
+  /** One page of a level's members. An unrestricted page is collected once
+    * per catalog generation into the result cache, so a repeated listing
+    * runs no Spark job; a role-filtered one never reads or fills that
+    * shared, role-blind entry. */
   def levelMembers(cat: CubeCatalog, cube: CubeDef, ref: LevelRef,
       withProps: Boolean = false, offset: Long = 0,
       limit: Option[Int] = None,
       roleFilter: Option[org.apache.spark.sql.Column] = None)
       : Seq[ListMap[String, Any]] = {
     val rl = Planner.resolve(cube, ref)
-    val df0 = levelMembersDf(cat, cube, ref, withProps, roleFilter)
-    // paging applies AFTER the total order, inside the plan: a big-dim level
-    // list at 100× must never collect() whole just to serve one page
     if (offset > Int.MaxValue || offset < 0)
       GraftException.badRequest(s"offset $offset out of range")
-    val df = limit.foldLeft(
-      if (offset > 0) df0.offset(offset.toInt) else df0)((d, k) => d.limit(k))
-    val names = df.columns
-    df.collect().toSeq.map { r =>
+    def collectPage() = {
+      val df0 = levelMembersDf(cat, cube, ref, withProps, roleFilter)
+      // paging applies AFTER the total order, inside the plan: a big-dim
+      // level list at 100× must never collect() whole just to serve one page
+      val df = limit.foldLeft(
+        if (offset > 0) df0.offset(offset.toInt) else df0)((d, k) => d.limit(k))
+      (df.collect().toSeq, df.columns.toSeq)
+    }
+    val (rows, names) =
+      if (roleFilter.isDefined) collectPage()
+      else cat.cached(CubeCatalog.ResultKey.Listing(cube.name,
+        levelId(rl), withProps, offset, limit))(collectPage())
+    rows.map { r =>
       val base = ListMap[String, Any](
         "name" -> String.valueOf(r.get(1)),
         "full_name" -> s"[${rl.dim.name}].[${r.get(0)}]",
@@ -173,10 +182,26 @@ object Metadata {
         base + ("properties" -> ListMap(
           names.drop(2).zipWithIndex.map { case (n, i) =>
             n -> r.get(i + 2)
-          }.toSeq: _*))
+          }: _*))
       else base
     }
   }
+
+  /** Row count of a level's full listing (a paged response's
+    * `total_members`). The unrestricted count is memoized on the catalog —
+    * the same entry COUNT(Members) uses for the property-less listing. */
+  def levelMemberCount(cat: CubeCatalog, cube: CubeDef, ref: LevelRef,
+      withProps: Boolean,
+      roleFilter: Option[org.apache.spark.sql.Column]): Long = {
+    def count() = levelMembersDf(cat, cube, ref, withProps, roleFilter).count()
+    if (roleFilter.isDefined) count()
+    else cat.cachedMemberCount((cube.name,
+      levelId(Planner.resolve(cube, ref)) + (if (withProps) ".__props" else ""),
+      ""))(count())
+  }
+
+  private def levelId(rl: Planner.ResolvedLevel): String =
+    s"${rl.dim.name}.${rl.hier.name}.${rl.level.name}"
 
   /** Member lookup by key (ref api.rb:207-230 — there a linear scan; here a
     * filter on a CACHED per-level detail frame) + ancestor chain from the

@@ -5,7 +5,7 @@ import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import org.scalatest.funsuite.AnyFunSuite
 import graft.api.Server
 import graft.result.Json
-import SparkTestSession.spark
+import SparkTestSession.{jobsDuring, spark}
 
 /** End-to-end HTTP tests against the live server (the analog of the
   * reference's Rack::Test api_spec). */
@@ -521,6 +521,55 @@ class ApiSpec extends AnyFunSuite {
     assert(members(l3).map(_("key")) == all.take(3).map(_("key")))
     val (_, tail) = get(s"$path?offset=${all.length - 2}")
     assert(members(tail).map(_("key")) == all.takeRight(2).map(_("key")))
+  }
+
+  test("the server turns TCP_NODELAY on for its replies") {
+    assert(server.boundPort > 0)
+    assert(sys.props.get("sun.net.httpserver.nodelay").contains("true"))
+  }
+
+  test("a cached aggregate answers a keep-alive client below the 40 ms " +
+      "delayed-ACK floor") {
+    // one HTTP/1.1 connection, reused: with Nagle on, every reply's body
+    // segment waits for the client's delayed ACK (>= 40 ms)
+    val keepAlive = HttpClient.newBuilder()
+      .version(HttpClient.Version.HTTP_1_1).build()
+    val req = HttpRequest.newBuilder(URI.create(base +
+      "/cubes/sales/aggregate?drilldown%5B%5D=Geography.Region" +
+      "&measures%5B%5D=revenue")).build()
+    def send(): Int =
+      keepAlive.send(req, HttpResponse.BodyHandlers.ofString()).statusCode()
+    assert(send() == 200) // fills the result cache
+    val ms = (1 to 20).map { _ =>
+      val t0 = System.nanoTime()
+      assert(send() == 200)
+      (System.nanoTime() - t0) / 1e6
+    }.sorted
+    assert(ms(ms.size / 2) < 25.0, s"keep-alive repeat ms: $ms")
+  }
+
+  private val listings = Seq(
+    "/cubes/sales/dimensions/Geography/levels/Supplier/members",
+    "/cubes/sales/dimensions/Geography/levels/Supplier/members?caption=1",
+    "/cubes/sales/dimensions/Part/levels/Part/members?offset=5&limit=10",
+    "/cubes/sales/dimensions/Part/levels/Part/members?offset=5&limit=10" +
+      "&member_properties%5B%5D=Size")
+
+  test("a repeated level-member listing, paged or not, runs no Spark job") {
+    val first = listings.map(get)
+    assert(first.forall(_._1 == 200), first)
+    val (again, jobs) = jobsDuring((1 to 3).flatMap(_ => listings.map(get)))
+    assert(jobs == 0, s"$jobs Spark jobs on repeated listings")
+    assert(again == Seq.fill(3)(first).flatten)
+  }
+
+  test("/flush makes the next member listing recompute") {
+    val before = listings.map(get)
+    assert(jobsDuring(listings.foreach(get))._2 == 0)
+    assert(get("/flush?secret=s3cret")._1 == 200)
+    val (after, jobs) = jobsDuring(listings.map(get))
+    assert(jobs > 0, "a flushed listing must be collected again")
+    assert(after == before)
   }
 
   test("sparse default flips via the graft.sparseDefault system property " +

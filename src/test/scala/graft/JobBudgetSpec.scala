@@ -1,0 +1,26 @@
+package graft
+
+import org.scalatest.funsuite.AnyFunSuite
+import SparkTestSession.spark
+
+/** Job budgets for the cube fast tail: on the fast tail per-action
+  * scheduling, not compute, dominates, so a change that adds driver jobs
+  * to these queries is a regression even when every result stays right.
+  * Each query runs once to warm the catalog's memoization, then once
+  * counted, written in full through the `noop` sink. */
+class JobBudgetSpec extends AnyFunSuite {
+
+  private val budgets = Seq(
+    "q11_dense_axes" -> 6,
+    "q55_dense_lag" -> 9,
+    "q75_mdx_topcount_tuples" -> 8)
+
+  for ((q, budget) <- budgets) test(s"$q runs at most $budget Spark jobs") {
+    val fn = SparkEntry.queries(q)
+    def run(): Unit = fn(spark, SparkTestSession.sf)
+      .write.format("noop").mode("overwrite").save()
+    run()
+    val (_, jobs) = SparkTestSession.jobsDuring(run())
+    assert(jobs <= budget, s"$q ran $jobs jobs (budget $budget)")
+  }
+}

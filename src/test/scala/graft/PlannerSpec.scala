@@ -21,6 +21,34 @@ class PlannerSpec extends AnyFunSuite {
     assert(row.getLong(3) == 1473L)
   }
 
+  test("dense-fill and time-window joins broadcast by estimated bytes " +
+      "against the session's broadcast threshold") {
+    // events' dimensions are all degenerate, so the fill / expansion join
+    // is the plan's only hash join
+    val denseFill = CubeQuery("events",
+      Seq(drill("EventDate", "Day", "Daily"), drill("EventType")),
+      Seq("value_sum", "event_count"), nonempty = false)
+    val timeWindow = CubeQuery("events",
+      Seq(drill("User"), drill("EventDate", "Day", "Daily")),
+      Seq("value_sum", "prev_day_value"))
+    def executedPlan(q: CubeQuery): String = {
+      val df = Planner.plan(cat, q)
+      df.collect()
+      df.queryExecution.executedPlan.toString
+    }
+    for (q <- Seq(denseFill, timeWindow)) {
+      val kept = executedPlan(q)
+      assert(kept.contains("BroadcastHashJoin"), kept)
+      val key = "spark.sql.autoBroadcastJoinThreshold"
+      val threshold = spark.conf.getOption(key)
+      spark.conf.set(key, "-1")
+      try {
+        val off = executedPlan(q)
+        assert(!off.contains("BroadcastHashJoin"), off)
+      } finally threshold.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    }
+  }
+
   test("drilldown output columns: key, label, measures in order (A2)") {
     val df = Planner.plan(cat, CubeQuery("sales",
       Seq(drill("Geography", "Region"), drill("Part", "Brand", "Brands")),

@@ -512,6 +512,40 @@ class RoleSpec extends AnyFunSuite {
     assert(lvls == Seq("Region", "Nation"))
   }
 
+  test("role-filtered member listings each get their own list, whichever " +
+      "role asks first, and never touch the shared listing memo") {
+    val ref = LevelRef("Geography", Some("Nation"))
+    def listing(c: CubeCatalog, role: Option[String]): Set[Int] = {
+      val cube = c.cube("orders")
+      val rf = Roles.resolve(c.schema, role).flatMap(
+        Roles.memberFilter(_, cube, Planner.resolve(cube, ref)))
+      graft.result.Metadata.levelMembers(c, cube, ref, roleFilter = rf)
+        .map(_("key").toString.toDouble.toInt).toSet
+    }
+    val nations = cat.table("nation").collect()
+      .map(r => r.getAs[Int]("n_nationkey") -> r.getAs[Int]("n_regionkey"))
+    val emea = nations.collect { case (n, r) if r == 0 || r == 3 => n }.toSet
+    val expected = Map[Option[String], Set[Int]](
+      None -> nations.map(_._1).toSet,
+      Some("emea") -> emea,
+      Some("emea_minus_one") -> (emea - 3))
+    assert(expected.values.toSet.size == 3) // three distinct lists
+    val roles = Seq(None, Some("emea"), Some("emea_minus_one"))
+    for (order <- Seq(roles, roles.reverse)) {
+      val c = TpchCatalog.build(spark, SparkTestSession.sf)
+      try {
+        order.foreach(r => assert(listing(c, r) == expected(r), s"$r in $order"))
+        // the unrestricted repeat answers from the memo; a role's repeat is
+        // collected again, so it never reads the memo
+        for ((r, collects) <- Seq(None -> false, Some("emea") -> true)) {
+          val (got, jobs) = SparkTestSession.jobsDuring(listing(c, r))
+          assert(got == expected(r))
+          assert((jobs > 0) == collects, s"$r repeat ran $jobs jobs")
+        }
+      } finally c.close()
+    }
+  }
+
   test("TopCount under a role ranks only VISIBLE members (an invisible " +
       "member must not consume a top-k slot)") {
     val nation = LevelRef("Geography", Some("Nation"))

@@ -15,4 +15,20 @@ object SparkTestSession {
   }
   val sf: String = "/root/testdata/sf0.001"
   lazy val catalog: CubeCatalog = CubeCatalog.forDir(spark, sf)
+
+  /** `body`'s result and the Spark jobs started while it ran, counted by
+    * [[graft.tools.Probe.Listener]] with the listener bus drained on both
+    * sides. */
+  def jobsDuring[T](body: => T): (T, Int) = {
+    val listener = new graft.tools.Probe.Listener
+    def drain(): Unit = org.apache.spark.sql.graftshim.SparkShim
+      .drainListenerBus(spark, 10000)
+    drain()
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val result = body
+      drain()
+      (result, listener.snapshot.jobs.size)
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
 }
