@@ -98,9 +98,12 @@ object Analytics {
       .withColumn("bid", row_number().over(
         org.apache.spark.sql.expressions.Window.orderBy(col("brand"))))
       .localCheckpoint() // |brands| rows; feeds the part projection + marg
+    // left join: a part with a null brand gets a null bid, which
+    // collect_set drops, so its order still counts as a basket (n_orders
+    // counts every order with a known part, as the oracle's ob does)
     val baskets = lineitem
       .join(broadcast(part.select(col("p_partkey"), col("p_brand"))
-          .join(dict, col("p_brand") === col("brand"))
+          .join(dict, col("p_brand") === col("brand"), "left")
           .select(col("p_partkey"), col("bid"))),
         col("l_partkey") === col("p_partkey"))
       .select(col("l_orderkey").as("okey"), col("bid"))

@@ -1,8 +1,11 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
+import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.types.{DoubleType, IntegerType, StructField,
+  StructType}
 
 /** Approximate-nearest-neighbor search over an embedding column.
   *
@@ -75,16 +78,17 @@ object Similarity {
     * pipeline runs after ANN: from each query's `shortlist` nearest
     * neighbors, greedily pick `k` results maximizing
     * `λ·rel − (1−λ)·max_{s∈S} sim(cand, s)` — relevance traded against
-    * redundancy with the already-picked set. Round 0 is pure relevance
+    * redundancy with the already-picked set. Round 1 is pure relevance
     * (empty S ⇒ zero penalty).
     *
     * Shape: the corpus-sized work is the one brute shortlist scan (swap in
-    * [[knnIvfProbe]]/[[knnLshMulti]] at scale); the k−1 greedy rounds touch
-    * only (queries × shortlist)-sized frames — an anti-join against the
-    * picked set, a penalty join computing max-sim to S, and a GroupedTopK
-    * k=1 argmax with a neighbor_id tiebreak. Lineage is checkpointed per
-    * round. λ = 0.75 keeps both λ and 1−λ binary-exact, so the whole
-    * procedure replays bit-for-bit as unrolled SQL. */
+    * [[knnIvfProbe]]/[[knnLshMulti]] at scale); one `groupBy` then hands
+    * each query its whole shortlist as an array, and all k greedy rounds
+    * run inside one task over that array ([[mmrPicks]]). The per-query
+    * state is bounded by `shortlist × dim` whatever the corpus size, so a
+    * Spark job per round would buy nothing but scheduling. λ = 0.75 keeps
+    * both λ and 1−λ binary-exact, so the whole procedure replays
+    * bit-for-bit as unrolled SQL. */
   def mmrRerank(emb: DataFrame, queryIds: Seq[Long], k: Int = 5,
       shortlist: Int = 20, lambda: Double = 0.75): DataFrame = {
     require(k >= 1 && shortlist >= k, "need shortlist >= k >= 1")
@@ -99,34 +103,57 @@ object Similarity {
         Seq(col("query_id")), Seq(col("rel").desc, col("neighbor_id").asc),
         shortlist)
       .select("query_id", "neighbor_id", "rel", "v_n")
-      .localCheckpoint() // every round reads it
-    var selected = graft.plans.GroupedTopK.topK(short,
-        Seq(col("query_id")), Seq(col("rel").desc, col("neighbor_id").asc), 1)
-      .withColumn("pick_rank", lit(1))
-      .withColumn("score", lit(lambda) * col("rel") -
-        lit(1.0 - lambda) * lit(0.0))
-      .select("query_id", "pick_rank", "neighbor_id", "rel", "score", "v_n")
-    for (r <- 2 to k) {
-      val sel = selected.select(col("query_id"),
-        col("neighbor_id").as("sel_id"), col("v_n").as("v_s"))
-      val cand = short.join(
-        sel.select(col("query_id"), col("sel_id").as("neighbor_id")),
-        Seq("query_id", "neighbor_id"), "left_anti")
-      val pen = cand.join(sel, Seq("query_id"))
-        .withColumn("s", dot(col("v_n"), col("v_s")))
-        .groupBy("query_id", "neighbor_id")
-        .agg(max(col("s")).as("max_sim"))
-      val pick = graft.plans.GroupedTopK.topK(
-          cand.join(pen, Seq("query_id", "neighbor_id"))
-            .withColumn("score", lit(lambda) * col("rel") -
-              lit(1.0 - lambda) * col("max_sim")),
-          Seq(col("query_id")),
-          Seq(col("score").desc, col("neighbor_id").asc), 1)
-        .withColumn("pick_rank", lit(r))
-        .select("query_id", "pick_rank", "neighbor_id", "rel", "score", "v_n")
-      selected = selected.unionByName(pick).localCheckpoint()
+    val f = short.schema.fields
+    val out = StructType(Seq(f(0), StructField("pick_rank", IntegerType,
+      nullable = false), f(1), f(2),
+      StructField("score", DoubleType, nullable = f(2).nullable || k > 1)))
+    short.groupBy("query_id")
+      .agg(collect_list(struct("neighbor_id", "rel", "v_n")).as("cands"))
+      .flatMap(r => mmrPicks(r.getLong(0), r.getSeq[Row](1), k, lambda))(
+        Encoders.row(out))
+      .orderBy("query_id", "pick_rank")
+  }
+
+  /** One query's k greedy MMR rounds over its shortlist `rows`
+    * (neighbor_id, rel, v_n), with the arithmetic and the orders of the
+    * join-per-round SQL form the oracle unrolls:
+    *  - round 1 takes (rel desc, neighbor_id asc), score `λ·rel − (1−λ)·0.0`;
+    *  - round r takes (score desc, neighbor_id asc) over the candidates not
+    *    yet picked, score `λ·rel − (1−λ)·max_sim`, max_sim the MAX of the
+    *    [[dot]] fold against every pick.
+    * Doubles compare as Spark compares them (NaN largest, −0.0 == 0.0). A
+    * shortlist shorter than k yields one pick per candidate. */
+  private def mmrPicks(qid: Long, rows: Seq[Row], k: Int,
+      lambda: Double): Seq[Row] = {
+    // DotProduct's fold: left to right over the shorter length
+    def dotV(a: Seq[Double], b: Seq[Double]): Double =
+      a.iterator.zip(b).foldLeft(0.0) { case (s, (x, y)) => s + x * y }
+    def cmp(a: Double, b: Double): Int = SQLOrderingUtil.compareDoubles(a, b)
+    var pool = rows.map(r => (r.getLong(0), r.getDouble(1),
+      r.getSeq[Double](2)))
+    val picks = scala.collection.mutable.ArrayBuffer
+      .empty[(Long, Double, Seq[Double], Double)] // (id, rel, v, score)
+    while (picks.size < k && pool.nonEmpty) {
+      // (candidate, sort key, score): round 1 sorts on rel itself
+      val scored = pool.map { case c @ (_, rel, v) =>
+        if (picks.isEmpty) (c, rel, lambda * rel - (1.0 - lambda) * 0.0)
+        else {
+          val maxSim = picks.iterator.map(p => dotV(v, p._3))
+            .reduceLeft((m, d) => if (cmp(d, m) > 0) d else m)
+          val score = lambda * rel - (1.0 - lambda) * maxSim
+          (c, score, score)
+        }
+      }
+      val ((id, rel, v), _, score) = scored.reduceLeft { (a, b) =>
+        val o = cmp(a._2, b._2)
+        if (o > 0 || (o == 0 && a._1._1 <= b._1._1)) a else b
+      }
+      picks += ((id, rel, v, score))
+      pool = pool.filter(_._1 != id)
     }
-    selected.drop("v_n").orderBy("query_id", "pick_rank")
+    picks.toSeq.zipWithIndex.map { case ((id, rel, _, score), i) =>
+      Row(qid, i + 1, id, rel, score)
+    }
   }
 
   /** FILTERED vector search — exact top-k under a metadata predicate, the

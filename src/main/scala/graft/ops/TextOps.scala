@@ -1,8 +1,10 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.types.{Decimal, DoubleType, StructField,
+  StructType}
 
 /** Text-analysis operators for large-scale training-data pipelines (north-star
   * extensions beyond the reference's surface; BASELINE.json). All operators
@@ -1237,11 +1239,15 @@ object TextOps {
     * oracle takes the VARCHAR hop), and the damping step
     * 0.15/N + 0.85·s is one fixed-shape double expression.
     *
-    * Scale shape: nodes/edges/degrees are VOCABULARY-sized (built by one
-    * corpus pass + hash aggs); each round is two vocab-sized hash joins and
-    * one hash agg — PageRank's native distributed form. Nothing
-    * corpus-sized after the first pass, nothing on the driver but the node
-    * count. */
+    * Scale shape: nodes and edges are VOCABULARY-sized (distinct tokens,
+    * distinct adjacent-token pairs), built by one corpus pass + hash aggs.
+    * The graph is then collected and all rounds run on the driver with
+    * Spark's own [[Decimal]], so every step equals Spark's operators:
+    * `Decimal(pr / deg)` + `changePrecision(38, 18)` is the HALF_UP cast,
+    * Decimal `+` is the exact DECIMAL(38,18) sum, `toDouble` the cast
+    * back. Run as joins, each round would be a Spark job per join over a
+    * graph this small: pure scheduling. The final rounding, order and
+    * limit stay Spark expressions over the local result. */
   def textrankKeywords(docs: DataFrame, iters: Int = 3,
       k: Int = 20): DataFrame = {
     val bi = docs.select(tokens("text").as("w"))
@@ -1252,37 +1258,37 @@ object TextOps {
       .where(col("x") =!= col("y")) // self-loops contribute nothing
     val edges = bi.select(col("x").as("src"), col("y").as("dst"))
       .unionByName(bi.select(col("y").as("src"), col("x").as("dst")))
-      .distinct().localCheckpoint()
+      .distinct()
     val nodes = docs.select(explode(tokens("text")).as("tok")).distinct()
-      .localCheckpoint()
-    val n = nodes.count() // vocab count — the one driver-side scalar
-    val deg = edges.groupBy("src").agg(count(lit(1)).as("deg"))
-      .localCheckpoint() // loop-invariant; built once, read every round
-    var pr = nodes.withColumn("pr", lit(1.0 / n))
+    val toks = nodes.collect().map(_.getString(0))
+    val n = toks.length
+    val id = toks.zipWithIndex.toMap
+    val es = edges.collect().map(r => (id(r.getString(0)), id(r.getString(1))))
+    val deg = new Array[Int](n)
+    es.foreach { case (s, _) => deg(s) += 1 }
+    var pr = Array.fill(n)(1.0 / n)
     for (_ <- 1 to iters) {
-      // pre-divide on the VOCAB-sized frame so the edge stream is probed
-      // by ONE join per round, not two (pr and deg are both keyed by the
-      // token; joining them first is a tiny join, while each extra join
-      // against `edges` costs a pass over the full edge stream)
-      val prOverDeg = pr.withColumnRenamed("tok", "src")
-        .join(deg, "src")
-        .select(col("src"),
-          (col("pr") / col("deg")).cast("decimal(38,18)").as("c"))
-      val contrib = edges
-        .join(prOverDeg, "src")
-        .select(col("dst").as("tok"), col("c"))
-        .groupBy("tok").agg(sum(col("c")).as("s"))
-      pr = nodes.join(contrib, Seq("tok"), "left")
-        .withColumn("pr", lit(0.15 / n) + lit(0.85) *
-          coalesce(col("s"), lit(0).cast("decimal(38,18)")).cast("double"))
-        .select("tok", "pr")
-        .localCheckpoint()
+      val c = Array.tabulate(n) { i =>
+        if (deg(i) == 0) null
+        else { val d = Decimal(pr(i) / deg(i)); d.changePrecision(38, 18); d }
+      }
+      val s = new Array[Decimal](n)
+      es.foreach { case (src, dst) =>
+        s(dst) = if (s(dst) == null) c(src) else s(dst) + c(src)
+      }
+      pr = Array.tabulate(n)(i =>
+        0.15 / n + 0.85 * (if (s(i) == null) 0.0 else s(i).toDouble))
     }
+    val schema = StructType(Seq(nodes.schema("tok"),
+      StructField("pr", DoubleType, nullable = false)))
     // final scores round to 12 decimals (the t14 recipe): the per-round
     // decimal quantization can round differently at the 18th fractional
     // digit across engines, so the last few ulps of pr are not contractual;
     // 1e-12 is ~5 orders above that noise and far below any rank gap
-    pr.select(col("tok"), round(col("pr"), 12).as("pr"))
+    docs.sparkSession.createDataFrame(
+        java.util.Arrays.asList(toks.indices.map(i => Row(toks(i), pr(i))): _*),
+        schema)
+      .select(col("tok"), round(col("pr"), 12).as("pr"))
       .orderBy(col("pr").desc, col("tok").asc).limit(k)
   }
 

@@ -3,9 +3,11 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import SparkTestSession.spark
 
-/** Job budgets for the cube fast tail: on the fast tail per-action
-  * scheduling, not compute, dominates, so a change that adds driver jobs
-  * to these queries is a regression even when every result stays right.
+/** Job budgets for the cube fast tail and for the pipeline ops that
+  * iterate over a small state (MMR's shortlists, TextRank's vocabulary
+  * graph): there per-action scheduling, not compute, dominates, so a
+  * change that adds Spark jobs to these queries is a regression even
+  * when every result stays right.
   * Each query runs once to warm the catalog's memoization, then once
   * counted, written in full through the `noop` sink. */
 class JobBudgetSpec extends AnyFunSuite {
@@ -13,7 +15,9 @@ class JobBudgetSpec extends AnyFunSuite {
   private val budgets = Seq(
     "q11_dense_axes" -> 6,
     "q55_dense_lag" -> 9,
-    "q75_mdx_topcount_tuples" -> 8)
+    "q75_mdx_topcount_tuples" -> 8,
+    "s10_mmr_rerank" -> 5,
+    "t23_textrank" -> 5)
 
   for ((q, budget) <- budgets) test(s"$q runs at most $budget Spark jobs") {
     val fn = SparkEntry.queries(q)

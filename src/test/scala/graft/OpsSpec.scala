@@ -785,6 +785,27 @@ class OpsSpec extends AnyFunSuite {
     assert(lift == 2.0)
   }
 
+  test("copurchase lift counts an order whose parts all have a null brand " +
+      "in n_orders, as the q53 oracle does") {
+    import spark.implicits._
+    // X,Y co-occur in orders 1-6, Z alone in 7-12, and order 13 holds only
+    // part 4, whose brand is null: 13 orders, lift = 6·13 / (6·6)
+    val li = ((1 to 6).flatMap(o => Seq((o.toLong, 1L), (o.toLong, 2L))) ++
+      (7 to 12).map(o => (o.toLong, 3L)) :+ ((13L, 4L)))
+      .toDF("l_orderkey", "l_partkey")
+    val part = Seq((1L, "X"), (2L, "Y"), (3L, "Z"), (4L, null))
+      .toDF("p_partkey", "p_brand")
+    def tuples(df: org.apache.spark.sql.DataFrame) = df.collect()
+      .map(r => (r.getString(0), r.getString(1), r.getLong(2), r.getDouble(3)))
+      .toSeq
+    val out = tuples(Analytics.copurchaseLift(li, part))
+    assert(out == Seq(("X", "Y", 6L, 6.0 * 13 / 36)))
+    li.createOrReplaceTempView("lineitem")
+    part.createOrReplaceTempView("part")
+    try assert(out == tuples(spark.sql(SparkEntry.oracleSql("q53_copurchase"))))
+    finally Seq("lineitem", "part").foreach(spark.catalog.dropTempView)
+  }
+
   test("native shingle_hashes equals the declarative xxhash64 chain") {
     import spark.implicits._
     val k = 3
@@ -2788,6 +2809,58 @@ class OpsSpec extends AnyFunSuite {
     assert(math.abs(mmr.head.getDouble(3) - 0.98) < 1e-6)
   }
 
+  test("MMR re-rank: equal later-round scores go to the lower neighbor_id, " +
+      "equal relevance in round 1 too") {
+    import spark.implicits._
+    // q = e_x. a (id 10) is the most relevant and is picked first; b (id
+    // 21) and c (id 20) mirror each other in y, so they have the same rel
+    // (0.5) AND the same similarity to a (0.5): an exact round-2 score
+    // tie that the lower id must win. The second frame ties two
+    // candidates on rel, so round 1 must take the lower id.
+    val emb = Seq(
+      0L -> Array(1f, 0f, 0f), 10L -> Array(1f, 0f, 0f),
+      21L -> Array(0.5f, 0.5f, 0f), 20L -> Array(0.5f, -0.5f, 0f),
+      40L -> Array(0f, 0f, 1f)
+    ).toDF("vec_id", "embedding")
+    val out = Similarity.mmrRerank(emb, Seq(0L), k = 3, shortlist = 4)
+      .collect()
+    assert(out.map(_.getLong(2)).toSeq == Seq(10L, 20L, 21L))
+    // round 2: 0.75·0.5 − 0.25·0.5 for both tied candidates
+    assert(out(1).getDouble(4) == 0.75 * 0.5 - 0.25 * 0.5)
+    val tie = Seq(
+      0L -> Array(1f, 0f, 0f), 31L -> Array(0.5f, 0.5f, 0f),
+      30L -> Array(0.5f, -0.5f, 0f)
+    ).toDF("vec_id", "embedding")
+    assert(Similarity.mmrRerank(tie, Seq(0L), k = 1, shortlist = 2)
+      .collect().map(_.getLong(2)).toSeq == Seq(30L))
+  }
+
+  test("MMR re-rank: a shortlist shorter than k yields one pick per " +
+      "candidate; the output schema is (query_id, pick_rank, neighbor_id, " +
+      "rel, score)") {
+    import spark.implicits._
+    import org.apache.spark.sql.types._
+    // 3 vectors: each query has only 2 candidates for k = 4
+    val emb = Seq(0L -> Array(1f, 0f), 1L -> Array(0f, 1f),
+      2L -> Array(0.6f, 0.8f)).toDF("vec_id", "embedding")
+    val mmr = Similarity.mmrRerank(emb, Seq(0L, 1L), k = 4, shortlist = 5)
+    val out = mmr.collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2)))
+    assert(out.toSeq == Seq((0L, 1, 2L), (0L, 2, 1L), (1L, 1, 2L), (1L, 2, 0L)))
+    assert(mmr.schema == StructType(Seq(
+      StructField("query_id", LongType, nullable = false),
+      StructField("pick_rank", IntegerType, nullable = false),
+      StructField("neighbor_id", LongType, nullable = false),
+      StructField("rel", DoubleType, nullable = true),
+      StructField("score", DoubleType, nullable = true))))
+    // parquet columns are nullable: the ids are too
+    assert(Similarity.mmrRerank(emb.sparkSession.createDataFrame(emb.rdd,
+      StructType(emb.schema.fields.map(_.copy(nullable = true)))),
+      Seq(0L), k = 2, shortlist = 2).schema.map(f => (f.name, f.dataType,
+      f.nullable)) == Seq(("query_id", LongType, true),
+      ("pick_rank", IntegerType, false), ("neighbor_id", LongType, true),
+      ("rel", DoubleType, true), ("score", DoubleType, true)))
+  }
+
   test("temperature mix: α=1 keeps natural shares, α=0.5 upsamples small " +
       "sources, draw is deterministic and budget-tracking") {
     val plan = TextOps.temperatureMix(docs, 0.5, 300L).collect()
@@ -3456,6 +3529,46 @@ class OpsSpec extends AnyFunSuite {
       case _ =>
     }
     a.foreach(r => assert(r.getDouble(1) > 0.0 && r.getDouble(1) < 1.0))
+  }
+
+  test("textrank equals a round-by-round BigDecimal replay of the SQL " +
+      "form, an edgeless token included") {
+    import spark.implicits._
+    // the oracle's steps: pr/deg cast HALF_UP to DECIMAL(38,18) from the
+    // double's shortest string, an exact per-node sum, then the double
+    // damping step; round(pr, 12) HALF_UP at the end
+    def replay(texts: Seq[String], iters: Int, k: Int) = {
+      val ws = texts.map(_.split(" ", -1).toSeq)
+      val toks = ws.flatten.distinct
+      val n = toks.size
+      val edges = ws.flatMap(w => w.zip(w.tail)).filter(p => p._1 != p._2)
+        .flatMap(p => Seq(p, p.swap)).distinct
+      val deg = edges.groupBy(_._1).map { case (t, es) => t -> es.size }
+      val pr = (1 to iters).foldLeft(toks.map(_ -> 1.0 / n).toMap) { (pr, _) =>
+        val s = edges.groupBy(_._2).map { case (t, es) => t -> es.map {
+          case (src, _) => BigDecimal(pr(src) / deg(src))
+            .setScale(18, BigDecimal.RoundingMode.HALF_UP) }.sum.toDouble }
+        toks.map(t => t -> (0.15 / n + 0.85 * s.getOrElse(t, 0.0))).toMap
+      }
+      pr.toSeq.map { case (t, p) =>
+        (t, BigDecimal(p).setScale(12, BigDecimal.RoundingMode.HALF_UP)
+          .toDouble)
+      }.sortBy { case (t, p) => (-p, t) }.take(k)
+    }
+    def rows(d: org.apache.spark.sql.DataFrame, k: Int) =
+      TextOps.textrankKeywords(d, 3, k).collect()
+        .map(r => (r.getString(0), r.getDouble(1))).toSeq
+    // doc 3 is one repeated token: "solo" is a node with no edges (its
+    // self-loops are dropped), so it scores exactly 0.15 / n
+    val tiny = Seq((1L, "a b c a d"), (2L, "b c d e b"), (3L, "solo solo"))
+      .toDF("doc_id", "text")
+    val out = rows(tiny, 100)
+    assert(out == replay(Seq("a b c a d", "b c d e b", "solo solo"), 3, 100))
+    assert(out.toMap.apply("solo") ==
+      BigDecimal(0.15 / 6).setScale(12, BigDecimal.RoundingMode.HALF_UP)
+        .toDouble)
+    assert(rows(docs, 20) ==
+      replay(docs.select("text").as[String].collect().toSeq, 3, 20))
   }
 
   test("rolling daily window equals a brute-force trailing-7-day sum") {
