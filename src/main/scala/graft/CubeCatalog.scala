@@ -68,6 +68,15 @@ final class CubeCatalog(
     ()
   }
 
+  // Member memo maps: unbounded TrieMaps that live until /flush (close),
+  // each filled in Spark on first use. topKCache, topShareCache,
+  // navKeyCache and memberCountCache hold driver-side keys or counts,
+  // keyed by what a request names (k and measure, TopShare cuts, a
+  // navigated member's key), so their entry count grows with distinct
+  // requests. memberFrameCache is keyed per level and persists one
+  // executor frame per entry. The member dictionaries further down are
+  // keyed by level sets only and pin nothing on the executors.
+  //
   // A7/B9 member-key cache: resolved named-set / TopCount keys, computed once
   // per catalog (the reference's member-cache analog — /flush drops the whole
   // catalog, cache included). Keyed by (cube, dim, hierarchy, level, k,
@@ -125,38 +134,22 @@ final class CubeCatalog(
       compute: => Long): Long =
     memberCountCache.getOrElseUpdate(key, compute)
 
-  // Dense-axis member DOMAINS (Planner.densify): the distinct member frame
-  // of a drilled unit (cut- and role-filtered) plus its row count — the
-  // §7.4 dense-cells guardrail. Memoized per (cube, unit level ids,
-  // structural cuts, role) so the guard's count job runs once per distinct
-  // key per catalog lifetime instead of once per drilled level per QUERY
-  // (the fast-tail driver-job lever). Frames are executor-persisted like
-  // cachedMemberFrame; both drop with the catalog on /flush.
-  private val denseDomainCache = TrieMap.empty[
-    (String, Seq[String], Seq[graft.planner.Cut], String), (DataFrame, Long)]
+  // Member dictionaries (Planner.memberDictionary): the distinct key,
+  // name and ordinal rows of one dimension's level set, collected once
+  // and kept as a driver-side LocalRelation. Dense-fill domains, lag/cum
+  // time-member domains and the lag guard's member counts resolve from
+  // them on the driver, so a request that differs from an earlier one
+  // only in its cut values runs no planner job. Keyed by (cube,
+  // dimension, level aliases) — never by cut values — so the entry count
+  // is bounded by the schema's level sets, and no executor state is
+  // pinned. A key builds once even when requests race to it; a build
+  // that throws (the dense-cells cap) is retried by the next request.
+  private val dictionaries = TrieMap.empty[(String, String, Seq[String]),
+    CubeCatalog.Once[DataFrame]]
 
-  def cachedDenseDomain(
-      key: (String, Seq[String], Seq[graft.planner.Cut], String))(
-      compute: => DataFrame): (DataFrame, Long) =
-    denseDomainCache.getOrElseUpdate(key, {
-      val df = compute.persist()
-      (df, df.count())
-    })
-
-  // Lag/cum TIME-MEMBER domains (Planner.lagTimeDomain, cut path): the
-  // needed-member frame is localCheckpoint'ed (it feeds the fact semi-join
-  // AND the axis expansion), which costs an eager job — memoized per
-  // (cube, dim, unit level ids, structural time cuts, lag/lead window,
-  // cum signature, role) so repeated lag-family queries skip it.
-  private val timeDomainCache = TrieMap.empty[
-    (String, String, Seq[String], Seq[graft.planner.Cut], Int, Int,
-      Seq[(String, String)], String), DataFrame]
-
-  def cachedTimeDomain(
-      key: (String, String, Seq[String], Seq[graft.planner.Cut], Int, Int,
-        Seq[(String, String)], String))(
-      compute: => DataFrame): DataFrame =
-    timeDomainCache.getOrElseUpdate(key, compute)
+  def cachedDictionary(key: (String, String, Seq[String]))(
+      build: => DataFrame): DataFrame =
+    dictionaries.getOrElseUpdate(key, new CubeCatalog.Once(build)).value
 
   // RESULT cache — the Mondrian cell/segment-cache analog and the reason
   // the reference exposes /flush at all (api.rb:52-64): repeated dashboard
@@ -297,11 +290,7 @@ final class CubeCatalog(
   def close(): Unit = {
     memberFrameCache.values.foreach(_.unpersist(blocking = false))
     memberFrameCache.clear()
-    denseDomainCache.values.foreach(_._1.unpersist(blocking = false))
-    denseDomainCache.clear()
-    // time-domain frames are localCheckpoint'ed RDD state, released by the
-    // context cleaner once the map no longer references them
-    timeDomainCache.clear()
+    dictionaries.clear()
     rollups.foreach(_.df.unpersist(blocking = false))
     rollupReg.clear()
     topKCache.clear()
@@ -318,6 +307,12 @@ final class CubeCatalog(
 }
 
 object CubeCatalog {
+  /** `compute`, evaluated at most once however many threads ask for
+    * [[value]] (a failed evaluation is retried by the next caller). */
+  final class Once[T](compute: => T) {
+    lazy val value: T = compute
+  }
+
   /** Identity of one result-cache entry: a normalized query, or one page
     * of an unrestricted level-member listing. */
   sealed trait ResultKey

@@ -1,8 +1,14 @@
 package graft.planner
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.collection.mutable
+import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.expressions.{Ascending, BoundReference,
+  InterpretedOrdering, SortOrder}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.types.{IntegerType, StructType}
 import graft.CubeCatalog
 import graft.model._
 
@@ -543,33 +549,23 @@ object Planner {
         // (localCheckpoint'ed: the count job materializes the aggregation
         // ONCE and the expansion joins reuse it — the axis frame is
         // result-sized, the contract every formatter already assumes).
-        val maxCells = cat.spark.conf
-          .getOption("spark.graft.dense.maxCells").map(_.toLong)
-          .getOrElse(1000000L)
-        // FAST-PATH BOUND, fully memoized: (∏ member counts of the
-        // non-time drilled levels) × (∏ member counts of the time unit) ≥
-        // axis-distinct × |dom| for every time domain (member listings
-        // are dim-table-sized, counted once per catalog lifetime —
-        // cachedMemberCount, the COUNT(Members) cache). Under the cap —
-        // every sane query — the expansion runs the plain path: zero
+        val maxCells = maxCellsOf(cat)
+        // FAST-PATH BOUND, resolved on the driver: (∏ member counts of
+        // the non-time drilled levels, from their member dictionaries) ×
+        // |dom| ≥ axis-distinct × |dom| for every time domain. Under the
+        // cap — every sane query — the expansion runs the plain path: zero
         // extra jobs, no checkpoint, plan lineage intact (rollup routing
         // stays visible to plan inspection). Only a query whose BOUND
         // exceeds the cap (the customer × day shape) pays the exact
         // check: checkpoint the agg once, count the actual axis-distinct,
         // and 400 if the real product still exceeds the cap.
         def memberCountOf(rl: ResolvedLevel): Long =
-          cat.cachedMemberCount((cube.name,
-            s"${rl.dim.name}.${rl.hier.name}.${rl.level.name}", "")) {
-            graft.result.Metadata.levelMembersDf(cat, cube,
-              LevelRef(rl.dim.name, Some(rl.level.name),
-                Some(rl.hier.name)), withProps = false).count()
-          }
+          memberDomain(cat, cube, Seq(rl), Nil, None)._1.size.toLong
         def boundOf(td: TimeDomain): BigInt = {
           val unitAliases = td.unit.flatMap(levelAliases)
           groupLevels
             .filter(rl => !unitAliases.contains(rl.level.alias))
-            .map(rl => BigInt(memberCountOf(rl))).product *
-            td.unit.map(rl => BigInt(memberCountOf(rl))).product
+            .map(rl => BigInt(memberCountOf(rl))).product * td.size
         }
         val boundedByDims = timeDomains.forall(boundOf(_) <= maxCells)
         val base = aggDf.withColumn("__present", lit(1))
@@ -589,7 +585,7 @@ object Planner {
             else {
               val others = df.select(otherAliases.map(col): _*).distinct()
                 .localCheckpoint()
-              val cells = BigInt(others.count()) * BigInt(dom.count())
+              val cells = BigInt(others.count()) * td.size
               if (cells > maxCells)
                 GraftException.badRequest(
                   s"time-window expansion would enumerate $cells cells " +
@@ -1254,10 +1250,10 @@ object Planner {
       df.filter(col(rl.level.alias)
         .isin(topKKeyValues(cat, cube, rl, ns.k, ns.byMeasure,
           role = role): _*))
-    case TopKCut(l, k, byMeasure, _) =>
+    case TopKCut(l, k, byMeasure, asc) =>
       val rl = resolve(cube, l)
       df.filter(col(rl.level.alias)
-        .isin(topKKeyValues(cat, cube, rl, k, byMeasure, role = role): _*))
+        .isin(topKKeyValues(cat, cube, rl, k, byMeasure, asc, role): _*))
     case ts: TopShareCut =>
       val rl = resolve(cube, ts.level)
       df.filter(col(rl.level.alias)
@@ -1570,22 +1566,22 @@ object Planner {
     *                domain is the full member list and no re-filter runs)
     */
   private final case class TimeDomain(dim: String, unit: Seq[ResolvedLevel],
-      dom: DataFrame, hasCuts: Boolean) {
+      dom: DataFrame, size: Long, hasCuts: Boolean) {
     def cutFlag: String = "__cut_" + dim
   }
 
-  /** Build the needed member domain for one lag/cum time dimension. The
-    * member list comes from the dimension's own table (or the fact for a
-    * degenerate time dimension, exactly like [[densify]]'s domains) — the
-    * materialized hierarchy Mondrian navigates. When cuts restrict the
-    * dimension, the needed set is: every cut member, every member within
-    * `max(periods)` BEFORE a cut member (so positional lag(n) at any cut
-    * member spans exactly its n hierarchy predecessors), and — per cum
-    * measure — every member from the reset-group start through a cut member
-    * (PeriodsToDate sums from the period start regardless of the axis set).
-    * The marking windows are unpartitioned but run over the MEMBER DOMAIN
-    * (dim-sized, like the bucket-offset frames in [[graft.ops.Ranking]]),
-    * never the data. */
+  /** Build the needed member domain for one lag/cum time dimension, on the
+    * driver from the dimension's member dictionary (the materialized
+    * hierarchy Mondrian navigates). When cuts restrict the dimension, the
+    * needed set is: every cut member, every member within `max(periods)`
+    * BEFORE a cut member (so positional lag(n) at any cut member spans
+    * exactly its n hierarchy predecessors), every member within the lead
+    * reach AFTER one, and — per cum measure — every member from the
+    * reset-group start through a cut member (PeriodsToDate sums from the
+    * period start regardless of the axis set; an opening/closing balance
+    * needs the cut member's whole reset group). The marking walks the
+    * members in hierarchy order: the unit's ordinals ascending, nulls
+    * first, as Spark sorts. */
   private def lagTimeDomain(cat: CubeCatalog, cube: CubeDef, dn: String,
       groupLevels: Seq[ResolvedLevel], timeCuts: Seq[Cut],
       need: NeededMeasures, role: Option[String]): TimeDomain = {
@@ -1593,19 +1589,12 @@ object Planner {
     if (unit.isEmpty)
       GraftException.badRequest(
         s"lag/cumulative measures require a drilldown on their time dimension '$dn'")
-    val dim = cube.dimension(dn).getOrElse(
-      GraftException.badRequest(s"time dimension '$dn' not found"))
-    val src = dim.join match {
-      case Some(js) => cat.table(js.table)
-      case None => cat.fact(cube)
-    }
-    val cols = unit.flatMap(levelCols)
-    val aliases = unit.flatMap(levelAliases)
-    val fullDom = src.select(cols: _*).distinct()
+    val (members, schema) = memberDomain(cat, cube, unit, Nil, role)
     val dimCuts = timeCuts.filter(c =>
       levelOfCut(cube, c).exists(_.dim.name == dn))
     if (dimCuts.isEmpty)
-      return TimeDomain(dn, unit, fullDom, hasCuts = false)
+      return TimeDomain(dn, unit, localFrame(cat, members, schema),
+        members.size, hasCuts = false)
     val maxLag = (need.lags.filter(_.timeDim == dn).map(_.periods)
       .filter(_ > 0) ++
       need.movings.filter(_.timeDim == dn).map(_.periods - 1))
@@ -1613,57 +1602,44 @@ object Planner {
     // Lead(n) (negative periods) needs members AFTER cut members
     val maxLead = need.lags.filter(_.timeDim == dn).map(-_.periods)
       .filter(_ > 0).maxOption.getOrElse(0)
-    // the needed-member predicate depends only on the window reach and the
-    // cum reset/edge signature — part of the memoization key below
-    val cumSig = need.cums.filter(_.timeDim == dn)
-      .filter(cm => unit.exists(_.level.name == cm.resetLevel))
-      .map(cm => (cm.resetLevel, cm.edge)).distinct.sorted
-    val dom = cat.cachedTimeDomain((cube.name, dn,
-        unit.map(rl => s"${rl.hier.name}.${rl.level.name}"),
-        dimCuts, maxLag, maxLead, cumSig, role.getOrElse(""))) {
-      val flag = "__cut_" + dn
-      val cutDom = dimCuts.foldLeft(src)((d, c) =>
-          applyCut(cat, cube, d, c, role))
-        .select(cols: _*).distinct().withColumn(flag, lit(1))
-      val flagged = fullDom.join(cutDom, aliases, "left")
-        .withColumn(flag, coalesce(col(flag), lit(0)))
-      val ordC = unit.map { rl =>
-        col(rl.level.ordExpr.fold(rl.level.alias)(_ => rl.level.ordAlias))
-      }
-      var needed: Column = col(flag) === 1
-      if (maxLag > 0)
-        needed = needed || max(col(flag)).over(
-          Window.orderBy(ordC.map(_.asc): _*).rowsBetween(0, maxLag)) === 1
-      if (maxLead > 0)
-        needed = needed || max(col(flag)).over(
-          Window.orderBy(ordC.map(_.asc): _*).rowsBetween(-maxLead, 0)) === 1
-      for (cm <- need.cums.filter(_.timeDim == dn);
-           resetRl <- unit.find(_.level.name == cm.resetLevel))
-        needed = needed || (
-          if (cm.edge.isEmpty)
-            max(col(flag)).over(
-              // reset-member identity = the reset level plus its drilled
-              // ancestors (same rule as applyCum — a Quarter key repeats
-              // per year)
-              Window.partitionBy(unit.filter(_.depth <= resetRl.depth)
-                  .map(rl => col(rl.level.alias)): _*)
-                .orderBy(ordC.map(_.asc): _*)
-                .rowsBetween(0, Window.unboundedFollowing)) === 1
-          else
-            // closing/opening balances read the reset group's EDGE member,
-            // which may sit beyond any cut member — a cut group needs its
-            // WHOLE reset group in the domain
-            max(col(flag)).over(
-              Window.partitionBy(unit.filter(_.depth <= resetRl.depth)
-                .map(rl => col(rl.level.alias)): _*)) === 1)
-      // localCheckpoint: the domain feeds the fact semi-join AND the axis
-      // expansion; tiny frame, computed once (Dedup convention) — and the
-      // memoization above makes that once per distinct key per CATALOG,
-      // not per query (the eager checkpoint job was per-query overhead)
-      flagged.withColumn("__needed", needed).filter(col("__needed"))
-        .drop("__needed").localCheckpoint()
+    val cutMembers = memberDomain(cat, cube, unit, dimCuts, role)._1.toSet
+    val ordIdx = unit.map(rl => schema.fieldIndex(
+      rl.level.ordExpr.fold(rl.level.alias)(_ => rl.level.ordAlias)))
+    // ties on the ordinals break on every other column, deterministically
+    val sorted = sortRows(members, schema,
+      ordIdx ++ schema.indices.filterNot(ordIdx.contains))
+    val n = sorted.size
+    val flag = sorted.map(cutMembers.contains).toArray
+    val needed = flag.clone()
+    for (i <- 0 until n if flag(i)) {
+      (math.max(0, i - maxLag) until i).foreach(needed(_) = true)
+      (i + 1 to math.min(n - 1, i + maxLead)).foreach(needed(_) = true)
     }
-    TimeDomain(dn, unit, dom, hasCuts = true)
+    for (cm <- need.cums.filter(_.timeDim == dn);
+         resetRl <- unit.find(_.level.name == cm.resetLevel)) {
+      // reset-member identity = the reset level plus its drilled ancestors
+      // (same rule as applyCum — a Quarter key repeats per year)
+      val groupIdx = unit.filter(_.depth <= resetRl.depth)
+        .map(rl => schema.fieldIndex(rl.level.alias))
+      val group = sorted.map(r => Row.fromSeq(groupIdx.map(r.get)))
+      val cutGroups = mutable.Set.empty[Row]
+      if (cm.edge.isEmpty)
+        // from the group start through a cut member: walk backwards
+        for (i <- n - 1 to 0 by -1) {
+          if (flag(i)) cutGroups += group(i)
+          if (cutGroups(group(i))) needed(i) = true
+        }
+      else {
+        group.indices.filter(flag(_)).foreach(cutGroups += group(_))
+        group.indices.foreach(i => if (cutGroups(group(i))) needed(i) = true)
+      }
+    }
+    val flagged = sorted.indices.filter(needed(_)).map(i =>
+      Row.fromSeq(sorted(i).toSeq :+ (if (flag(i)) 1 else 0)))
+    TimeDomain(dn, unit,
+      localFrame(cat, flagged,
+        schema.add("__cut_" + dn, IntegerType, nullable = false)),
+      flagged.size, hasCuts = true)
   }
 
   /** PREVMEMBER lag (ref B8): lag(base) over the time hierarchy's drilled
@@ -1908,9 +1884,9 @@ object Planner {
 
   /** Dense axes (ref C1 default JSON shape): cross product of the member
     * domains (restricted by same-dimension cuts) left-joined with the
-    * aggregated cells. Domains come from the dim tables — small by
-    * construction; the cross product is the documented cardinality hazard
-    * (§7.4 dragon 1) and stays opt-in. */
+    * aggregated cells. Domains come from the member dictionaries — small
+    * by construction; the cross product is the documented cardinality
+    * hazard (§7.4 dragon 1) and stays opt-in. */
   private def densify(cat: CubeCatalog, cube: CubeDef, aggDf: DataFrame,
       drills: Seq[ResolvedLevel], groupLevels: Seq[ResolvedLevel],
       cuts: Seq[Cut], parents: Boolean,
@@ -1925,46 +1901,31 @@ object Planner {
         drills.map(_.dim.name).distinct
           .map(dn => groupLevels.filter(_.dim.name == dn))
       else drills.map(Seq(_))
-    // Each unit's (frame, count) is memoized on the catalog: the §7.4
-    // guardrail count below used to run one job PER DRILLED LEVEL PER
-    // QUERY — on the fast tail those scheduling round-trips, not compute,
-    // dominate (r16 verdict #1). Now it runs once per distinct
-    // (cube, unit, cuts, role) per catalog lifetime, and the persisted
-    // frame feeds the cross join.
+    // Each unit's domain resolves on the driver from its dimension's
+    // member dictionary: cut- and role-filtered there, so a new cut value
+    // runs no Spark job, and enters the plan as a LocalRelation.
     val domains = domainUnits.map { unit =>
       val rl = unit.head
       val dimCuts = cuts.filter(c =>
         levelOfCut(cube, c).exists(_.dim.name == rl.dim.name))
-      cat.cachedDenseDomain((cube.name,
-        unit.map(u => s"${u.dim.name}.${u.hier.name}.${u.level.name}"),
-        dimCuts, role.getOrElse(""))) {
-        val src = rl.dim.join match {
-          case Some(js) => cat.table(js.table)
-          case None => cat.fact(cube)
-        }
-        val cutSrc = dimCuts.foldLeft(src)((d, c) =>
-          applyCut(cat, cube, d, c, role))
-        // B18: an invisible member must not reappear as a dense filler row —
-        // restrict the member domain by the role's visibility predicate
-        val roleSrc = roleGrants.find(g => g.restricts &&
-            g.dim.name == rl.dim.name && g.hier.name == rl.hier.name)
-          .map(g => cutSrc.filter(g.visibleCol)).getOrElse(cutSrc)
-        roleSrc.select(unit.flatMap(levelCols): _*).distinct()
-      }
+      // B18: an invisible member must not reappear as a dense filler row —
+      // restrict the member domain by the role's visibility predicate
+      val grant = roleGrants.find(g => g.restricts &&
+        g.dim.name == rl.dim.name && g.hier.name == rl.hier.name)
+      memberDomain(cat, cube, unit, dimCuts, role, grant)
     }
     // Guardrail for §7.4 dragon 1: the cross product of member domains is
     // the one place a small request can demand an astronomically large
-    // result. Counting the (tiny, dim-sized) domains first turns a
-    // driver-OOM into a 400.
-    val maxCells = cat.spark.conf
-      .getOption("spark.graft.dense.maxCells").map(_.toLong)
-      .getOrElse(1000000L)
-    val cells = domains.map(d => BigInt(d._2)).product
+    // result. The domains' sizes are known on the driver, so a request
+    // over the cap is a 400, not a driver OOM.
+    val maxCells = maxCellsOf(cat)
+    val cells = domains.map(d => BigInt(d._1.size)).product
     if (cells > maxCells)
       GraftException.badRequest(
         s"dense axes would enumerate $cells cells (limit $maxCells; " +
           "raise spark.graft.dense.maxCells or request sparse=true)")
-    val domain = domains.map(_._1).reduce(_.crossJoin(_))
+    val domain = domains.map { case (rows, schema) =>
+      localFrame(cat, rows, schema) }.reduce(_.crossJoin(_))
     val joinCols =
       (if (parents) groupLevels else drills).flatMap(levelAliases)
     val aggSide = aggDf.select(joinCols.map(col) ++
@@ -1977,6 +1938,81 @@ object Planner {
     // cells outgrow the session's broadcast budget keeps the sort-merge
     // shape.
     domain.join(broadcastIfSmall(aggSide, cells), joinCols, "left")
+  }
+
+  private def maxCellsOf(cat: CubeCatalog): Long =
+    cat.spark.conf.getOption("spark.graft.dense.maxCells").map(_.toLong)
+      .getOrElse(1000000L)
+
+  /** The member dictionary of one dimension's `levels`: the distinct rows
+    * of their key, name and ordinal columns, read from the dimension's
+    * source (its join table, or the fact for a degenerate dimension) by
+    * one `distinct` the first time a request needs it, and kept on the
+    * catalog as a LocalRelation. Capped at `spark.graft.dense.maxCells`
+    * rows: a level set over the cap is the dense-cells 400. */
+  private def memberDictionary(cat: CubeCatalog, cube: CubeDef,
+      dim: DimensionDef, levels: Seq[ResolvedLevel]): DataFrame =
+    cat.cachedDictionary((cube.name, dim.name, levels.map(_.level.alias))) {
+      val src = dim.join.fold(cat.fact(cube))(js => cat.table(js.table))
+      val distinct = src.select(levels.flatMap(levelCols): _*).distinct()
+      val cap = maxCellsOf(cat)
+      val rows = distinct.limit(math.min(cap, Int.MaxValue - 1L).toInt + 1)
+        .collect()
+      if (rows.length > cap)
+        GraftException.badRequest(
+          s"dense axes would enumerate more than $cap cells: the " +
+            s"${dim.name} members of ${levels.map(_.level.name)
+              .mkString(", ")} alone exceed it (limit $cap; raise " +
+            "spark.graft.dense.maxCells or request sparse=true)")
+      localFrame(cat, rows.toSeq, distinct.schema)
+    }
+
+  /** One member domain, resolved on the driver: the distinct rows of
+    * `unit`'s alias columns among the dimension dictionary's members that
+    * pass `cuts` and `grant`'s visibility predicate. The dictionary's
+    * level set is each unit level's chain root→leaf plus the levels the
+    * cuts and the predicate read, so filtering it equals filtering the
+    * source. Filter and projection over a LocalRelation fold during
+    * optimization: once the dictionary exists the collect runs no Spark
+    * job. Duplicates drop by Row equality, which is Spark's distinct
+    * semantics (NaN = NaN, -0.0 = 0.0). */
+  private def memberDomain(cat: CubeCatalog, cube: CubeDef,
+      unit: Seq[ResolvedLevel], cuts: Seq[Cut], role: Option[String],
+      grant: Option[Roles.DimGrant] = None): (Seq[Row], StructType) = {
+    val cutLevels = cuts.flatMap {
+      case nc: NavCut => navPathRefs(cube, nc).map(resolve(cube, _))
+      case c => levelOfCut(cube, c).toSeq
+    }
+    def chain(dim: DimensionDef, hier: HierarchyDef, depth: Int) =
+      hier.levels.take(depth + 1).zipWithIndex.map { case (l, d) =>
+        ResolvedLevel(dim, hier, l, d) }
+    val levels = (unit.flatMap(rl => chain(rl.dim, rl.hier, rl.depth)) ++
+      cutLevels ++
+      grant.toSeq.flatMap(g => chain(g.dim, g.hier, g.predicateDepth)))
+      .distinctBy(_.level.alias).sortBy(_.level.alias)
+    val dict = memberDictionary(cat, cube, unit.head.dim, levels)
+    val cut = cuts.foldLeft(dict)((d, c) =>
+      applyCutOnAliases(cat, cube, d, c, role))
+    val visible = grant.fold(cut)(g =>
+      cut.filter(g.visibleOn(l => col(l.alias))))
+    val domain = visible.select(unit.flatMap(levelAliases).map(col): _*)
+    (domain.collect().toSeq.distinct, domain.schema)
+  }
+
+  /** Driver-side rows as a DataFrame over a LocalRelation. */
+  private def localFrame(cat: CubeCatalog, rows: Seq[Row],
+      schema: StructType): DataFrame =
+    cat.spark.createDataFrame(rows.asJava, schema)
+
+  /** `rows` in Spark's ascending order (nulls first) on the columns `by`. */
+  private def sortRows(rows: Seq[Row], schema: StructType,
+      by: Seq[Int]): Seq[Row] = {
+    val toCatalyst = CatalystTypeConverters.createToCatalystConverter(schema)
+    val ord = new InterpretedOrdering(by.map(i =>
+      SortOrder(BoundReference(i, schema(i).dataType, nullable = true),
+        Ascending)))
+    rows.map(r => (r, toCatalyst(r).asInstanceOf[InternalRow]))
+      .sortWith((a, b) => ord.compare(a._2, b._2) < 0).map(_._1)
   }
 
   /** `df` hinted for broadcast when `rows` of it fit the session's

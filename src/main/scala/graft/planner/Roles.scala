@@ -129,7 +129,11 @@ object Roles {
       * ordered member grants fold so the LAST matching entry wins
       * (Mondrian nested-grant override); anything no entry names is
       * denied. */
-    def visibleCol: Column =
+    def visibleCol: Column = visibleOn(l => expr(l.keyExpr))
+
+    /** [[visibleCol]] with each level's key read through `key` — over a
+      * member dictionary, whose columns are the levels' aliases. */
+    def visibleOn(key: LevelDef => Column): Column =
       grants.map { g =>
         if (g.memberGrants.isEmpty) lit(true)
         else g.memberGrants.foldLeft(lit(false)) { (acc, mg) =>
@@ -142,12 +146,18 @@ object Roles {
           // other years when the leaf key repeats across parents
           val anc = mg.path.takeRight(lvlIdx)
           val cond = anc.zip(hier.levels.slice(lvlIdx - anc.length, lvlIdx))
-            .foldLeft(expr(lvl.keyExpr).isin(mg.keys: _*)) {
-              case (c, (k, al)) => c && expr(al.keyExpr) === lit(k)
+            .foldLeft(key(lvl).isin(mg.keys: _*)) {
+              case (c, (k, al)) => c && key(al) === lit(k)
             }
           when(cond, lit(mg.access == "all")).otherwise(acc)
         }
       }.reduce(_ || _)
+
+    /** Depth of the deepest level [[visibleOn]] reads: every member
+      * grant's level (its ancestors sit above it). */
+    def predicateDepth: Int = grants.flatMap(_.memberGrants)
+      .map(mg => hier.levels.indexWhere(_.name == mg.level))
+      .maxOption.getOrElse(-1)
 
     private def bandOf(g: HierarchyGrantDef): Range = {
       val top = g.topLevel.map(l => hier.levels.indexWhere(_.name == l))

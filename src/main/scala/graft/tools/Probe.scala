@@ -11,10 +11,11 @@ import graft.{CubeCatalog, GraftSession, SparkEntry}
   *
   *  - `time`: n (default 3) cold-cache runs per query, wall and job count.
   *  - `jobs`: one run per query under bench conditions (warm catalog
-  *    memoization, storage cleared once), one line each: jobs, stages,
-  *    tasks, build and execute wall. On the fast tail per-action
-  *    scheduling, not compute, dominates, so job count is the thing to
-  *    minimize.
+  *    memoization, storage cleared once), one line each: the jobs the
+  *    build phase (planning, driver-side member lookups) and the execute
+  *    phase started, stages, tasks, build and execute wall. On the fast
+  *    tail per-action scheduling, not compute, dominates, so job count is
+  *    the thing to minimize.
   *  - `stages`: n (default 2) cold-cache runs per query, each with its
   *    job walls and its slowest stages, with the graft callsite that
   *    submitted them.
@@ -54,37 +55,44 @@ object Probe {
         }
         spark.catalog.clearCache()
       }
-      /** One run: (build s, execute s, the listener's record of it). */
+      /** One run: (build s, execute s, build-phase jobs, the listener's
+        * record of the whole run). */
       def run(fn: (SparkSession, String) => DataFrame) = {
         drain(spark)
         listener.reset()
         val t0 = System.nanoTime()
         val df = fn(spark, sfDir) // planner work, member-lookup collects
+        val build = (System.nanoTime() - t0) / 1e9
+        drain(spark)
+        val buildJobs = listener.snapshot.jobs.size
         val t1 = System.nanoTime()
         materialize(df)
-        val t2 = System.nanoTime()
+        val exec = (System.nanoTime() - t1) / 1e9
         drain(spark)
-        ((t1 - t0) / 1e9, (t2 - t1) / 1e9, listener.snapshot)
+        (build, exec, buildJobs, listener.snapshot)
       }
       mode match {
         case "jobs" =>
-          println(f"${"query"}%-28s ${"jobs"}%5s ${"stg"}%5s ${"tasks"}%6s " +
-            f"${"build"}%7s ${"exec"}%7s")
+          println(f"${"query"}%-28s ${"bjobs"}%5s ${"xjobs"}%5s " +
+            f"${"stg"}%5s ${"tasks"}%6s ${"build"}%7s ${"exec"}%7s")
+          var totBuildJobs = 0L
           var totJobs = 0L
           var totWall = 0.0
           for ((q, fn) <- selected) attempt(q) {
-            val (build, exec, r) = run(fn)
-            println(f"$q%-28s ${r.jobs.size}%5d ${r.stages.size}%5d " +
-              f"${r.tasks}%6d $build%7.3f $exec%7.3f")
+            val (build, exec, buildJobs, r) = run(fn)
+            println(f"$q%-28s $buildJobs%5d ${r.jobs.size - buildJobs}%5d " +
+              f"${r.stages.size}%5d ${r.tasks}%6d $build%7.3f $exec%7.3f")
+            totBuildJobs += buildJobs
             totJobs += r.jobs.size
             totWall += build + exec
           }
-          println(f"TOTAL ${selected.size} queries: $totJobs jobs, $totWall%.1f s")
+          println(f"TOTAL ${selected.size} queries: $totBuildJobs build + " +
+            f"${totJobs - totBuildJobs} execute jobs, $totWall%.1f s")
         case _ =>
           val reps = n.getOrElse(if (mode == "time") 3 else 2)
           for ((q, fn) <- selected; rep <- 0 until reps) attempt(q) {
             spark.catalog.clearCache() // cold cache, warm JVM
-            val (build, exec, r) = run(fn)
+            val (build, exec, _, r) = run(fn)
             println(f"[$mode] $q rep$rep: ${build + exec}%.3f s " +
               f"(build $build%.3f, execute $exec%.3f), ${r.jobs.size} jobs, " +
               f"${r.stages.size} stages")

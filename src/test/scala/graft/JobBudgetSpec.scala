@@ -1,6 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import graft.planner._
 import SparkTestSession.spark
 
 /** Job budgets for the cube fast tail and for the pipeline ops that
@@ -26,5 +27,21 @@ class JobBudgetSpec extends AnyFunSuite {
     run()
     val (_, jobs) = SparkTestSession.jobsDuring(run())
     assert(jobs <= budget, s"$q ran $jobs jobs (budget $budget)")
+  }
+
+  test("a dense + lag query with a never-seen cut value plans with 0 " +
+      "Spark jobs on a warm catalog") {
+    def q(year: Int, region: Int) = CubeQuery("sales",
+      Seq(LevelDrill(LevelRef("ShipDate", Some("Month"))),
+        LevelDrill(LevelRef("Geography", Some("Nation")))),
+      Seq("revenue", "prev_revenue"), cuts = Seq(
+        MemberCut(LevelRef("ShipDate", Some("Year")), year),
+        MemberCut(LevelRef("Geography", Some("Region")), region)))
+    val c = TpchCatalog.build(spark, SparkTestSession.sf)
+    try {
+      Planner.plan(c, q(1995, 0)).collect()
+      val (_, jobs) = SparkTestSession.jobsDuring(Planner.plan(c, q(1996, 1)))
+      assert(jobs == 0, s"planning ran $jobs Spark jobs")
+    } finally c.close()
   }
 }

@@ -220,6 +220,38 @@ class RoleSpec extends AnyFunSuite {
     assert(rows.length == 2 * nPrio)
   }
 
+  test("roles share a member dictionary safely: restricted, unrestricted, " +
+      "then restricted again on one fresh catalog") {
+    val c = TpchCatalog.build(spark, SparkTestSession.sf)
+    // EUROPE (region 3) holds nations 3, 8, 13, 18, 23; emea_minus_one
+    // denies nation 3 inside it
+    def dense(role: Option[String], nonempty: Boolean = false) =
+      Planner.plan(c, CubeQuery("orders",
+        Seq(drill("Geography", "Nation"), drill("Priority")),
+        Seq("total_sales"), cuts = Seq(MemberCut(
+          LevelRef("Geography", Some("Region")), 3)),
+        nonempty = nonempty, role = role)).collect()
+    val europe = cat.table("nation").filter(col("n_regionkey") === 3)
+      .select("n_nationkey").collect().map(_.getInt(0)).toSet
+    val priorities = cat.table("orders").select("o_orderpriority")
+      .distinct().collect().map(_.getString(0)).toSet
+    def check(role: Option[String], nations: Set[Int]): Unit = {
+      val rows = dense(role)
+      // every visible (nation, priority) cell exactly once, fillers included
+      assert(rows.map(r => (r.getInt(0), r.getString(2))).toSet ==
+        (for (n <- nations; p <- priorities) yield (n, p)))
+      assert(rows.length == nations.size * priorities.size)
+      // the non-filler rows are exactly the sparse answer
+      assert(rows.filterNot(_.isNullAt(3)).toSet == dense(role, true).toSet)
+    }
+    try {
+      val restricted = Some("emea_minus_one")
+      check(restricted, europe - 3)
+      check(None, europe)
+      check(restricted, europe - 3)
+    } finally c.close()
+  }
+
   test("role is part of the plan identity: same query, different answers") {
     val base = CubeQuery("orders", Nil, Seq("total_sales"))
     val a = Planner.plan(cat, base.copy(role = Some("emea")))
