@@ -7,16 +7,33 @@ import graft.model._
 /** Binds a [[SchemaDef]] to concrete DataFrames (the analog of the reference's
   * schema catalog + JDBC connection singleton, api_helpers.rb:7-16).
   *
-  * Snowflake dimensions are pre-joined here, once, at registration (SURVEY §2.B
-  * B3) — the planner only ever sees star equi-joins against a single dim frame.
+  * Snowflake dimensions are pre-joined by the catalog's builder (SURVEY §2.B
+  * B3) — the planner only ever sees star equi-joins against a single dim
+  * frame. The builder names those frames in `preJoins`; each is joined once,
+  * on its first read, and kept on the driver when it fits the broadcast
+  * budget (see [[table]]).
   */
 final class CubeCatalog(
     val spark: SparkSession,
     val schema: SchemaDef,
-    tables: Map[String, DataFrame]) {
+    tables: Map[String, DataFrame],
+    preJoins: Set[String] = Set.empty) {
 
-  def table(name: String): DataFrame =
-    tables.getOrElse(name, GraftException.notFound(s"table not found: $name"))
+  private val preJoined = TrieMap.empty[String, CubeCatalog.Once[DataFrame]]
+
+  /** The frame registered as `name`. A snowflake pre-join is collected
+    * into a LocalRelation the first time it is read, when its rows fit the
+    * session's `spark.sql.autoBroadcastJoinThreshold` at Catalyst's
+    * per-row size estimate: every later query and member dictionary then
+    * reads it without re-running the join or its scans. One over the
+    * budget stays the lazy join. */
+  def table(name: String): DataFrame = {
+    val df = tables.getOrElse(name,
+      GraftException.notFound(s"table not found: $name"))
+    if (!preJoins(name)) df
+    else preJoined.getOrElseUpdate(name,
+      new CubeCatalog.Once(CubeCatalog.localIfSmall(spark, df))).value
+  }
 
   def cube(name: String): CubeDef =
     schema.cube(name).getOrElse(GraftException.notFound(s"cube not found: $name"))
@@ -291,6 +308,7 @@ final class CubeCatalog(
     memberFrameCache.values.foreach(_.unpersist(blocking = false))
     memberFrameCache.clear()
     dictionaries.clear()
+    preJoined.clear()
     rollups.foreach(_.df.unpersist(blocking = false))
     rollupReg.clear()
     topKCache.clear()
@@ -311,6 +329,23 @@ object CubeCatalog {
     * [[value]] (a failed evaluation is retried by the next caller). */
   final class Once[T](compute: => T) {
     lazy val value: T = compute
+  }
+
+  /** `df` collected into a LocalRelation when its rows fit the session's
+    * broadcast budget at Catalyst's per-row size estimate, else `df`. One
+    * job: a `limit` one row past the budget. */
+  private def localIfSmall(spark: SparkSession, df: DataFrame): DataFrame = {
+    val maxRows = graft.ops.Dedup.broadcastRows(spark, df.schema)
+    if (maxRows <= 0) df
+    else {
+      val rows = df.limit(math.min(maxRows, Int.MaxValue - 1L).toInt + 1)
+        .collect()
+      if (rows.length > maxRows) df
+      else {
+        import scala.jdk.CollectionConverters._
+        spark.createDataFrame(rows.toSeq.asJava, df.schema)
+      }
+    }
   }
 
   /** Identity of one result-cache entry: a normalized query, or one page
@@ -390,7 +425,7 @@ object TpchCatalog {
     val embeddings = load("embeddings")
 
     // Snowflake pre-joins (ref <Join> foodmart.xml:71-75): geography chains
-    // collapse to one dim frame each. Dims are small ⇒ broadcast at query time.
+    // collapse to one dim frame each, joined on first read (preJoins).
     val geo = nation.join(region, nation("n_regionkey") === region("r_regionkey"))
     val suppGeo = supplier.join(geo, supplier("s_nationkey") === geo("n_nationkey"))
     val custGeo = customer.join(geo, customer("c_nationkey") === geo("n_nationkey"))
@@ -401,7 +436,8 @@ object TpchCatalog {
       "lineitem" -> lineitem, "events" -> events, "documents" -> documents,
       "embeddings" -> embeddings, "supp_geo" -> suppGeo, "cust_geo" -> custGeo)
 
-    new CubeCatalog(spark, schemaDef, tables)
+    new CubeCatalog(spark, schemaDef, tables,
+      preJoins = Set("supp_geo", "cust_geo"))
   }
 
   private def geoHierarchy(leaf: Seq[LevelDef]): HierarchyDef = HierarchyDef(

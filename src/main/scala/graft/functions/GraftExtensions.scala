@@ -19,6 +19,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     e.injectFunction(GraftExtensions.simhashDesc)
     e.injectFunction(GraftExtensions.minhashDesc)
     e.injectFunction(GraftExtensions.dotDesc)
+    e.injectFunction(GraftExtensions.exactSumDesc)
     e.injectPlannerStrategy(_ => graft.plans.GroupedTopKStrategy)
     e.injectOptimizerRule(_ => graft.plans.TopKRewrite)
   }
@@ -73,12 +74,22 @@ object GraftExtensions {
         "dot_product takes (array<double>, array<double>)")
     })
 
+  private[functions] val exactSumDesc: Desc = (
+    FunctionIdentifier("exact_sum"),
+    info("exact_sum",
+      "exact_sum(x) - sum(CAST(x AS DECIMAL(27,6))) summed in 128-bit integers"),
+    (args: Seq[Expression]) => args match {
+      case Seq(child) => ExactSum(child)
+      case _ => GraftException.badRequest("exact_sum takes 1 argument")
+    })
+
   /** Register on an already-built session (no extensions hook needed):
     * SQL functions, the GroupedTopK strategy, and the row_number()-filter →
     * GroupedTopK rewrite. */
   def register(spark: SparkSession): Unit = {
-    Seq(simhashDesc, minhashDesc, dotDesc).foreach { case (id, ei, builder) =>
-      spark.sessionState.functionRegistry.registerFunction(id, ei, builder)
+    Seq(simhashDesc, minhashDesc, dotDesc, exactSumDesc).foreach {
+      case (id, ei, builder) =>
+        spark.sessionState.functionRegistry.registerFunction(id, ei, builder)
     }
     org.apache.spark.sql.graftshim.SparkShim.addStrategy(spark,
       graft.plans.GroupedTopKStrategy)

@@ -96,10 +96,14 @@ object Agg {
 /** A measure: aggregator over a scalar Spark SQL expression (ref
   * foodmart.xml:295-344).
   *
-  * @param exact for Sum/Avg: route the double through DECIMAL(27,6) so partial
-  *              aggregation order cannot perturb low bits — sums become exact
-  *              and reproducible across engines (oracle parity) and across
-  *              cluster sizes (100 TB determinism).
+  * @param exact for Sum/Avg: sum the value as its DECIMAL(27,6) cast, so
+  *              partial aggregation order cannot perturb low bits — sums
+  *              become exact and reproducible across engines (oracle
+  *              parity) and across cluster sizes (100 TB determinism). The
+  *              sum runs in `exact_sum` ([[graft.functions.ExactSum]]):
+  *              each row scales to a count of 10^-6 units summed in
+  *              integers, the same DECIMAL(37,6) value as
+  *              `sum(CAST(x AS DECIMAL(27,6)))` with no Decimal per row.
   */
 final case class MeasureDef(name: String, alias: String, agg: Agg, expr: String,
     exact: Boolean = true,

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.functions.SimHash64.simhash64
@@ -674,9 +674,10 @@ object Dedup {
   }
 
   /** ONE broadcast gate for the hot-df posting tail (shared by
-    * [[containmentPairsAuto]] and [[ngramJaccardAuto]], and by the
-    * planner's dense-fill and time-window joins): broadcast only
-    * when the frame fits the session's own broadcast budget
+    * [[containmentPairsAuto]] and [[ngramJaccardAuto]]; the planner's
+    * dense-fill and time-window joins and the catalog's snowflake
+    * pre-joins gate on the same budget through [[broadcastRows]]):
+    * broadcast only when the frame fits the session's own broadcast budget
     * (`spark.sql.autoBroadcastJoinThreshold` — the same knob that sizes
     * every other broadcast in the plan, so executors provisioned for the
     * session's joins are provisioned for this one too), estimated at
@@ -689,21 +690,33 @@ object Dedup {
     * repartitions the posting stream it was about to shuffle for the
     * candidate join anyway. The count re-reads the frame's checkpoint,
     * never the corpus. */
-  private[graft] def sizeGatedBroadcast(df: DataFrame,
+  private def sizeGatedBroadcast(df: DataFrame,
       rowBytes: Long = 48L, knownCount: Long = -1L): DataFrame = {
-    val conf = df.sparkSession.conf
-      .get("spark.sql.autoBroadcastJoinThreshold", "10MB")
-    // JavaUtils parses every unsigned spelling the conf accepts; the sign
-    // is split off first, as Spark's own conf parser does, so −1 disables
-    val s = conf.trim
-    val budget =
-      try {
-        if (s.startsWith("-"))
-          -org.apache.spark.network.util.JavaUtils.byteStringAsBytes(s.drop(1))
-        else org.apache.spark.network.util.JavaUtils.byteStringAsBytes(s)
-      } catch { case _: NumberFormatException => 10L << 20 }
+    val budget = broadcastBudget(df.sparkSession)
     val n = if (knownCount >= 0) knownCount else df.count()
     if (budget > 0 && n * rowBytes <= budget) broadcast(df) else df
+  }
+
+  /** How many rows of `schema` fit the session's broadcast budget at
+    * Catalyst's per-row size estimate; 0 when broadcasts are disabled. */
+  private[graft] def broadcastRows(spark: SparkSession,
+      schema: org.apache.spark.sql.types.StructType): Long = {
+    val budget = broadcastBudget(spark)
+    val rowBytes = 8L + schema.fields.map(_.dataType.defaultSize.toLong).sum
+    if (budget > 0) budget / rowBytes else 0L
+  }
+
+  /** The session's `spark.sql.autoBroadcastJoinThreshold` in bytes; ≤ 0
+    * when broadcasts are disabled. */
+  private def broadcastBudget(spark: SparkSession): Long = {
+    // JavaUtils parses every unsigned spelling the conf accepts; the sign
+    // is split off first, as Spark's own conf parser does, so −1 disables
+    val s = spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10MB").trim
+    try {
+      if (s.startsWith("-"))
+        -org.apache.spark.network.util.JavaUtils.byteStringAsBytes(s.drop(1))
+      else org.apache.spark.network.util.JavaUtils.byteStringAsBytes(s)
+    } catch { case _: NumberFormatException => 10L << 20 }
   }
 
   /** PRODUCTION-SCALE symmetric n-gram Jaccard — [[ngramJaccardPairs]]'

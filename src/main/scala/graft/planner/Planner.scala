@@ -10,6 +10,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types.{IntegerType, StructType}
 import graft.CubeCatalog
+import graft.functions.ExactSum
 import graft.model._
 
 /** CubeQuery → DataFrame. The analog of the reference's
@@ -980,23 +981,23 @@ object Planner {
       .orElse(cube.calcMembers.find(_.alias == name).map(_.alias))
       .getOrElse(GraftException.badRequest(s"measure '$name' not found"))
 
-  /** Aggregation column for a measure. `exact` Sum/Avg route the value through
-    * DECIMAL(27,6) → exact, order-independent sums: identical results across
-    * partial-aggregation orders (local[32] vs 1000 executors) and vs the
-    * DuckDB oracle. */
+  /** Aggregation column for a measure. `exact` Sum/Avg sum the value with
+    * [[graft.functions.ExactSum]], which returns what summing its
+    * DECIMAL(27,6) cast returns, in integer arithmetic → exact,
+    * order-independent sums: identical results across partial-aggregation
+    * orders (local[32] vs 1000 executors) and vs the DuckDB oracle. */
   private def aggColumn(m: MeasureDef): Column =
     maskedAggColumn(m, None).as(m.alias)
 
   /** ONE aggregation recipe for base measures (no mask) and fixed-member
     * pins (the member predicate masked into every input) — a single
-    * source of truth for the exactness-critical parts (the DECIMAL(27,6)
-    * quantization, the Median percentile), so the pinned variant cannot
+    * source of truth for the exactness-critical parts (the exact DECIMAL
+    * sum, the Median percentile), so the pinned variant cannot
     * silently diverge from the base measure it claims to restrict. */
   private def maskedAggColumn(m: MeasureDef, mask: Option[Column]): Column = {
     def mc(c: Column) = mask.map(p => when(p, c)).getOrElse(c)
     def me = mc(expr(m.expr))
-    def exactSum =
-      sum(mc(expr(s"CAST((${m.expr}) AS DECIMAL(27,6))"))).cast("double")
+    def exactSum = ExactSum.exactSum(me).cast("double")
     m.agg match {
       case Agg.Sum if m.exact => exactSum
       case Agg.Sum => sum(me)
@@ -1051,7 +1052,7 @@ object Planner {
     * fact-side masking. Without a combine, ONE pre column: the full
     * [[maskedAggColumn]] recipe (any aggregate, Median included — the
     * window only selects). With a combine, the measure's DECOMPOSITION:
-    * exact Sum/Avg keep their DECIMAL(27,6) partial sums UNQUANTIZED to
+    * exact Sum/Avg keep their DECIMAL(37,6) partial sums UNQUANTIZED to
     * double until after the window merge, so the merged value is
     * bit-identical to aggregating the pinned slice in one pass (decimal
     * addition is associative; a per-cell double hop would not be). */
@@ -1062,8 +1063,8 @@ object Planner {
     if (!pp.combine)
       Seq(maskedAggColumn(m, mask).as(pinPre(pp.pm.alias)))
     else {
-      def decSum = sum(mc(expr(s"CAST((${m.expr}) AS DECIMAL(27,6))")))
       def me = mc(expr(m.expr))
+      def decSum = ExactSum.exactSum(me)
       m.agg match {
         case Agg.Sum if m.exact => Seq(decSum.as(pinPre(pp.pm.alias)))
         case Agg.Sum => Seq(sum(me).as(pinPre(pp.pm.alias)))
@@ -1924,8 +1925,7 @@ object Planner {
       GraftException.badRequest(
         s"dense axes would enumerate $cells cells (limit $maxCells; " +
           "raise spark.graft.dense.maxCells or request sparse=true)")
-    val domain = domains.map { case (rows, schema) =>
-      localFrame(cat, rows, schema) }.reduce(_.crossJoin(_))
+    val domain = domainProduct(cat, domains, cells)
     val joinCols =
       (if (parents) groupLevels else drills).flatMap(levelAliases)
     val aggSide = aggDf.select(joinCols.map(col) ++
@@ -1938,6 +1938,22 @@ object Planner {
     // cells outgrow the session's broadcast budget keeps the sort-merge
     // shape.
     domain.join(broadcastIfSmall(aggSide, cells), joinCols, "left")
+  }
+
+  /** The cross product of the member domains, `cells` rows. Built on the
+    * driver as one LocalRelation when those rows fit the session's
+    * broadcast budget at Catalyst's per-row size estimate; otherwise a
+    * crossJoin of one LocalRelation per domain, which Spark runs as a
+    * broadcast nested-loop join with one job per extra domain. */
+  private def domainProduct(cat: CubeCatalog,
+      domains: Seq[(Seq[Row], StructType)], cells: BigInt): DataFrame = {
+    val schema = StructType(domains.flatMap(_._2.fields))
+    if (cells <= graft.ops.Dedup.broadcastRows(cat.spark, schema)) {
+      val rows = domains.map(_._1).reduceLeft((acc, d) =>
+        for (a <- acc; b <- d) yield Row.fromSeq(a.toSeq ++ b.toSeq))
+      localFrame(cat, rows, schema)
+    } else domains.map { case (rows, s) => localFrame(cat, rows, s) }
+      .reduce(_.crossJoin(_))
   }
 
   private def maxCellsOf(cat: CubeCatalog): Long =
@@ -2019,12 +2035,10 @@ object Planner {
     * `spark.sql.autoBroadcastJoinThreshold` (threshold −1: never), at
     * Catalyst's per-row size estimate for its schema. `rows` is a count
     * the caller already holds, so the gate runs no job. */
-  private def broadcastIfSmall(df: DataFrame, rows: BigInt): DataFrame = {
-    val rowBytes = 8L + df.schema.fields.map(_.dataType.defaultSize.toLong).sum
-    if ((rows * rowBytes).isValidLong)
-      graft.ops.Dedup.sizeGatedBroadcast(df, rowBytes, knownCount = rows.toLong)
+  private def broadcastIfSmall(df: DataFrame, rows: BigInt): DataFrame =
+    if (rows <= graft.ops.Dedup.broadcastRows(df.sparkSession, df.schema))
+      broadcast(df)
     else df
-  }
 
   private def comparison(c: Column, op: String, v: Double): Column = op match {
     case ">" => c > v

@@ -3,6 +3,7 @@ package graft.planner
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.CubeCatalog
+import graft.functions.ExactSum
 import graft.model._
 
 /** Aggregate-table routing (ref B17: `AggName` mappings, foodmart.xml:128-160).
@@ -54,10 +55,10 @@ object Rollups {
     val aggCols: Seq[Column] = cube.measures.filter(m => supportedAgg(m.agg))
       .flatMap { m =>
         val e = expr(m.expr)
-        val dec = expr(s"CAST((${m.expr}) AS DECIMAL(27,6))")
         m.agg match {
           case Agg.Sum | Agg.Avg => Seq(
-            sum(if (m.exact) dec else e).as(s"__sum_${m.alias}"),
+            (if (m.exact) ExactSum.exactSum(e) else sum(e))
+              .as(s"__sum_${m.alias}"),
             count(e).as(s"__cnt_${m.alias}"))
           case Agg.Count => Seq(count(e).as(s"__cnt_${m.alias}"))
           case Agg.CountAll => Seq(count(lit(1)).as(s"__cnt_${m.alias}"))
@@ -122,10 +123,9 @@ object Rollups {
     import lat.{rlSets, aliasSets, allAliases, setsSql, view}
     val aggSql = cube.measures.filter(m => supportedAgg(m.agg)).flatMap { m =>
       val e = s"(${m.expr})"
-      val dec = s"CAST($e AS DECIMAL(27,6))"
       m.agg match {
         case Agg.Sum | Agg.Avg => Seq(
-          s"SUM(${if (m.exact) dec else e}) AS `__sum_${m.alias}`",
+          s"${if (m.exact) "exact_sum" else "SUM"}($e) AS `__sum_${m.alias}`",
           s"COUNT($e) AS `__cnt_${m.alias}`")
         case Agg.Count => Seq(s"COUNT($e) AS `__cnt_${m.alias}`")
         case Agg.CountAll => Seq(s"COUNT(1) AS `__cnt_${m.alias}`")

@@ -65,13 +65,16 @@ object SchemaLoader {
       acc + (j.name -> collapsed)
     }
     validate(parsed.schema, withJoins)
-    new CubeCatalog(spark, parsed.schema, withJoins)
+    new CubeCatalog(spark, parsed.schema, withJoins,
+      preJoins = parsed.joins.map(_.name).toSet)
   }
 
   def load(spark: SparkSession, jsonText: String): CubeCatalog = {
     val root = Json.parse(jsonText).asInstanceOf[Map[String, Any]]
-    val tables = loadTables(spark,
-      root.getOrElse("tables", Seq.empty).asInstanceOf[Seq[Any]])
+    val tableSpecs = root.getOrElse("tables", Seq.empty).asInstanceOf[Seq[Any]]
+      .map(_.asInstanceOf[Map[String, Any]])
+    val tables = loadTables(spark, tableSpecs)
+    val preJoins = tableSpecs.filter(_.contains("join")).map(_("name").toString)
     val cubes = root.getOrElse("cubes", Seq.empty).asInstanceOf[Seq[Any]]
       .map(c => cubeDef(c.asInstanceOf[Map[String, Any]]))
     val virtual = root.getOrElse("virtualCubes", Seq.empty)
@@ -81,16 +84,15 @@ object SchemaLoader {
     val schema = SchemaDef(
       root.getOrElse("name", "schema").toString, cubes, virtual, roles)
     validate(schema, tables)
-    new CubeCatalog(spark, schema, tables)
+    new CubeCatalog(spark, schema, tables, preJoins.toSet)
   }
 
   // ------------------------------------------------------------- tables
 
   private def loadTables(spark: SparkSession,
-      specs: Seq[Any]): Map[String, DataFrame] = {
+      specs: Seq[Map[String, Any]]): Map[String, DataFrame] = {
     var out = ListMap.empty[String, DataFrame]
-    specs.foreach { t =>
-      val m = t.asInstanceOf[Map[String, Any]]
+    specs.foreach { m =>
       val name = m("name").toString
       val df = m.get("join") match {
         case Some(j) => // derived snowflake pre-join of two registered tables

@@ -5,15 +5,15 @@ import graft.SparkEntry
 /** Plan auditor: prints the physical plan of selected queries and greps for
   * the properties that matter at 100 TB — broadcast joins on dim tables,
   * pushed parquet filters, whole-stage codegen coverage, absence of
-  * cartesian products. Usage: runMain graft.tools.ExplainAudit [sfDir] [q...]
+  * cartesian products, exact sums through the native `exact_sum`. Usage: runMain graft.tools.ExplainAudit [sfDir] [q...]
   */
 object ExplainAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val names =
       if (args.length > 1) args.drop(1).toSeq
-      else Seq("q02_star_drilldown", "q04_cut_member", "q06_cut_range",
-        "q13_distinct_count", "q17_namedset_drill", "q19_virtual_cube",
+      else Seq("q01_returnflag_agg", "q02_star_drilldown", "q04_cut_member",
+        "q06_cut_range", "q13_distinct_count", "q17_namedset_drill", "q19_virtual_cube",
         "q28_big_dim_join", "s01_knn_brute", "d02_minhash_lsh",
         "s04_knn_ivf", "t05_top_words", "q35_rollup_routed",
         "t11_decontaminate", "t12_rarity", "s05_knn_quantized",
@@ -90,7 +90,8 @@ object ExplainAudit {
         "\\* \\w".r.findAllIn(full).length)
       println(s"== $n: broadcastJoins=$broadcasts sortMergeJoins=$smj " +
         s"nonEmptyPushedFilters=$pushed codegenSpans=$codegen " +
-        s"cartesian=${has("CartesianProduct")} bnlj=${has("BroadcastNestedLoopJoin")}")
+        s"cartesian=${has("CartesianProduct")} bnlj=${has("BroadcastNestedLoopJoin")} " +
+        s"exactSum=${has("exact_sum")}")
       if (args.length > 1) println(full)
     }
     spark.stop()

@@ -14,9 +14,10 @@ import SparkTestSession.spark
 class JobBudgetSpec extends AnyFunSuite {
 
   private val budgets = Seq(
-    "q11_dense_axes" -> 6,
-    "q55_dense_lag" -> 9,
-    "q75_mdx_topcount_tuples" -> 8,
+    "q02_star_drilldown" -> 6,
+    "q11_dense_axes" -> 5,
+    "q55_dense_lag" -> 8,
+    "q75_mdx_topcount_tuples" -> 5,
     "s10_mmr_rerank" -> 5,
     "t23_textrank" -> 5)
 

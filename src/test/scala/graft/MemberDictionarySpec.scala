@@ -117,4 +117,42 @@ class MemberDictionarySpec extends AnyFunSuite {
       assert(got.map(r => Row(r.get(0))).toSet == expected.toSet)
     } finally c.close()
   }
+
+  test("a sales.Geography dictionary builds in 2 jobs once the snowflake " +
+      "pre-join has been read") {
+    val c = TpchCatalog.build(spark, SparkTestSession.sf)
+    try {
+      c.table("supp_geo")
+      val (_, jobs) = SparkTestSession.jobsDuring(Planner.plan(c,
+        CubeQuery("sales", Seq(drill("Geography", "Nation")),
+          Seq("revenue"), nonempty = false)))
+      assert(jobs == 2, s"the dictionary build ran $jobs Spark jobs")
+    } finally c.close()
+  }
+
+  test("a snowflake pre-join is read once into a LocalRelation when it " +
+      "fits the broadcast budget, and stays the lazy join when not") {
+    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+    def isLocal(df: org.apache.spark.sql.DataFrame) =
+      df.queryExecution.analyzed.isInstanceOf[LocalRelation]
+    val c = TpchCatalog.build(spark, SparkTestSession.sf)
+    try {
+      val (first, jobs) = SparkTestSession.jobsDuring(c.table("cust_geo"))
+      assert(isLocal(first) && jobs > 0)
+      val (again, none) = SparkTestSession.jobsDuring(c.table("cust_geo"))
+      assert((again eq first) && none == 0)
+      assert(first.count() == spark.read
+        .parquet(s"${SparkTestSession.sf}/customer.parquet").count())
+      assert(!isLocal(c.table("customer")))
+    } finally c.close()
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val before = spark.conf.getOption(key)
+    spark.conf.set(key, "64b")
+    val small = TpchCatalog.build(spark, SparkTestSession.sf)
+    try assert(!isLocal(small.table("cust_geo")))
+    finally {
+      small.close()
+      before.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    }
+  }
 }

@@ -49,6 +49,34 @@ class PlannerSpec extends AnyFunSuite {
     }
   }
 
+  test("exact sums cast no row to DECIMAL(27,6) and stay a codegen'd " +
+      "HashAggregate (q01, q02)") {
+    import org.apache.spark.sql.execution.{SparkPlan, WholeStageCodegenExec}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.aggregate.{HashAggregateExec,
+      ObjectHashAggregateExec, SortAggregateExec}
+    object Plans extends AdaptiveSparkPlanHelper
+    for (q <- Seq("q01_returnflag_agg", "q02_star_drilldown")) {
+      val df = SparkEntry.queries(q)(spark, SparkTestSession.sf)
+      df.collect()
+      val plan = df.queryExecution.executedPlan
+      val aggs = Plans.collect(plan) { case h: HashAggregateExec => h }
+      assert(aggs.nonEmpty, plan)
+      assert(aggs.exists(_.aggregateExpressions.exists(
+        _.aggregateFunction.isInstanceOf[graft.functions.ExactSum])), plan)
+      for (h <- aggs; node <- Plans.collect(h) { case p: SparkPlan => p };
+           e <- node.expressions)
+        assert(!e.sql.toUpperCase.contains("AS DECIMAL(27,6)"), node)
+      assert(Plans.collect(plan) {
+        case a: ObjectHashAggregateExec => a
+        case a: SortAggregateExec => a
+      }.isEmpty, plan)
+      val inCodegen = Plans.collect(plan) { case w: WholeStageCodegenExec =>
+        Plans.collect(w.child) { case h: HashAggregateExec => h } }.flatten
+      assert(aggs.forall(inCodegen.contains), plan)
+    }
+  }
+
   test("drilldown output columns: key, label, measures in order (A2)") {
     val df = Planner.plan(cat, CubeQuery("sales",
       Seq(drill("Geography", "Region"), drill("Part", "Brand", "Brands")),

@@ -197,6 +197,59 @@ class RollupSpec extends AnyFunSuite {
       direct.collect().map(_.toSeq).toSeq)
   }
 
+  /** The partials as rollups stored them before `exact_sum`: a sum of
+    * each row's DECIMAL(27,6) cast, over the same joined fact. */
+  private def oldCastRollup(levels: Seq[LevelRef]): Rollups.Rollup = {
+    import org.apache.spark.sql.functions.{count, expr, lit, sum}
+    val rls = levels.map(Planner.resolve(cube, _))
+    val joined = Planner.joinForLevels(cat, cube, rls)
+    val sums = cube.measures.filter(m => m.exact &&
+        (m.agg == Agg.Sum || m.agg == Agg.Avg)).flatMap(m => Seq(
+      sum(expr(s"CAST((${m.expr}) AS DECIMAL(27,6))")).as(s"__sum_${m.alias}"),
+      count(expr(m.expr)).as(s"__cnt_${m.alias}")))
+    val df = joined.groupBy(rls.flatMap(Planner.levelColsOf).distinct: _*)
+      .agg(count(lit(1)).as("__rows"), sums: _*)
+    Rollups.Rollup(cube.name, rls.flatMap(Planner.levelAliasesOf).toSet, df)
+  }
+
+  test("__sum_ partials from buildOver and buildMany keep DECIMAL(37,6) " +
+      "and the per-row cast's values; a rollup saved with the cast " +
+      "re-aggregates to the same answers") {
+    import org.apache.spark.sql.types.DecimalType
+    val levels = Seq(LevelRef("Geography", Some("Region")),
+      LevelRef("ReturnFlag", Some("ReturnFlag")))
+    val old = oldCastRollup(levels)
+    val keys = old.levels.toSeq.sorted
+    val sumCols = old.df.columns.filter(_.startsWith("__sum_")).toSeq.sorted
+    assert(sumCols.nonEmpty)
+    def partials(r: Rollups.Rollup) = {
+      sumCols.foreach(c =>
+        assert(r.df.schema(c).dataType == DecimalType(37, 6), c))
+      r.df.select((keys ++ sumCols).map(r.df.col): _*).collect()
+        .map(_.toSeq).toSet
+    }
+    val expected = partials(old)
+    assert(partials(Rollups.build(cat, cube, levels)) == expected)
+    assert(partials(Rollups.buildMany(cat, cube, Seq(levels)).head) ==
+      expected)
+    val path = java.nio.file.Files.createTempDirectory("graft-rollup")
+      .toString + "/old"
+    Rollups.save(old, path)
+    val oldCat = TpchCatalog.build(spark, SparkTestSession.sf)
+    val factCat = TpchCatalog.build(spark, SparkTestSession.sf)
+    try {
+      oldCat.addRollup(Rollups.load(spark, "sales", old.levels, path),
+        cache = false)
+      val q = CubeQuery("sales",
+        Seq(drill("Geography", "Region"), drill("ReturnFlag")),
+        Seq("revenue", "sum_qty", "avg_disc", "charge"))
+      val routed = Planner.plan(oldCat, q)
+      assert(usesRollup(routed))
+      assert(routed.collect().map(_.toSeq).toSeq ==
+        Planner.plan(factCat, q).collect().map(_.toSeq).toSeq)
+    } finally { oldCat.close(); factCat.close() }
+  }
+
   test("named-set cut routes when its level is covered") {
     val q = CubeQuery("sales", Seq(drill("Geography", "Region")),
       Seq("revenue"), cuts = Seq(NamedSetCut("Top Brands")))
