@@ -79,8 +79,12 @@ final class CubeCatalog(
     rollupReg.add(if (cache) r.copy(df = r.df.cache()) else r)
     // the rollup's DATA changed (a streaming batch merged in) — cached axis
     // rows computed from the previous generation are stale for any query
-    // that routed (or would now route) to it. Registration-only changes
-    // (addRollup) never alter results, but a REPLACEMENT does.
+    // that routed (or would now route) to it, and so are the TopCount /
+    // TopPercent member keys, which rank through the same routing.
+    // Registration-only changes (addRollup) never alter results, but a
+    // REPLACEMENT does.
+    topKCache.clear()
+    topShareCache.clear()
     resultCache.synchronized(resultCache.clear())
     ()
   }

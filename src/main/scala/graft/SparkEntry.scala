@@ -351,25 +351,26 @@ object SparkEntry {
           dupClusters(s, dir))),
       "d04_ngram_jaccard" -> tbl("documents")(
         ops.Dedup.ngramJaccardPairs(_, 3, "lang", 0.2)),
-      // d24: the PRODUCTION symmetric-Jaccard variant — prefix self-join
-      // with the index side df-capped (deterministic xxhash downsample,
-      // probe side uncapped, candidate work O(P·cap)); the auto cap
-      // (max(256, 4√n)) is far above this corpus' max prefix-shingle df,
-      // so the gate replays the exact d04 join bit-for-bit while the cap
-      // only engages at corpus scale
+      // d24: d04's operator with the auto-sized df cap (max(256, 4√n)) —
+      // the production form, whose index side is downsampled wherever a
+      // prefix shingle is hotter than the cap. This corpus' prefix dfs sit
+      // far below it, so the hot-tail check finds nothing and d04's exact
+      // join runs: same rows, one docs count and one check more
       "d24_ngram_jaccard_auto" -> tbl("documents")(
-        ops.Dedup.ngramJaccardAuto(_, 3, "lang", 0.2)),
+        ops.Dedup.ngramJaccardPairs(_, 3, "lang", 0.2,
+          ops.Dedup.AutoDfCap)),
       // asymmetric containment |A∩B|/|A| — the quote-expansion duplicates
       // symmetric Jaccard misses (prefix⋈inverted-index, PPJoin-pruned)
       "d19_containment" -> tbl("documents")(
         ops.Dedup.containmentPairs(_, 3, "lang", 0.6)),
-      // d23: the PRODUCTION containment variant — container index
-      // df-capped (deterministic xxhash downsample) with a documented
-      // recall contract; the auto cap (max(256, 4√n)) is far above this
-      // corpus' max shingle df (5), so the gate replays the exact join
-      // bit-for-bit while the cap only engages at corpus scale
+      // d23: d19's operator with the auto-sized df cap (max(256, 4√n)) —
+      // the production form, whose container index is downsampled wherever
+      // a shingle is hotter than the cap. This corpus' max shingle df (5)
+      // sits far below it, so the hot-tail check finds nothing and d19's
+      // exact join runs: same rows, one docs count and one check more
       "d23_containment_auto" -> tbl("documents")(
-        ops.Dedup.containmentPairsAuto(_, 3, "lang", 0.6)),
+        ops.Dedup.containmentPairs(_, 3, "lang", 0.6,
+          ops.Dedup.AutoDfCap)),
       // the dedup-impact ("data diet") report: per source, how many docs
       // survive exact and fuzzy dedup, and how many tokens span-trimming
       // keeps — the accounting every corpus build publishes. Pure
@@ -2246,6 +2247,42 @@ object SparkEntry {
       |  round(CAST(SUM(s) AS DOUBLE) / COUNT(1), 6) AS lm_score
       |  FROM sc GROUP BY doc_id)""".stripMargin
 
+  /** d04 and d24: exact symmetric 3-gram Jaccard ≥ 0.2 within a lang. */
+  private val ngramJaccardOracleSql: String =
+    """WITH sh AS (SELECT doc_id, lang,
+      |  CASE WHEN len(string_split(text, ' ')) < 3 THEN []
+      |  ELSE list_distinct(list_transform(
+      |    range(1, len(string_split(text, ' ')) - 1),
+      |    i -> array_to_string((string_split(text, ' '))[i:i+2], ' '))) END AS sh
+      |  FROM documents),
+      |pairs AS (
+      |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
+      |    len(list_intersect(a.sh, b.sh)) AS inter,
+      |    len(a.sh) AS na, len(b.sh) AS nb
+      |  FROM sh a JOIN sh b ON a.lang = b.lang AND a.doc_id < b.doc_id)
+      |SELECT doc_a, doc_b, inter / (na + nb - inter) AS jaccard
+      |FROM pairs WHERE inter / (na + nb - inter) >= 0.2
+      |ORDER BY doc_a, doc_b""".stripMargin
+
+  /** d19 and d23: directional containment |A∩B|/|A| ≥ 0.6 over the same
+    * shingle sets — all ordered pairs (a ≠ b), int/int double division
+    * as in d04. */
+  private val containmentOracleSql: String =
+    """WITH sh AS (SELECT doc_id, lang,
+      |  CASE WHEN len(string_split(text, ' ')) < 3 THEN []
+      |  ELSE list_distinct(list_transform(
+      |    range(1, len(string_split(text, ' ')) - 1),
+      |    i -> array_to_string((string_split(text, ' '))[i:i+2], ' '))) END AS sh
+      |  FROM documents),
+      |pairs AS (
+      |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
+      |    len(list_intersect(a.sh, b.sh)) AS inter, len(a.sh) AS na
+      |  FROM sh a JOIN sh b ON a.lang = b.lang AND a.doc_id <> b.doc_id
+      |  WHERE len(a.sh) > 0 AND len(b.sh) > 0)
+      |SELECT doc_a, doc_b, inter / na AS containment
+      |FROM pairs WHERE inter / na >= 0.6
+      |ORDER BY doc_a, doc_b""".stripMargin
+
   /** s01 (and s11's exact side): exhaustive top-5 cosine per query. */
   private val bruteKnnOracleSql: String =
     """WITH e AS (SELECT vec_id,
@@ -3743,74 +3780,15 @@ object SparkEntry {
         |FROM documents d JOIN cl ON d.doc_id = cl.doc_id
         |WHERE d.doc_id = cl.cluster_id
         |ORDER BY d.doc_id""".stripMargin,
-    "d04_ngram_jaccard" ->
-      """WITH sh AS (SELECT doc_id, lang,
-        |  CASE WHEN len(string_split(text, ' ')) < 3 THEN []
-        |  ELSE list_distinct(list_transform(
-        |    range(1, len(string_split(text, ' ')) - 1),
-        |    i -> array_to_string((string_split(text, ' '))[i:i+2], ' '))) END AS sh
-        |  FROM documents),
-        |pairs AS (
-        |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-        |    len(list_intersect(a.sh, b.sh)) AS inter,
-        |    len(a.sh) AS na, len(b.sh) AS nb
-        |  FROM sh a JOIN sh b ON a.lang = b.lang AND a.doc_id < b.doc_id)
-        |SELECT doc_a, doc_b, inter / (na + nb - inter) AS jaccard
-        |FROM pairs WHERE inter / (na + nb - inter) >= 0.2
-        |ORDER BY doc_a, doc_b""".stripMargin,
-    // d24: at gate scale the prefix-df cap never engages, so the auto
-    // variant must be BIT-IDENTICAL to the exact symmetric Jaccard join —
-    // same oracle as d04
-    "d24_ngram_jaccard_auto" ->
-      """WITH sh AS (SELECT doc_id, lang,
-        |  CASE WHEN len(string_split(text, ' ')) < 3 THEN []
-        |  ELSE list_distinct(list_transform(
-        |    range(1, len(string_split(text, ' ')) - 1),
-        |    i -> array_to_string((string_split(text, ' '))[i:i+2], ' '))) END AS sh
-        |  FROM documents),
-        |pairs AS (
-        |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-        |    len(list_intersect(a.sh, b.sh)) AS inter,
-        |    len(a.sh) AS na, len(b.sh) AS nb
-        |  FROM sh a JOIN sh b ON a.lang = b.lang AND a.doc_id < b.doc_id)
-        |SELECT doc_a, doc_b, inter / (na + nb - inter) AS jaccard
-        |FROM pairs WHERE inter / (na + nb - inter) >= 0.2
-        |ORDER BY doc_a, doc_b""".stripMargin,
-    // d19: directional containment |A∩B|/|A| over the same shingle sets —
-    // all ordered pairs (a ≠ b), int/int double division as in d04
-    "d19_containment" ->
-      """WITH sh AS (SELECT doc_id, lang,
-        |  CASE WHEN len(string_split(text, ' ')) < 3 THEN []
-        |  ELSE list_distinct(list_transform(
-        |    range(1, len(string_split(text, ' ')) - 1),
-        |    i -> array_to_string((string_split(text, ' '))[i:i+2], ' '))) END AS sh
-        |  FROM documents),
-        |pairs AS (
-        |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-        |    len(list_intersect(a.sh, b.sh)) AS inter, len(a.sh) AS na
-        |  FROM sh a JOIN sh b ON a.lang = b.lang AND a.doc_id <> b.doc_id
-        |  WHERE len(a.sh) > 0 AND len(b.sh) > 0)
-        |SELECT doc_a, doc_b, inter / na AS containment
-        |FROM pairs WHERE inter / na >= 0.6
-        |ORDER BY doc_a, doc_b""".stripMargin,
+    "d04_ngram_jaccard" -> ngramJaccardOracleSql,
+    // d24: at gate scale the prefix-df cap never engages, so the capped
+    // form must be BIT-IDENTICAL to the exact symmetric Jaccard join
+    "d24_ngram_jaccard_auto" -> ngramJaccardOracleSql,
+    "d19_containment" -> containmentOracleSql,
     // d23: at gate scale the df cap never engages (max df 5 ≪ 256), so
-    // the auto variant must be BIT-IDENTICAL to the exact directional
-    // containment join — same oracle as d19
-    "d23_containment_auto" ->
-      """WITH sh AS (SELECT doc_id, lang,
-        |  CASE WHEN len(string_split(text, ' ')) < 3 THEN []
-        |  ELSE list_distinct(list_transform(
-        |    range(1, len(string_split(text, ' ')) - 1),
-        |    i -> array_to_string((string_split(text, ' '))[i:i+2], ' '))) END AS sh
-        |  FROM documents),
-        |pairs AS (
-        |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-        |    len(list_intersect(a.sh, b.sh)) AS inter, len(a.sh) AS na
-        |  FROM sh a JOIN sh b ON a.lang = b.lang AND a.doc_id <> b.doc_id
-        |  WHERE len(a.sh) > 0 AND len(b.sh) > 0)
-        |SELECT doc_a, doc_b, inter / na AS containment
-        |FROM pairs WHERE inter / na >= 0.6
-        |ORDER BY doc_a, doc_b""".stripMargin,
+    // the capped form must be BIT-IDENTICAL to the exact directional
+    // containment join
+    "d23_containment_auto" -> containmentOracleSql,
     // the planted clone (min vec_id, shifted id) makes the gate row a
     // found pair instead of a shared empty result
     "d05_embedding_neardup" ->

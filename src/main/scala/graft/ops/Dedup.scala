@@ -442,8 +442,100 @@ object Dedup {
         (col("pos0") + 1).as("pos"))
   }
 
+  /** `dfCap` for [[ngramJaccardPairs]] and [[containmentPairs]]: no cap —
+    * the exact join, with no hot-tail count. */
+  final val NoDfCap: Int = Int.MaxValue
+
+  /** `dfCap` for [[ngramJaccardPairs]] and [[containmentPairs]]: the cap
+    * auto-sized to max(256, ⌈4·√nDocs⌉). Per probing shingle the index side
+    * then contributes O(√n) postings, so candidate work is O(P·√n) for P
+    * probe postings — sub-quadratic by construction — while the cap stays
+    * far above any natural shingle's df at small n (the d23/d24 gate
+    * corpora top out well under 256), so those gates replay the exact join
+    * bit-for-bit and the cap only engages at corpus scale. */
+  final val AutoDfCap: Int = 0
+
+  /** Each doc's block, distinct hashed k-shingles `sh` and their count `n`.
+    * localCheckpoint: feeds the postings and both verify re-attaches;
+    * GC-released with the result frame (see minhashLshPairs note). */
+  private def shingleSets(docs: DataFrame, k: Int,
+      blockCol: String): DataFrame =
+    docs.select(col("doc_id"), col(blockCol).as("block"),
+      hashedShingles("text", k).as("sh"))
+      .withColumn("n", size(col("sh")))
+      .localCheckpoint()
+
+  /** `postings` with every (block, s) whose document frequency exceeds the
+    * cap `dfCap` names deterministically downsampled to an expected `cap`
+    * survivors: posting (s, doc) survives iff xxhash64(s, doc_id) mod
+    * df < cap, a pure function of the data, so reruns and the DuckDB oracle
+    * see the same sample. None for [[NoDfCap]] (no hot-tail count at all),
+    * or when no (block, s) is hotter than the cap: the downsample is then
+    * the identity and the caller runs its exact path.
+    *
+    * The hot tail is one linear agg over the caller's checkpointed
+    * postings. The auto cap is never below 256, so the tail is first cut
+    * there: a tail empty at 256 is empty at any auto size, and only a
+    * non-empty one pays the docs count (of the checkpointed shingle sets
+    * `sh`, not the corpus) that sizes the cap. Its row count is
+    * ≤ postings/cap, which with the auto cap GROWS as √n·avg_df — at
+    * 100 TB (n ≈ 10¹⁰ docs) tens of millions of rows, past any safe
+    * broadcast — so the downsample join goes through [[sizeGatedBroadcast]]
+    * on the count already taken. */
+  private def dfCapped(postings: DataFrame, dfCap: Int,
+      sh: DataFrame): Option[DataFrame] = {
+    require(dfCap >= 0, "dfCap must be non-negative")
+    if (dfCap == NoDfCap) return None
+    val floor = if (dfCap == AutoDfCap) 256L else dfCap.toLong
+    val tail = postings.groupBy("block", "s").agg(count(lit(1)).as("df"))
+      .where(col("df") > floor)
+      .localCheckpoint()
+    // RDD counts of checkpointed frames: one job each, where Dataset.count
+    // adds an aggregate exchange and a second job
+    val nTail = tail.rdd.count()
+    if (nTail == 0) return None
+    val cap = if (dfCap != AutoDfCap) floor
+      else math.max(floor, math.ceil(4 * math.sqrt(sh.rdd.count().toDouble))
+        .toLong)
+    val hot = tail.where(col("df") > cap)
+    val nHot = if (cap == floor) nTail else hot.rdd.count()
+    if (nHot == 0) None
+    else Some(postings
+      .join(sizeGatedBroadcast(hot, nHot), Seq("block", "s"), "left")
+      .where(col("df").isNull ||
+        pmod(xxhash64(col("s"), col("doc_id")), col("df")) < cap)
+      .drop("df"))
+  }
+
+  /** The exact verify both similarity joins end in: candidate pairs travel
+    * skinny (two longs); both docs' full shingle arrays re-attach only
+    * here for the exact intersect. Keeps the pairs whose `measure` —
+    * the SQL expression `value` over `inter`, `na` and `nb` — reaches
+    * `threshold`, ordered by (doc_a, doc_b).
+    *
+    * The verify stage is compute-heavy per BYTE (two ~n-element array
+    * intersections per candidate pair, rows of just two longs), so AQE's
+    * byte-based coalescing collapses the candidate exchange to one task.
+    * Repartitioning by the very key the first verify join needs keeps the
+    * stage at the session's parallelism at small scale, and at corpus
+    * scale it IS the doc_a exchange a shuffled verify join would insert —
+    * satisfied, not duplicated. */
+  private def verifiedPairs(cand: DataFrame, sh: DataFrame, measure: String,
+      value: String, threshold: Double): DataFrame =
+    cand.repartition(sh.sparkSession.sessionState.conf.numShufflePartitions,
+        col("doc_a"))
+      .join(sh.select(col("doc_id").as("doc_a"), col("sh").as("sh_a"),
+        col("n").as("na")), "doc_a")
+      .join(sh.select(col("doc_id").as("doc_b"), col("sh").as("sh_b"),
+        col("n").as("nb")), "doc_b")
+      .withColumn("inter", expr("size(array_intersect(sh_a, sh_b))"))
+      .withColumn(measure, expr(value))
+      .where(col(measure) >= threshold)
+      .select("doc_a", "doc_b", measure)
+      .orderBy("doc_a", "doc_b")
+
   /** Exact n-gram Jaccard similarity join (result identical to all-pairs
-    * verification, never all-pairs work). Three result-preserving prunes:
+    * verification, never all-pairs work). Result-preserving prunes:
     *
     *  1. Size-ratio: J(A,B) ≤ min/max ⇒ |A|,|B| within a factor 1/t.
     *  2. PREFIX FILTER (Chaudhuri/Xiao SSJoin): order shingles canonically by
@@ -461,34 +553,70 @@ object Dedup {
     *     ⌈t·max(na,nb)⌉ are cut before the exact verify. At loose thresholds
     *     this prunes the hot-shingle co-occurrence pairs the prefix filter
     *     alone lets through.
-    *  4. Candidate pairs travel skinny (two longs) through the join and the
-    *     first-shared-token agg; full shingle arrays re-attach only for the
-    *     exact intersect.
-    */
+    *
+    * DF CAP (`dfCap`: [[NoDfCap]], [[AutoDfCap]] or an explicit value) —
+    * the production form. The exact join's posting work is Σ(prefix_df²)
+    * over (block, shingle), still hostage to any shingle that is hot INSIDE
+    * prefixes (near-identical boilerplate families, template corpora).
+    * With a cap, and only when some (block, shingle) prefix posting list is
+    * hotter than it, the self-join turns asymmetric BY ROLE: side `a`
+    * (probe) is every doc's prefix uncapped, side `b` (index) the same
+    * prefix postings downsampled by [[dfCapped]]. Matches canonicalize to
+    * (least, greatest) and dedupe, so each unordered pair gets TWO
+    * independent detection chances (A's probe hitting B's surviving
+    * posting, or B's hitting A's) — capping "both sides" would square the
+    * miss probability. Candidate work is ≤ P·cap for P prefix postings,
+    * however hot any shingle is; every emitted pair still verifies EXACTLY.
+    *
+    * RECALL CONTRACT under a cap:
+    *  - a qualifying pair sharing at least one prefix shingle with
+    *    df ≤ cap is found with probability 1 — sub-cap postings are never
+    *    dropped, and the prefix is each doc's RAREST (1−t)-fraction, so for
+    *    natural corpora this is every real near-dup (a planted dup shares
+    *    ALL of a doc's shingles, including its rarest — the sweep pins that
+    *    recall at 1.0 at every factor);
+    *  - a pair whose EVERY shared prefix shingle is hotter than the cap
+    *    survives iff either doc outlives one of those shingles'
+    *    downsamples: P ≥ 1 − Π_s (1 − cap/df_s)² over the shared hot
+    *    prefix shingles (the square is the two probe directions). Such
+    *    pairs exist only where the docs' rarest common content is itself
+    *    corpus-hot — the regime where the exact join is output-bound
+    *    quadratic and a cap is the only linear answer.
+    *
+    * The capped join has NO position filter: the bound is only valid at
+    * the pair's TRUE first shared canonical token, and a capped index
+    * posting can hide that token — the bound at the observed-first token
+    * can underestimate and prune a qualifying pair. The size-ratio prune
+    * (it reads only n_a/n_b, never postings) and the exact verify keep the
+    * candidate set honest. */
   def ngramJaccardPairs(docs: DataFrame, k: Int, blockCol: String,
-      threshold: Double): DataFrame = {
-    require(threshold > 0, "threshold must be positive")
-    // localCheckpoint: feeds postings + both re-attach sides; GC-released
-    // with the result frame (see minhashLshPairs note)
-    val sh = docs.select(col("doc_id"), col(blockCol).as("block"),
-      hashedShingles("text", k).as("sh"))
-      .withColumn("n", size(col("sh")))
-      .localCheckpoint()
+      threshold: Double, dfCap: Int = NoDfCap): DataFrame = {
+    require(threshold > 0 && threshold <= 1, "threshold must be in (0, 1]")
+    val sh = shingleSets(docs, k, blockCol)
     // materialized: the prefix subtree (df agg + broadcast join + per-doc
     // regroup) feeds BOTH sides of the candidate self-join — without this it
     // is evaluated twice
     val prefix = prefixPostings(sh, threshold).localCheckpoint()
-    val cand = ssjoinCandidates(prefix, threshold, positional = true)
-    cand
-      .join(sh.select(col("doc_id").as("doc_a"), col("sh").as("sh_a"),
-        col("n").as("na")), "doc_a")
-      .join(sh.select(col("doc_id").as("doc_b"), col("sh").as("sh_b"),
-        col("n").as("nb")), "doc_b")
-      .withColumn("inter", expr("size(array_intersect(sh_a, sh_b))"))
-      .withColumn("jaccard", expr("inter / (na + nb - inter)"))
-      .where(col("jaccard") >= threshold)
-      .select("doc_a", "doc_b", "jaccard")
-      .orderBy("doc_a", "doc_b")
+    val cand = dfCapped(prefix, dfCap, sh) match {
+      case None => ssjoinCandidates(prefix, threshold, positional = true)
+      case Some(capped) =>
+        val a = prefix.select(col("block").as("block_a"),
+          col("doc_id").as("id_a"), col("n").as("na"), col("s").as("s_a"))
+        val b = capped.select(col("block").as("block_b"),
+          col("doc_id").as("id_b"), col("n").as("nb"), col("s").as("s_b"))
+        a.join(b,
+          col("block_a") === col("block_b") && col("s_a") === col("s_b") &&
+            col("id_a") =!= col("id_b") &&
+            // exact size-ratio prune, both directions (round(…, 9) snaps
+            // product ulps as in ssjoinCandidates)
+            col("na") >= round(col("nb") * threshold, 9) &&
+            col("nb") >= round(col("na") * threshold, 9))
+          .select(least(col("id_a"), col("id_b")).as("doc_a"),
+            greatest(col("id_a"), col("id_b")).as("doc_b"))
+          .distinct()
+    }
+    verifiedPairs(cand, sh, "jaccard", "inter / (na + nb - inter)",
+      threshold)
   }
 
   /** Exact n-gram CONTAINMENT join — the asymmetric near-dup case symmetric
@@ -505,16 +633,41 @@ object Dedup {
     * come from that prefix⋈index join, pruned by nb ≥ ⌈t·na⌉ (overlap
     * can't exceed |B|) and the PPJoin position bound (both sides share one
     * canonical order), then verify exactly on the re-attached shingle
-    * arrays. The probe side is a plain inverted index — posting work is
+    * arrays. The index side is a plain inverted index — posting work is
     * Σ(prefix_df × df), and the prefix side's rarest-first discipline
-    * keeps hot shingles out of the probing set. */
+    * keeps hot shingles out of the probing set.
+    *
+    * DF CAP (`dfCap`: [[NoDfCap]], [[AutoDfCap]] or an explicit value) —
+    * the production form, for a 100 TB corpus where Σ(prefix_df × df) is
+    * hostage to the hottest shingles: when some (block, shingle) is hotter
+    * than the cap, the CONTAINER index is downsampled by [[dfCapped]].
+    * Probe-side prefix postings are NEVER dropped (the rarest-first prefix
+    * is tiny), and every emitted pair still verifies EXACTLY — the cap can
+    * only lose a pair, never invent or misvalue one.
+    *
+    * RECALL CONTRACT under a cap:
+    *  - a qualifying pair (A→B) sharing at least one prefix-of-A shingle
+    *    with df ≤ cap is found with probability 1 — sub-cap postings are
+    *    never dropped. The prefix is the contained doc's RAREST
+    *    (1−t)-fraction, so for natural corpora this is essentially every
+    *    real quote-expansion pair (a planted exact dup shares ALL of A's
+    *    shingles, including its rarest — the sweep pins that recall at
+    *    1.0 at every factor);
+    *  - a pair whose EVERY shared prefix shingle is hotter than the cap
+    *    survives iff B outlives one of those shingles' downsamples:
+    *    P ≥ 1 − (1 − cap/df_max)^m over m shared hot prefix shingles.
+    *    Such pairs exist only in corpora whose RAREST common content is
+    *    itself hot (boilerplate-only overlap) — the regime where an exact
+    *    join is output-bound quadratic and a cap is the only linear
+    *    answer.
+    *
+    * The capped join has NO position filter, for the reason given at
+    * [[ngramJaccardPairs]]: a capped posting can hide the pair's true
+    * first shared token, where alone the bound holds. */
   def containmentPairs(docs: DataFrame, k: Int, blockCol: String,
-      threshold: Double): DataFrame = {
+      threshold: Double, dfCap: Int = NoDfCap): DataFrame = {
     require(threshold > 0 && threshold <= 1, "threshold must be in (0, 1]")
-    val sh = docs.select(col("doc_id"), col(blockCol).as("block"),
-      hashedShingles("text", k).as("sh"))
-      .withColumn("n", size(col("sh")))
-      .localCheckpoint()
+    val sh = shingleSets(docs, k, blockCol)
     // ONE posting pipeline: the contained side's prefix is a position
     // filter over the same table — the df agg / hot-set sort / per-doc
     // regroup are paid once, and the A and B sides share one canonical
@@ -522,162 +675,45 @@ object Dedup {
     // could in principle break boundary ties differently, which would
     // invalidate the position filter's shared-order premise)
     val full = fullPostings(sh).localCheckpoint()
+    val capped = dfCapped(full, dfCap, sh)
     val pre = full.where(col("pos") <=
       col("n") - ceil(round(col("n") * threshold, 9)) + 1)
     val a = pre.select(col("block").as("block_a"), col("doc_id").as("doc_a"),
       col("n").as("na"), col("s").as("s_a"), col("pos").as("pa"))
-    val b = full.select(col("block").as("block_b"),
+    val b = capped.getOrElse(full).select(col("block").as("block_b"),
       col("doc_id").as("doc_b"), col("n").as("nb"), col("s").as("s_b"),
       col("pos").as("pb"))
-    val cand = a.join(b,
+    val joined = a.join(b,
       col("block_a") === col("block_b") && col("s_a") === col("s_b") &&
         col("doc_a") =!= col("doc_b") &&
         // the container must be able to supply the required overlap
         col("nb") >= ceil(round(col("na") * threshold, 9)))
-      .groupBy("doc_a", "doc_b")
-      // min(pa)/min(pb) both land on the first shared canonical token
-      // (positions are monotone in the shared order), so this equals the
-      // former min(struct(pa, pb)) while staying HASH-aggregable with
-      // map-side partial aggregation — min over a struct forced a
-      // SortAggregate over the full candidate stream (see
-      // ssjoinCandidates)
-      .agg(min(col("pa")).as("fpa"), min(col("pb")).as("fpb"),
-        first(col("na")).as("na"), first(col("nb")).as("nb"))
-      // PPJoin bound at the first shared canonical token, against ⌈t·na⌉
-      .where(lit(1) + least(col("na") - col("fpa"),
-          col("nb") - col("fpb")) >=
-        ceil(round(col("na") * threshold, 9)))
-      .select("doc_a", "doc_b")
-    cand
-      .join(sh.select(col("doc_id").as("doc_a"), col("sh").as("sh_a"),
-        col("n").as("na")), "doc_a")
-      .join(sh.select(col("doc_id").as("doc_b"), col("sh").as("sh_b")),
-        "doc_b")
-      .withColumn("inter", expr("size(array_intersect(sh_a, sh_b))"))
-      .withColumn("containment", expr("inter / na"))
-      .where(col("containment") >= threshold)
-      .select("doc_a", "doc_b", "containment")
-      .orderBy("doc_a", "doc_b")
+    val cand =
+      if (capped.isDefined) joined.select("doc_a", "doc_b").distinct()
+      else joined
+        .groupBy("doc_a", "doc_b")
+        // min(pa)/min(pb) both land on the first shared canonical token
+        // (positions are monotone in the shared order), so this equals the
+        // former min(struct(pa, pb)) while staying HASH-aggregable with
+        // map-side partial aggregation — min over a struct forced a
+        // SortAggregate over the full candidate stream (see
+        // ssjoinCandidates)
+        .agg(min(col("pa")).as("fpa"), min(col("pb")).as("fpb"),
+          first(col("na")).as("na"), first(col("nb")).as("nb"))
+        // PPJoin bound at the first shared canonical token, against ⌈t·na⌉
+        .where(lit(1) + least(col("na") - col("fpa"),
+            col("nb") - col("fpb")) >=
+          ceil(round(col("na") * threshold, 9)))
+        .select("doc_a", "doc_b")
+    verifiedPairs(cand, sh, "containment", "inter / na", threshold)
   }
 
-  /** PRODUCTION-SCALE directional containment — [[containmentPairs]]'
-    * prefix ⋈ inverted-index join with the CONTAINER index DF-CAPPED, the
-    * sub-quadratic variant a 100 TB corpus runs where the exact join's
-    * Σ(prefix_df × df) posting work is hostage to the hottest shingles.
-    *
-    * The cap: postings of any (block, shingle) with document frequency
-    * above `dfCap` are deterministically downsampled to an expected
-    * `dfCap` survivors — posting (s, B) survives iff
-    * xxhash64(s, doc_b) mod df < dfCap, a pure function of the data, so
-    * reruns and the DuckDB oracle see the same sample. Probe-side prefix
-    * postings are NEVER dropped (the rarest-first prefix is tiny), and
-    * every emitted pair still verifies EXACTLY on the full shingle
-    * arrays — the cap can only lose a pair, never invent or misvalue one.
-    *
-    * RECALL CONTRACT (the honest statement, not hand-waving):
-    *  - a qualifying pair (A→B) sharing at least one prefix-of-A shingle
-    *    with df ≤ dfCap is found with probability 1 — sub-cap postings
-    *    are never dropped. The prefix is the contained doc's RAREST
-    *    (1−t)-fraction, so for natural corpora this is essentially every
-    *    real quote-expansion pair (a planted exact dup shares ALL of A's
-    *    shingles, including its rarest — the sweep pins that recall at
-    *    1.0 at every factor);
-    *  - a pair whose EVERY shared prefix shingle is hotter than the cap
-    *    survives iff B outlives one of those shingles' downsamples:
-    *    P ≥ 1 − (1 − dfCap/df_max)^m over m shared hot prefix shingles.
-    *    Such pairs exist only in corpora whose RAREST common content is
-    *    itself hot (boilerplate-only overlap) — the regime where an exact
-    *    join is output-bound quadratic and a cap is the only linear
-    *    answer.
-    *
-    * `dfCap` = 0 auto-sizes to max(256, ⌈4·√nDocs⌉): per probing prefix
-    * shingle the container side contributes O(√n) postings, so candidate
-    * work is O(P·√n) for P prefix postings — sub-quadratic by
-    * construction, and far above any natural shingle's df at small n (the
-    * d23 gate corpus tops out at df = 5, so the gate replays the EXACT
-    * join bit-for-bit while the cap only engages at corpus scale). */
-  def containmentPairsAuto(docs: DataFrame, k: Int, blockCol: String,
-      threshold: Double, dfCap: Int = 0): DataFrame = {
-    require(threshold > 0 && threshold <= 1, "threshold must be in (0, 1]")
-    require(dfCap >= 0, "dfCap must be non-negative")
-    val cap =
-      if (dfCap > 0) dfCap.toLong
-      else math.max(256L, math.ceil(4 * math.sqrt(
-        docs.count().toDouble)).toLong)
-    val sh = docs.select(col("doc_id"), col(blockCol).as("block"),
-      hashedShingles("text", k).as("sh"))
-      .withColumn("n", size(col("sh")))
-      .localCheckpoint()
-    // The probe side needs the canonical rarest-first PREFIX (df-ranked
-    // regroup); the CONTAINER side needs only the raw inverted index —
-    // since this variant has no PPJoin position filter (see below),
-    // positions on the container postings were dead weight: the former
-    // shape regrouped + position-stamped EVERY posting (fullPostings) just
-    // to filter the probe prefix out of it. Shingle arrays are
-    // sorted-unique sets (ShingleHashes), so exploding them IS the full
-    // posting list — the container side skips the df join, the per-doc
-    // regroup/sort, and materializes without positions.
-    val pre = prefixPostings(sh, threshold).localCheckpoint()
-    val raw = sh.select(col("block"), col("doc_id"), col("n"),
-      explode(col("sh")).as("s"))
-      .localCheckpoint()
-    // exact per-(block, shingle) df of the HOT tail only: one linear agg.
-    // Row count is ≤ postings/cap, which with the auto cap 4√n GROWS as
-    // √n·avg_df — NOT a constant: at 100 TB (n ≈ 10¹⁰ docs) it can reach
-    // tens of millions of rows, past any safe broadcast. So the broadcast
-    // is size-gated on an actual count (hotDf is one agg over the already-
-    // checkpointed postings — the count re-reads the checkpoint, not the
-    // corpus); above the gate the downsample join degrades to a shuffle
-    // hash join on (block, s), which is correct and merely repartitions
-    // the posting stream it was about to shuffle for the candidate join
-    // anyway.
-    val hotDf = raw.groupBy("block", "s").agg(count(lit(1)).as("df"))
-      .where(col("df") > cap)
-      .localCheckpoint()
-    val nHot = hotDf.count()
-    // empty hot tail → the downsample is the identity; skip the left join
-    // entirely (the gate-scale path — the count reads the checkpointed hot
-    // tail, not the corpus, and replaces the one sizeGatedBroadcast ran)
-    val rawCapped = if (nHot == 0) raw else {
-      val hotSide = sizeGatedBroadcast(hotDf, knownCount = nHot)
-      raw.join(hotSide, Seq("block", "s"), "left")
-        .where(col("df").isNull ||
-          pmod(xxhash64(col("s"), col("doc_id")), col("df")) < cap)
-        .drop("df")
-    }
-    val a = pre.select(col("block").as("block_a"), col("doc_id").as("doc_a"),
-      col("n").as("na"), col("s").as("s_a"))
-    val b = rawCapped.select(col("block").as("block_b"),
-      col("doc_id").as("doc_b"), col("n").as("nb"), col("s").as("s_b"))
-    // NO PPJoin position filter here, deliberately: the bound is only
-    // valid at the pair's TRUE first shared token in the canonical order,
-    // and a capped posting can hide that token — the bound evaluated at
-    // the observed-first token can then underestimate and prune a
-    // genuinely qualifying pair, silently breaking the recall contract.
-    // The size-ratio prune and the exact array verify below keep the
-    // candidate set honest; the cap itself is what bounds the join.
-    val cand = a.join(b,
-      col("block_a") === col("block_b") && col("s_a") === col("s_b") &&
-        col("doc_a") =!= col("doc_b") &&
-        col("nb") >= ceil(round(col("na") * threshold, 9)))
-      .select("doc_a", "doc_b").distinct()
-    cand
-      .join(sh.select(col("doc_id").as("doc_a"), col("sh").as("sh_a"),
-        col("n").as("na")), "doc_a")
-      .join(sh.select(col("doc_id").as("doc_b"), col("sh").as("sh_b")),
-        "doc_b")
-      .withColumn("inter", expr("size(array_intersect(sh_a, sh_b))"))
-      .withColumn("containment", expr("inter / na"))
-      .where(col("containment") >= threshold)
-      .select("doc_a", "doc_b", "containment")
-      .orderBy("doc_a", "doc_b")
-  }
-
-  /** ONE broadcast gate for the hot-df posting tail (shared by
-    * [[containmentPairsAuto]] and [[ngramJaccardAuto]]; the planner's
-    * dense-fill and time-window joins and the catalog's snowflake
+  /** ONE broadcast gate for the hot-df posting tail of [[dfCapped]] (the
+    * df-capped forms of [[ngramJaccardPairs]] and [[containmentPairs]]; the
+    * planner's dense-fill and time-window joins and the catalog's snowflake
     * pre-joins gate on the same budget through [[broadcastRows]]):
-    * broadcast only when the frame fits the session's own broadcast budget
+    * broadcast `df`, known to hold `rows` rows, only when it fits the
+    * session's own broadcast budget
     * (`spark.sql.autoBroadcastJoinThreshold` — the same knob that sizes
     * every other broadcast in the plan, so executors provisioned for the
     * session's joins are provisioned for this one too), estimated at
@@ -688,13 +724,11 @@ object Dedup {
     * disabled broadcasts with threshold −1) the join degrades to a
     * shuffle hash join on (block, s), which is correct and merely
     * repartitions the posting stream it was about to shuffle for the
-    * candidate join anyway. The count re-reads the frame's checkpoint,
-    * never the corpus. */
-  private def sizeGatedBroadcast(df: DataFrame,
-      rowBytes: Long = 48L, knownCount: Long = -1L): DataFrame = {
+    * candidate join anyway. */
+  private def sizeGatedBroadcast(df: DataFrame, rows: Long,
+      rowBytes: Long = 48L): DataFrame = {
     val budget = broadcastBudget(df.sparkSession)
-    val n = if (knownCount >= 0) knownCount else df.count()
-    if (budget > 0 && n * rowBytes <= budget) broadcast(df) else df
+    if (budget > 0 && rows * rowBytes <= budget) broadcast(df) else df
   }
 
   /** How many rows of `schema` fit the session's broadcast budget at
@@ -717,156 +751,6 @@ object Dedup {
         -org.apache.spark.network.util.JavaUtils.byteStringAsBytes(s.drop(1))
       else org.apache.spark.network.util.JavaUtils.byteStringAsBytes(s)
     } catch { case _: NumberFormatException => 10L << 20 }
-  }
-
-  /** PRODUCTION-SCALE symmetric n-gram Jaccard — [[ngramJaccardPairs]]'
-    * prefix self-join with the INDEX side df-capped, the sub-quadratic
-    * sibling [[containmentPairsAuto]] gave the directional join. The exact
-    * SSJoin's posting work is Σ(prefix_df²) over (block, shingle): exact
-    * and prefix-bounded, but still hostage to any shingle that is hot
-    * INSIDE prefixes (near-identical boilerplate families, template
-    * corpora) — the one fuzzy family with no 100×-runnable variant until
-    * now.
-    *
-    * SHAPE — the symmetric case needs care the directional one didn't. A
-    * containment probe has a natural asymmetry (contained prefix vs
-    * container index); a Jaccard pair has none, so capping "both sides"
-    * of the self-join would square the miss probability. Instead the
-    * self-join is made asymmetric BY ROLE, not by data: side `a` (probe)
-    * is every doc's prefix UNCAPPED; side `b` (index) is the same prefix
-    * postings with any (block, shingle) hotter than `cap` downsampled to
-    * an expected `cap` survivors (xxhash64(s, doc_b) mod df < cap — a
-    * pure function of the data, so reruns and the oracle agree). Matches
-    * canonicalize to (least, greatest) and dedupe, so each unordered pair
-    * gets TWO independent detection chances: A's probe hitting B's
-    * surviving posting, or B's probe hitting A's. When the hot tail is
-    * EMPTY (the cap never engaged) the downsample is the identity and the
-    * two directions are exact mirror images — the join then runs ONCE with
-    * `id_a < id_b` for the identical pair set at half the fan-out (see the
-    * inline note).
-    *
-    * WORK BOUND — why this stays O(P·cap) even though both docs' prefixes
-    * survive uncapped on the probe side: the join fans out per PROBE
-    * posting, and each probe posting meets only the ≤ cap index survivors
-    * of its (block, shingle) — so candidate work is ≤ P·cap for P total
-    * prefix postings, regardless of how hot any shingle is. The uncapped
-    * probe side costs P rows of shuffle, which is the linear cost the
-    * exact join already paid; only the quadratic df² term is cut.
-    *
-    * RECALL CONTRACT:
-    *  - a qualifying pair sharing at least one prefix shingle with
-    *    df ≤ cap is found with probability 1 — sub-cap postings are never
-    *    dropped, and the rarest-first canonical order makes the prefix
-    *    each doc's RAREST (1−t)-fraction, so for natural corpora this is
-    *    every real near-dup (a planted dup shares ALL of a doc's
-    *    shingles, including its rarest — the sweep pins that recall at
-    *    1.0 at every factor);
-    *  - a pair whose EVERY shared prefix shingle is hotter than the cap
-    *    survives iff either doc outlives one of those shingles'
-    *    downsamples: P ≥ 1 − Π_s (1 − cap/df_s)² over the shared hot
-    *    prefix shingles (the square is the two independent probe
-    *    directions). Such pairs exist only where the docs' rarest common
-    *    content is itself corpus-hot — exactly the regime where the exact
-    *    join is output-bound quadratic and a cap is the only linear
-    *    answer.
-    *
-    * NO PPJoin position filter, same reason as [[containmentPairsAuto]]:
-    * the bound is only valid at the pair's TRUE first shared canonical
-    * token, and a capped index posting can hide that token — the bound at
-    * the observed-first token can underestimate and prune a qualifying
-    * pair, silently breaking the contract. The size-ratio prune (exact —
-    * it reads only n_a/n_b, never postings) and the exact full-array
-    * verify keep the candidate set honest; every emitted pair is EXACT.
-    *
-    * `dfCap` = 0 auto-sizes to max(256, ⌈4·√nDocs⌉) — far above any
-    * natural shingle's PREFIX df at gate scale (the d24 gate corpus'
-    * prefixes top out well under 256), so the gate replays
-    * [[ngramJaccardPairs]] bit-for-bit while the cap engages only at
-    * corpus scale. */
-  def ngramJaccardAuto(docs: DataFrame, k: Int, blockCol: String,
-      threshold: Double, dfCap: Int = 0): DataFrame = {
-    require(threshold > 0 && threshold <= 1, "threshold must be in (0, 1]")
-    require(dfCap >= 0, "dfCap must be non-negative")
-    val cap =
-      if (dfCap > 0) dfCap.toLong
-      else math.max(256L, math.ceil(4 * math.sqrt(
-        docs.count().toDouble)).toLong)
-    val sh = docs.select(col("doc_id"), col(blockCol).as("block"),
-      hashedShingles("text", k).as("sh"))
-      .withColumn("n", size(col("sh")))
-      .localCheckpoint()
-    val prefix = prefixPostings(sh, threshold).localCheckpoint()
-    // hot tail of the PREFIX posting dfs only; same √n-growth note and
-    // size-gated broadcast as containmentPairsAuto (the count reads the
-    // checkpointed postings, not the corpus)
-    val hotDf = prefix.groupBy("block", "s").agg(count(lit(1)).as("df"))
-      .where(col("df") > cap)
-      .localCheckpoint()
-    val nHot = hotDf.count()
-    val a = prefix.select(col("block").as("block_a"),
-      col("doc_id").as("id_a"), col("n").as("na"), col("s").as("s_a"))
-    // The two probe directions exist only for the CAP's sake: each
-    // unordered pair gets two independent chances to outlive the index
-    // downsample. When NO (block, shingle) is hotter than the cap the
-    // downsample is the identity (prefixCapped ≡ prefix) and the two
-    // directions are exact mirror images — (A probe → B index) matches iff
-    // (B probe → A index) does, because the join predicate is symmetric
-    // (same shingle equality, same two-sided size prune). One direction
-    // (id_a < id_b, the exact SSJoin's own convention) then yields the
-    // identical distinct pair set with HALF the candidate fan-out and no
-    // downsample join in the plan. The count that decides reads the
-    // checkpointed hot tail, never the corpus; at gate scale (prefix dfs
-    // ≪ 256) this is the path the oracle replays, and the uncapped-vs-
-    // exact spec pins it bit-for-bit.
-    val cand = (if (nHot == 0) {
-      val b = prefix.select(col("block").as("block_b"),
-        col("doc_id").as("id_b"), col("n").as("nb"), col("s").as("s_b"))
-      // The probe keeps the posting RDD's partitioning (no repartition
-      // here); the single-task fix is the post-distinct repartition before
-      // the verify joins below.
-      a.join(b,
-        col("block_a") === col("block_b") && col("s_a") === col("s_b") &&
-          col("id_a") < col("id_b") &&
-          col("na") >= round(col("nb") * threshold, 9) &&
-          col("nb") >= round(col("na") * threshold, 9))
-        .select(col("id_a").as("doc_a"), col("id_b").as("doc_b"))
-    } else {
-      val hotSide = sizeGatedBroadcast(hotDf, knownCount = nHot)
-      val prefixCapped = prefix.join(hotSide, Seq("block", "s"), "left")
-        .where(col("df").isNull ||
-          pmod(xxhash64(col("s"), col("doc_id")), col("df")) < cap)
-        .drop("df")
-      val b = prefixCapped.select(col("block").as("block_b"),
-        col("doc_id").as("id_b"), col("n").as("nb"), col("s").as("s_b"))
-      a.join(b,
-        col("block_a") === col("block_b") && col("s_a") === col("s_b") &&
-          col("id_a") =!= col("id_b") &&
-          // exact size-ratio prune, both directions (round(…, 9) snaps
-          // product ulps as in ssjoinCandidates)
-          col("na") >= round(col("nb") * threshold, 9) &&
-          col("nb") >= round(col("na") * threshold, 9))
-        .select(least(col("id_a"), col("id_b")).as("doc_a"),
-          greatest(col("id_a"), col("id_b")).as("doc_b"))
-    }).distinct()
-    // The verify stage is compute-heavy per BYTE (two ~n-element array
-    // intersections per candidate pair, rows of just two longs), so AQE's
-    // byte-based coalescing collapses the post-distinct exchange to one
-    // task (measured 1.4 s single-task at sf0.1). Repartition by the very
-    // key the first verify join needs: REPARTITION_BY_NUM on doc_a keeps
-    // the stage at the session's parallelism at small scale, and at corpus
-    // scale it IS the doc_a exchange a shuffled verify join would insert —
-    // satisfied, not duplicated (guide §2.4/§1.3).
-    val nPart = docs.sparkSession.sessionState.conf.numShufflePartitions
-    cand.repartition(nPart, col("doc_a"))
-      .join(sh.select(col("doc_id").as("doc_a"), col("sh").as("sh_a"),
-        col("n").as("na")), "doc_a")
-      .join(sh.select(col("doc_id").as("doc_b"), col("sh").as("sh_b"),
-        col("n").as("nb")), "doc_b")
-      .withColumn("inter", expr("size(array_intersect(sh_a, sh_b))"))
-      .withColumn("jaccard", expr("inter / (na + nb - inter)"))
-      .where(col("jaccard") >= threshold)
-      .select("doc_a", "doc_b", "jaccard")
-      .orderBy("doc_a", "doc_b")
   }
 
   /** Candidate (doc_a, doc_b) pairs from prefix postings. The self-join keys
@@ -1208,24 +1092,6 @@ object Dedup {
     math.min(64, math.max(1, t.toInt))
   }
 
-  /** [[embeddingNearDupLshPairs]] with PRODUCTION SIZING WIRED IN: bits come
-    * from [[suggestedLshBits]] on the actual corpus count (pair work stays
-    * ~linear as the corpus grows) and tables from [[suggestedLshTables]] at
-    * the caller's similarity design point (recall holds as bits grow). The
-    * one extra cost over the fixed-parameter form is a count() of the
-    * corpus — a metadata-cheap scan a pipeline typically already knows.
-    * [[graft.tools.ScaleSweep]] measures the slope/recall of this form
-    * against the fixed demo parameters; the d05/d10 gate queries keep fixed
-    * parameters only so the DuckDB oracle can replay them bit-exactly. */
-  def embeddingNearDupAuto(emb: DataFrame, threshold: Double,
-      targetBucket: Int = 64, targetRecall: Double = 0.95, dim: Int = 64)
-      : (DataFrame, Int, Int) = {
-    val n = emb.count()
-    val bits = suggestedLshBits(n, targetBucket)
-    val tables = suggestedLshTables(bits, threshold, targetRecall)
-    (embeddingNearDupLshPairs(emb, threshold, bits, tables, dim), bits, tables)
-  }
-
   /** FULL-CORPUS embedding near-dup — the scale composition the blocked
     * primitive [[embeddingNearDupPairs]] defers to: hyperplane-LSH buckets
     * are the blocking key, so no label/caller block is needed and the only
@@ -1247,10 +1113,11 @@ object Dedup {
     * to attach arrays costs far more than carrying each vector once per
     * table — the ScaleSweep measured the re-attach form at ~60× this plan
     * at 100× scale (505 s → 8.5 s for 200k vectors, 18 tables, 12 bits). At corpus scale, size `bits` ≈ log₂(n / targetBucket)
-    * so bucket population stays bounded as the corpus grows ([[
-    * embeddingNearDupAuto]]). Deterministic planes (seeded per table) make
-    * the whole operator replayable in SQL — this query carries a full
-    * DuckDB oracle. */
+    * so bucket population stays bounded as the corpus grows, and `tables`
+    * to buy the recall back ([[suggestedLshBits]], [[suggestedLshTables]]
+    * — the sizing ScaleSweep's auto rows compute). Deterministic planes
+    * (seeded per table) make the whole operator replayable in SQL — this
+    * query carries a full DuckDB oracle. */
   def embeddingNearDupLshPairs(emb: DataFrame, threshold: Double,
       bits: Int = 6, tables: Int = 2, dim: Int = 64): DataFrame = {
     // localCheckpoint: the cast + bucketing map feeds both join sides

@@ -936,11 +936,6 @@ object Similarity {
         count(lit(1)).as("n"))
       .orderBy("label", "pos")
 
-  /** Deterministic Lloyd k-means over the embedding column. Initialization
-    * assigns row i to cluster (vec_id mod k) — deterministic, no RNG state —
-    * then `iters` rounds of (per-cluster mean → nearest-centroid
-    * reassignment). Centroids are tiny (k × dim) and come back to the driver
-    * each round; assignment stays fully distributed. */
   /** Topic-clustering ASSIGNMENT — deterministic k-means surfaced as a
     * first-class corpus operator (the "cluster the embedding space, then
     * sample/filter per topic" step of a curation pipeline; same coarse
@@ -953,12 +948,11 @@ object Similarity {
     * round is one partial-aggregated shuffle of the corpus; the final
     * assignment is map-only for k ≤ 64 (inline expression) and a broadcast
     * join + n-row partial-aggregate shuffle above (see
-    * [[withNearestCluster]]). Nothing corpus-sized ever concentrates. */
-  def kmeansAssign(emb: DataFrame, k: Int, iters: Int = 3): DataFrame =
-    kmeansAssignWith(emb, kmeansCentroids(emb, k, iters))
-
-  /** Assignment against prebuilt centroids (the map-only probe half —
-    * centroids are a registration-time artifact, see [[graft.ops.IndexCache]]). */
+    * [[withNearestCluster]]). Nothing corpus-sized ever concentrates.
+    *
+    * Takes prebuilt centroids ([[kmeansCentroids]]; the map-only probe
+    * half — centroids are a registration-time artifact, see
+    * [[graft.ops.IndexCache]]). */
   def kmeansAssignWith(emb: DataFrame, cs: Array[Array[Double]]): DataFrame =
     withNearestCluster(
         emb.select(col("vec_id"), asDouble("embedding").as("v")), cs, "cluster")
@@ -989,6 +983,11 @@ object Similarity {
       cs: Array[Array[Double]], out: String): DataFrame =
     df.withColumn(out, nearestCluster(col("v"), cs))
 
+  /** Deterministic Lloyd k-means over the embedding column. Initialization
+    * assigns row i to cluster (vec_id mod k) — deterministic, no RNG state —
+    * then `iters` rounds of (per-cluster mean → nearest-centroid
+    * reassignment). Centroids are tiny (k × dim) and come back to the driver
+    * each round; assignment stays fully distributed. */
   def kmeansCentroids(emb: DataFrame, k: Int, iters: Int)
       : Array[Array[Double]] = {
     // persisted for the loop below (each iteration re-reads it; every round
@@ -1115,20 +1114,6 @@ object Similarity {
     val base = IvfIndex(cs, corpus, spark.read.parquet(s"$path/cell_res"))
     Forget.tombstonesAt(spark, path).fold(base)(t =>
       ivfDelete(base, t.select(col("id").as("vec_id"))))
-  }
-
-  /** [[ivfIndex]] with PRODUCTION SIZING WIRED IN: nlist =
-    * [[suggestedIvfLists]] of the actual corpus count, so per-query probe
-    * work stays O(√n) as the corpus grows instead of O(n/nlist_fixed).
-    * Build cost is O(n·√n) assignment dots — the standard IVF trade: paid
-    * once per ingest (and amortized across every query served from the
-    * index; [[graft.ops.IndexCache]] / a parquet layout partitioned by
-    * `cell_n` is that lifecycle), while probes get the √n scaling.
-    * [[graft.tools.ScaleSweep]] measures build and probe slopes separately
-    * against the fixed demo nlist. Returns the index plus the nlist used. */
-  def ivfIndexAuto(emb: DataFrame, iters: Int = 3): (IvfIndex, Int) = {
-    val nlist = suggestedIvfLists(emb.count())
-    (ivfIndex(emb, nlist, iters), nlist)
   }
 
   /** Build the IVF index: k-means coarse quantizer, one assignment shuffle,
@@ -1308,9 +1293,10 @@ object Similarity {
   /** MULTI-TABLE LSH kNN — [[knnLsh]] with the recall knob the single-table
     * form lacks: `tables` independent hyperplane tables OR-amplify the
     * per-neighbor find probability from p^bits to 1 − (1 − p^bits)^T
-    * (p = 1 − θ/π), the same trade [[graft.ops.Dedup.embeddingNearDupAuto]]
-    * uses for pair generation. Candidates ride SKINNY (query_id,
-    * neighbor_id) through the bucket join and dedup (a neighbor sharing
+    * (p = 1 − θ/π), the same trade
+    * [[graft.ops.Dedup.embeddingNearDupLshPairs]] uses for pair
+    * generation. Candidates ride SKINNY (query_id, neighbor_id) through
+    * the bucket join and dedup (a neighbor sharing
     * several buckets scores once); vectors re-attach only for surviving
     * candidates. Per-query probe work is T · bucket population — map-side
     * linear in T, never pairwise.

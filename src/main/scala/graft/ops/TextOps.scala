@@ -1143,16 +1143,9 @@ object TextOps {
     * explode + hash-agg over it plus a driver-side argmax of ONE row (the
     * merge table is driver-sized by construction — same justification as
     * the k-means centroid collect). Real tokenizer training runs thousands
-    * of rounds over exactly this state shape. */
-  def bpeMerges(docs: DataFrame, rounds: Int): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    bpeMergeTable(docs, rounds)
-      .toDF("round", "lhs", "rhs", "merged", "pair_count")
-      .orderBy("round")
-  }
-
-  /** The learned merge table itself — (round, lhs, rhs, merged, count).
+    * of rounds over exactly this state shape.
+    *
+    * Returns the learned merge table — (round, lhs, rhs, merged, count).
     * Driver-sized by construction (one row per round); a LEARNED artifact a
     * pipeline trains once and ships with the tokenizer, so callers memoize
     * it via [[graft.ops.IndexCache]]. */

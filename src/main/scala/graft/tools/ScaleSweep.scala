@@ -7,9 +7,10 @@ import graft.ops.{Dedup, Similarity}
 /** Scale-slope harness for the embedding dedup/ANN family: measures what the
   * PRODUCTION index sizing ([[graft.ops.Dedup.suggestedLshBits]] /
   * [[graft.ops.Dedup.suggestedLshTables]] /
-  * [[graft.ops.Similarity.suggestedIvfLists]], wired in via the *Auto entry
-  * points) buys over the fixed demo parameters the oracle-replayable gate
-  * queries pin, as the corpus grows 1× → 10× → 100×.
+  * [[graft.ops.Similarity.suggestedIvfLists]], computed here from the
+  * corpus count, and [[graft.ops.Similarity.knnLshAuto]]) buys over the
+  * fixed demo parameters the oracle-replayable gate queries pin, as the
+  * corpus grows 1× → 10× → 100×.
   *
   * Corpus: the driver's sf embeddings replicated `factor`× with per-replica
   * deterministic ±1 sign masks (norm-preserving; cross-replica cosines
@@ -484,8 +485,9 @@ object ScaleSweep {
       val rows = pairs.count()
       (rows, Map("recall_exact" -> fmt(docRecall(pairs, 0))))
     }
-    // the exact symmetric SSJoin stays budget-capped (Σ prefix_df² class);
-    // its 100×-runnable production sibling is ngram_jaccard_auto below
+    // the uncapped symmetric SSJoin stays budget-capped (Σ prefix_df²
+    // class); the same operator with the auto df cap is the 100×-runnable
+    // ngram_jaccard_auto row below
     if (nDocs <= 200000) time("ngram_jaccard") {
       val rows = Dedup.ngramJaccardPairs(docs, 3, "lang", 0.5).count()
       (rows, Map("threshold" -> "0.5", "n_docs" -> nDocs.toString))
@@ -500,27 +502,27 @@ object ScaleSweep {
       (rows, Map("threshold" -> "0.8", "n_docs" -> nDocs.toString,
         "recall_exact" -> fmt(docRecall(pairs, 0))))
     }
-    // the PRODUCTION containment path: df-capped container index —
-    // sub-quadratic by construction, so it runs at EVERY factor (the
-    // family's auto-sized 100×-runnable row). Planted exact dups share
+    // the PRODUCTION containment path: the auto df cap on the container
+    // index — sub-quadratic by construction, so it runs at EVERY factor
+    // (the family's auto-sized 100×-runnable row). Planted exact dups share
     // their rarest shingles, which sit far under the auto cap, so the
     // recall contract pins them at 1.0 regardless of corpus size.
     time("containment_auto") {
-      val pairs = Dedup.containmentPairsAuto(docs, 3, "lang", 0.8)
-        .localCheckpoint()
+      val pairs = Dedup.containmentPairs(docs, 3, "lang", 0.8,
+        Dedup.AutoDfCap).localCheckpoint()
       val rows = pairs.count()
       (rows, Map("threshold" -> "0.8", "n_docs" -> nDocs.toString,
         "recall_exact" -> fmt(docRecall(pairs, 0))))
     }
-    // the PRODUCTION symmetric-Jaccard path: index-side df-capped prefix
-    // self-join (probe side uncapped, candidate work O(P·cap)) — the
-    // family's auto-sized 100×-runnable row, closing the last
-    // budget-capped fuzzy family (ngram_jaccard above). Planted exact
+    // the PRODUCTION symmetric-Jaccard path: the auto df cap on the index
+    // side of the prefix self-join (probe side uncapped, candidate work
+    // O(P·cap)) — the family's auto-sized 100×-runnable row, closing the
+    // last budget-capped fuzzy family (ngram_jaccard above). Planted exact
     // dups share their rarest shingles, far under the auto cap, so the
     // recall contract pins them at 1.0 at every factor.
     time("ngram_jaccard_auto") {
-      val pairs = Dedup.ngramJaccardAuto(docs, 3, "lang", 0.5)
-        .localCheckpoint()
+      val pairs = Dedup.ngramJaccardPairs(docs, 3, "lang", 0.5,
+        Dedup.AutoDfCap).localCheckpoint()
       val rows = pairs.count()
       (rows, Map("threshold" -> "0.5", "n_docs" -> nDocs.toString,
         "recall_exact" -> fmt(docRecall(pairs, 0))))

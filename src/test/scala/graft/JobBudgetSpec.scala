@@ -4,11 +4,11 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.planner._
 import SparkTestSession.spark
 
-/** Job budgets for the cube fast tail and for the pipeline ops that
+/** Job budgets for the cube fast tail, for the pipeline ops that
   * iterate over a small state (MMR's shortlists, TextRank's vocabulary
-  * graph): there per-action scheduling, not compute, dominates, so a
-  * change that adds Spark jobs to these queries is a regression even
-  * when every result stays right.
+  * graph) and for the n-gram similarity joins: there per-action
+  * scheduling, not compute, dominates, so a change that adds Spark jobs
+  * to these queries is a regression even when every result stays right.
   * Each query runs once to warm the catalog's memoization, then once
   * counted, written in full through the `noop` sink. */
 class JobBudgetSpec extends AnyFunSuite {
@@ -19,7 +19,13 @@ class JobBudgetSpec extends AnyFunSuite {
     "q55_dense_lag" -> 8,
     "q75_mdx_topcount_tuples" -> 5,
     "s10_mmr_rerank" -> 5,
-    "t23_textrank" -> 5)
+    "t23_textrank" -> 5,
+    // the similarity joins: the auto-capped forms (d24, d23) run the exact
+    // join (d04, d19) plus the hot-tail check — a checkpoint and one count
+    "d04_ngram_jaccard" -> 12,
+    "d24_ngram_jaccard_auto" -> 15,
+    "d19_containment" -> 13,
+    "d23_containment_auto" -> 16)
 
   for ((q, budget) <- budgets) test(s"$q runs at most $budget Spark jobs") {
     val fn = SparkEntry.queries(q)

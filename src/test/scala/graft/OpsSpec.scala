@@ -551,17 +551,17 @@ class OpsSpec extends AnyFunSuite {
   }
 
   test("kmeans assignment: total, deterministic, clusters actually used") {
-    val a = Similarity.kmeansAssign(emb, 8, 3).collect()
+    def assign() = Similarity.kmeansAssignWith(emb,
+      Similarity.kmeansCentroids(emb, 8, 3)).collect()
       .map(r => r.getLong(0) -> r.getInt(1))
+    val a = assign()
     assert(a.length == emb.count()) // every vector assigned exactly once
     assert(a.map(_._1).distinct.length == a.length)
     val used = a.map(_._2).distinct
     assert(used.forall(c => c >= 0 && c < 8))
     assert(used.length > 1, "clustering must separate the corpus")
     // deterministic: an independent run reproduces the assignment exactly
-    val b = Similarity.kmeansAssign(emb, 8, 3).collect()
-      .map(r => r.getLong(0) -> r.getInt(1))
-    assert(a.sameElements(b))
+    assert(a.sameElements(assign()))
   }
 
   test("knn brute: self excluded, scores sorted, k respected") {
@@ -2749,7 +2749,8 @@ class OpsSpec extends AnyFunSuite {
     // IVF: stale centroids, refreshed cell bounds — the Cauchy-Schwarz
     // probe is exact against any partition, so delete-then-probe equals
     // rebuild-on-survivors (same nlist) equals brute force
-    val (ivfBuilt, nlist) = Similarity.ivfIndexAuto(emb)
+    val nlist = Similarity.suggestedIvfLists(emb.count())
+    val ivfBuilt = Similarity.ivfIndex(emb, nlist)
     val ivfDel = Similarity.ivfDelete(ivfBuilt, deletes)
     assert(rows(Similarity.knnIvfProbe(ivfDel, qids, k, nprobe = 3))
       .sameElements(truth))
@@ -3030,10 +3031,20 @@ class OpsSpec extends AnyFunSuite {
     assert(!jac.contains((300001L, 7L)) && !jac.contains((7L, 300001L)))
   }
 
-  test("containmentPairsAuto: with an uncapped df the result is " +
-      "bit-identical to the exact join; a tiny cap keeps every pair " +
-      "whose contained doc shares a sub-cap prefix shingle (the recall " +
-      "contract) and never emits a pair the exact join would not") {
+  /** The largest (lang, shingle) document frequency among the 3-gram
+    * postings `postings` builds over `corpus`. */
+  private def maxDf(corpus: org.apache.spark.sql.DataFrame,
+      postings: org.apache.spark.sql.DataFrame =>
+        org.apache.spark.sql.DataFrame): Long =
+    postings(corpus.select(col("doc_id"), col("lang").as("block"),
+      Dedup.hashedShingles("text", 3).as("sh"))
+      .withColumn("n", size(col("sh"))))
+      .groupBy("block", "s").count().agg(max("count")).head().getLong(0)
+
+  test("containmentPairs df cap: the auto cap is bit-identical to the " +
+      "uncapped join; a tiny cap keeps every pair whose contained doc " +
+      "shares a sub-cap prefix shingle (the recall contract) and never " +
+      "emits a pair the exact join would not") {
     import spark.implicits._
     val d7 = docs.where(col("doc_id") === 7L).select("lang", "text").head()
     val words = d7.getString(1).split(" ")
@@ -3045,28 +3056,38 @@ class OpsSpec extends AnyFunSuite {
       .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
     val exact = m(Dedup.containmentPairs(corpus, 3, "lang", 0.9))
     // auto cap (≥ 256) ≫ any df here → bit-identical to the exact join
-    assert(m(Dedup.containmentPairsAuto(corpus, 3, "lang", 0.9)) == exact)
+    assert(m(Dedup.containmentPairs(corpus, 3, "lang", 0.9,
+      Dedup.AutoDfCap)) == exact)
     // a deliberately tiny cap: emitted pairs are a SUBSET of the exact
     // result with IDENTICAL containment values (verification is exact —
     // the cap can lose pairs, never invent or misvalue them), and the
     // planted pair survives: doc 300001 and doc 7 share the half-doc's
     // rarest shingles, whose df (2) is within even cap = 2
-    val capped = m(Dedup.containmentPairsAuto(corpus, 3, "lang", 0.9,
+    val capped = m(Dedup.containmentPairs(corpus, 3, "lang", 0.9,
       dfCap = 2))
+    // cap 2 engages here: some (lang, shingle) posting list is hotter
+    assert(maxDf(corpus, Dedup.fullPostings) > 2)
     capped.foreach { case (k, v) => assert(exact.get(k).contains(v)) }
     assert(capped.get((300001L, 7L)).contains(1.0),
       "planted rare-shingle pair must survive any cap")
   }
 
-  test("ngramJaccardAuto: with an uncapped df the result is bit-identical " +
-      "to the exact symmetric SSJoin; a tiny cap keeps every pair sharing " +
-      "a sub-cap prefix shingle (the recall contract) and never emits a " +
+  test("ngramJaccardPairs df cap: the auto cap is bit-identical to the " +
+      "uncapped symmetric SSJoin; a tiny cap keeps every pair sharing a " +
+      "sub-cap prefix shingle (the recall contract) and never emits a " +
       "pair the exact join would not") {
     import spark.implicits._
     // plant an exact duplicate of doc 7: the pair shares ALL shingles,
-    // including its rarest, so the recall contract guarantees it at any cap
-    val d7 = docs.where(col("doc_id") === 7L).select("lang", "text").head()
-    val planted = Seq((300001L, d7.getString(0), d7.getString(1)))
+    // including its rarest, so the recall contract guarantees it at any cap.
+    // Two more copies of doc 9 put its prefix shingles at df 3, hotter than
+    // cap 2 — the corpus' own prefix dfs stop at 2, where no cap below
+    // would keep the planted pair
+    def row(id: Long) =
+      docs.where(col("doc_id") === id).select("lang", "text").head()
+    val (d7, d9) = (row(7L), row(9L))
+    val planted = Seq((300001L, d7.getString(0), d7.getString(1)),
+      (300002L, d9.getString(0), d9.getString(1)),
+      (300003L, d9.getString(0), d9.getString(1)))
       .toDF("doc_id", "lang", "text")
     val corpus = docs.select("doc_id", "lang", "text").unionByName(planted)
     def m(df: org.apache.spark.sql.DataFrame) = df.collect()
@@ -3074,14 +3095,17 @@ class OpsSpec extends AnyFunSuite {
     val exact = m(Dedup.ngramJaccardPairs(corpus, 3, "lang", 0.5))
     // auto cap (≥ 256) ≫ any prefix df here → bit-identical to the exact
     // join (this is the d24 gate's premise)
-    assert(m(Dedup.ngramJaccardAuto(corpus, 3, "lang", 0.5)) == exact)
+    assert(m(Dedup.ngramJaccardPairs(corpus, 3, "lang", 0.5,
+      Dedup.AutoDfCap)) == exact)
     // a deliberately tiny cap: emitted pairs are a SUBSET of the exact
     // result with IDENTICAL jaccard values (verification is exact — the
     // cap can lose pairs, never invent or misvalue them), pairs are
     // canonically ordered (doc_a < doc_b), and the planted exact dup
     // survives via its rarest shared prefix shingles
-    val capped = m(Dedup.ngramJaccardAuto(corpus, 3, "lang", 0.5,
+    val capped = m(Dedup.ngramJaccardPairs(corpus, 3, "lang", 0.5,
       dfCap = 2))
+    // cap 2 engages here: some (lang, shingle) prefix posting list is hotter
+    assert(maxDf(corpus, Dedup.prefixPostings(_, 0.5)) > 2)
     capped.foreach { case (k, v) =>
       assert(k._1 < k._2, s"pair $k not canonical")
       assert(exact.get(k).contains(v))
@@ -3372,9 +3396,7 @@ class OpsSpec extends AnyFunSuite {
   test("BPE merges follow frequency order on a hand-computed corpus") {
     import spark.implicits._
     val tiny = Seq((0L, "ab ab ab"), (1L, "abc")).toDF("doc_id", "text")
-    val m = TextOps.bpeMerges(tiny, 2).collect()
-      .map(r => (r.getInt(0), r.getString(1), r.getString(2),
-        r.getString(3), r.getLong(4)))
+    val m = TextOps.bpeMergeTable(tiny, 2)
     // (a,b) appears 4x (3 in 'ab', 1 in 'abc'); after merging, (ab,c) once
     assert(m.toSeq == Seq((1, "a", "b", "ab", 4L), (2, "ab", "c", "abc", 1L)))
   }
@@ -3762,8 +3784,12 @@ class OpsSpec extends AnyFunSuite {
         .count(truth).toDouble / p
     val rFixed = recallOf(
       Dedup.embeddingNearDupLshPairs(emb, 0.9, bits = 6, tables = 2, dim = dim))
-    val (autoDf, bits, tables) = Dedup.embeddingNearDupAuto(emb, 0.9, dim = dim)
-    val rAuto = recallOf(autoDf)
+    // production sizing: bits from the corpus count, tables from the
+    // similarity design point
+    val bits = Dedup.suggestedLshBits(emb.count())
+    val tables = Dedup.suggestedLshTables(bits, 0.9, targetRecall = 0.95)
+    val rAuto = recallOf(
+      Dedup.embeddingNearDupLshPairs(emb, 0.9, bits, tables, dim))
     assert(bits > 6, s"fixture must exercise a non-demo sizing (bits=$bits)")
     assert(tables == Dedup.suggestedLshTables(bits, 0.9))
     assert(rAuto >= rFixed,

@@ -492,4 +492,38 @@ class RollupSpec extends AnyFunSuite {
     assert(regionRow._2 == ((nRegion, 1L)))
     assert(bothRow._2 == ((nRegionFlag, 2L)))
   }
+
+  test("TopCount and TopPercent keys follow a rollup replacement: a batch " +
+      "that changes the ranking re-ranks the cut") {
+    import org.apache.spark.sql.functions.{col, when}
+    val c = TpchCatalog.build(spark, SparkTestSession.sf)
+    try {
+      val region = LevelRef("Geography", Some("Region"))
+      val r = Rollups.build(c, c.cube("sales"), Seq(region))
+      c.addRollup(r)
+      def top(cut: Cut): Any = {
+        val q = CubeQuery("sales", Seq(LevelDrill(region)), Seq("revenue"),
+          cuts = Seq(cut))
+        val rows = Planner.plan(c, q).collect()
+        assert(rows.length == 1, s"$cut kept ${rows.length} regions")
+        rows.head.getAs[Any]("region")
+      }
+      val topCount = TopKCut(region, 1, "revenue")
+      val topPercent = TopShareCut(region, 1.0, "revenue")
+      val before = top(topCount)
+      assert(top(topPercent) == before)
+      // the next batch: every other region's revenue grows 1000×, so the
+      // previous leader drops out of the top
+      val sumType = r.df.schema("__sum_revenue").dataType
+      c.replaceRollup(r.copy(df = r.df.withColumn("__sum_revenue",
+        when(col("region") === before, col("__sum_revenue"))
+          .otherwise((col("__sum_revenue") * 1000).cast(sumType)))))
+      val leader = Planner.plan(c, CubeQuery("sales",
+        Seq(LevelDrill(region)), Seq("revenue"))).collect()
+        .maxBy(_.getAs[Double]("revenue")).getAs[Any]("region")
+      assert(leader != before)
+      assert(top(topCount) == leader)
+      assert(top(topPercent) == leader)
+    } finally c.close()
+  }
 }
