@@ -285,6 +285,16 @@ object SparkEntry {
       : (SparkSession, String) => DataFrame =
     (s, dir) => f(CubeCatalog.forDir(s, dir).table(name))
 
+  /** The flat-PQ index (16 subspaces × 16 centroids, 2 k-means rounds;
+    * codebooks + encoded corpus) that s12, s15 and s16 serve from — a
+    * registration-time artifact built once per (session, dataset), so
+    * queries pay only the lookup table + compressed scan. */
+  private def pqIndexFor(s: SparkSession, dir: String)
+      : ops.Similarity.PqIndex =
+    ops.IndexCache.memo(s, s"pqidx:$dir:16:16:2") {
+      ops.Similarity.pqIndex(CubeCatalog.forDir(s, dir).table("embeddings"))
+    }
+
   /** The corpus's near-dup PAIR LIST (3-shingle MinHash, 32×4 banded LSH,
     * Jaccard ≥ 0.5) — the once-per-ingest dedup artifact every downstream
     * consumer reads. Pair detection runs once per (session, dataset) and is
@@ -487,15 +497,9 @@ object SparkEntry {
         ops.Similarity.projectedKnn(_, Seq(0L, 1L, 2L, 3L, 4L), 5)),
       // product quantization: 16 subspace codebooks (k-means), ADC lookup-
       // table scoring over the coded corpus + exact re-rank
-      "s12_knn_pq" -> ((s: SparkSession, dir: String) => {
-        val emb = CubeCatalog.forDir(s, dir).table("embeddings")
-        // codebooks are a registration-time artifact (the s04 IVF pattern):
-        // train once per catalog, probes pay only encode + ADC scan
-        val cbs = ops.IndexCache.memo(s, s"pqcb:$dir:16:16:2") {
-          ops.Similarity.pqCodebooks(emb, 16, 16, 2)
-        }
-        ops.Similarity.pqKnnWith(emb, cbs, Seq(0L, 1L, 2L, 3L, 4L), 5)
-      }),
+      "s12_knn_pq" -> ((s: SparkSession, dir: String) =>
+        ops.Similarity.pqKnnWith(pqIndexFor(s, dir), Seq(0L, 1L, 2L, 3L, 4L),
+          5)),
       // θ-bound EXACT PQ (the s12 decay answer): the index stores, beside
       // each vector's 8-byte codes, its quantization residual norm; after
       // the ADC shortlist seeds a provisional k-th score θ, every vector
@@ -504,27 +508,18 @@ object SparkEntry {
       // served result IS the brute-force answer and the oracle is the
       // plain SQL kNN (the strongest contract an index path can carry).
       // Seed shortlist 8 < k·2 on purpose: the bound, not the width, buys
-      // the recall. The full PqIndex (codebooks + encoded corpus) is the
-      // registration-time artifact (IndexCache; savePqIndex is the
-      // persisted layout) — queries pay only the lut + compressed scan.
-      "s15_knn_pq_exact" -> ((s: SparkSession, dir: String) => {
-        val emb = CubeCatalog.forDir(s, dir).table("embeddings")
-        val idx = ops.IndexCache.memo(s, s"pqidx:$dir:16:16:2") {
-          ops.Similarity.pqIndex(emb)
-        }
-        ops.Similarity.pqKnnBoundWith(idx, Seq(0L, 1L, 2L, 3L, 4L), 5, 8)
-      }),
+      // the recall. The index is s12's (savePqIndex is its persisted
+      // layout).
+      "s15_knn_pq_exact" -> ((s: SparkSession, dir: String) =>
+        ops.Similarity.pqKnnBoundWith(pqIndexFor(s, dir),
+          Seq(0L, 1L, 2L, 3L, 4L), 5, 8)),
       // EXACT range search over the PQ index: every neighbor at cosine ≥
       // 0.25 — θ is the caller's threshold, so the compressed scan keeps
       // exactly the bound-qualified vectors and the re-rank is provably
       // complete; the oracle is the plain SQL radius filter
-      "s16_knn_range" -> ((s: SparkSession, dir: String) => {
-        val emb = CubeCatalog.forDir(s, dir).table("embeddings")
-        val idx = ops.IndexCache.memo(s, s"pqidx:$dir:16:16:2") {
-          ops.Similarity.pqIndex(emb)
-        }
-        ops.Similarity.pqRangeSearch(idx, Seq(0L, 1L, 2L, 3L, 4L), 0.25)
-      }),
+      "s16_knn_range" -> ((s: SparkSession, dir: String) =>
+        ops.Similarity.pqRangeSearch(pqIndexFor(s, dir),
+          Seq(0L, 1L, 2L, 3L, 4L), 0.25)),
       // IVF-PQ (Jégou et al. §IV, IVFADC — the billion-scale layout):
       // coarse quantizer picks nprobe cells, PQ codes of RESIDUALS score
       // by ADC within them, exact re-rank on the shortlist. Index built

@@ -283,18 +283,6 @@ object Dedup {
       .orderBy("doc_id")
   }
 
-  /** Block keys for fingerprints within Hamming distance `d`: the 64 bits
-    * split into m = d + 2 near-equal blocks; ≤ d differing bits can touch at
-    * most d blocks, so every qualifying pair agrees EXACTLY on some
-    * (m − d) = 2 blocks (pigeonhole — complete, no false negatives). One key
-    * per 2-block combination, xxhash64'd to a single long (a hash collision
-    * only adds a false candidate, which verification removes).
-    *
-    * Versus the classic d+1-block scheme (4×16-bit chunks for d=3): keys
-    * carry ~2·64/m ≈ 26 bits instead of 16, so random-fingerprint bucket
-    * sizes are ~n/2^26 not ~n/2^16 — candidate generation stays ~linear in
-    * the corpus until tens of billions of docs, at the cost of C(m,2) = 10
-    * (for d=3) exploded rows per doc instead of 4. */
   /** PORTABLE SimHash near-dup pairs — identical semantics to
     * [[simhashPairs]] but with per-token 64-bit fingerprint material drawn
     * from md5 (the only 64-bit-strength token hash both Spark and the
@@ -303,6 +291,8 @@ object Dedup {
     * 32-bit halves in separate longs — no engine needs wrapping 64-bit
     * arithmetic; Hamming distance is the sum of the halves' bit_counts.
     * Majority vote is strict (2·ones > n; ties → 0), mirrored in SQL.
+    * Spark-side the halves recombine into one word `hi << 32 | lo` for
+    * [[simhashVerified]], whose `bit_count(sh_a ^ sh_b)` equals that sum.
     *
     * The xxhash64-based [[simhashPairs]] (native one-pass
     * [[graft.functions.SimHash64]]) remains the production fast path —
@@ -326,31 +316,24 @@ object Dedup {
     def fpOf(prefix: String): Column = (0 until 32).map(b =>
       when(col(s"$prefix$b") * 2 > col("n"), lit(1L << b))
         .otherwise(lit(0L))).reduce(_ + _)
-    val fp = votes
-      .select(col("doc_id"), fpOf("h").as("hi"), fpOf("l").as("lo"))
-      .localCheckpoint()
-    // combined word only for Spark-side block keys (<< wraps bitwise here;
-    // the oracle never needs it — it verifies all-pairs on the halves)
-    val keyed = fp
-      .withColumn("sh", shiftleft(col("hi"), 32).bitwiseOR(col("lo")))
-      .select(col("doc_id"), explode(simhashBlockKeys("sh", maxHamming))
-        .as("bk"))
-    val cand = keyed.select(col("bk").as("bk_a"), col("doc_id").as("doc_a"))
-      .join(keyed.select(col("bk").as("bk_b"), col("doc_id").as("doc_b")),
-        col("bk_a") === col("bk_b") && col("doc_a") < col("doc_b"))
-      .select("doc_a", "doc_b").distinct()
-    cand
-      .join(fp.select(col("doc_id").as("doc_a"), col("hi").as("hi_a"),
-        col("lo").as("lo_a")), "doc_a")
-      .join(fp.select(col("doc_id").as("doc_b"), col("hi").as("hi_b"),
-        col("lo").as("lo_b")), "doc_b")
-      .withColumn("hamming",
-        expr("bit_count(hi_a ^ hi_b) + bit_count(lo_a ^ lo_b)"))
-      .where(col("hamming") <= maxHamming)
-      .select("doc_a", "doc_b", "hamming")
-      .orderBy("doc_a", "doc_b")
+    // combined word only Spark-side (<< wraps bitwise here; the oracle
+    // never needs it — it verifies all-pairs on the halves)
+    simhashVerified(votes.select(col("doc_id"),
+      shiftleft(fpOf("h"), 32).bitwiseOR(fpOf("l")).as("sh")), maxHamming)
   }
 
+  /** Block keys for fingerprints within Hamming distance `d`: the 64 bits
+    * split into m = d + 2 near-equal blocks; ≤ d differing bits can touch at
+    * most d blocks, so every qualifying pair agrees EXACTLY on some
+    * (m − d) = 2 blocks (pigeonhole — complete, no false negatives). One key
+    * per 2-block combination, xxhash64'd to a single long (a hash collision
+    * only adds a false candidate, which verification removes).
+    *
+    * Versus the classic d+1-block scheme (4×16-bit chunks for d=3): keys
+    * carry ~2·64/m ≈ 26 bits instead of 16, so random-fingerprint bucket
+    * sizes are ~n/2^26 not ~n/2^16 — candidate generation stays ~linear in
+    * the corpus until tens of billions of docs, at the cost of C(m,2) = 10
+    * (for d=3) exploded rows per doc instead of 4. */
   private[graft] def simhashBlockKeys(fpCol: String, maxHamming: Int): Column = {
     val m = maxHamming + 2
     val bounds = (0 to m).map(i => i * 64 / m) // block i = bits [b(i), b(i+1))
@@ -365,16 +348,21 @@ object Dedup {
     array(combos: _*)
   }
 
-  /** SimHash near-dup pairs: fingerprint via the native SimHash64 expression,
-    * candidates from [[simhashBlockKeys]] combo blocks, verified with
-    * bit_count(xor). Candidate pairs travel SKINNY (two longs) through the
-    * self-join shuffle and dedup; fingerprints re-attach afterwards. */
-  def simhashPairs(docs: DataFrame, maxHamming: Int): DataFrame = {
+  /** SimHash near-dup pairs: fingerprint via the native SimHash64
+    * expression, then [[simhashVerified]]. */
+  def simhashPairs(docs: DataFrame, maxHamming: Int): DataFrame =
+    simhashVerified(docs.select(col("doc_id"),
+      simhash64(split(col("text"), " ")).as("sh")), maxHamming)
+
+  /** The candidate-and-verify half both SimHash forms share, over 64-bit
+    * fingerprints `fps` (doc_id, sh): candidates from [[simhashBlockKeys]]
+    * combo blocks, verified with bit_count(xor). Candidate pairs travel
+    * SKINNY (two longs) through the self-join shuffle and dedup;
+    * fingerprints re-attach afterwards. */
+  private def simhashVerified(fps: DataFrame, maxHamming: Int): DataFrame = {
     // localCheckpoint: feeds key explosion + both re-attach sides; blocks are
     // GC-released with the result (see minhashLshPairs note)
-    val fp = docs.select(col("doc_id"),
-      simhash64(split(col("text"), " ")).as("sh"))
-      .localCheckpoint()
+    val fp = fps.localCheckpoint()
     val keyed = fp.select(col("doc_id"),
       explode(simhashBlockKeys("sh", maxHamming)).as("bk"))
     val cand = keyed.select(col("bk").as("bk_a"), col("doc_id").as("doc_a"))
@@ -1168,15 +1156,17 @@ object Dedup {
     val shared = sp.groupBy("span")
       .agg(countDistinct(col("doc_id")).as("nd"))
       .where(col("nd") >= 2).select("span")
+    // cov's key is `cdoc`: cov and toks both derive from `d`, so a shared
+    // `doc_id` name would make the join condition trivially true
     val cov = sp.join(shared, "span")
-      .select(col("doc_id"),
+      .select(col("doc_id").as("cdoc"),
         explode(expr(s"sequence(pos, pos + ${k - 1})")).as("cpos"))
       .distinct()
     val toks = d.select(col("doc_id"),
         posexplode(col("w")).as(Seq("p0", "tok")))
       .select(col("doc_id"), (col("p0") + 1).as("pos"), col("tok"))
     val kept = toks.join(cov,
-        toks("doc_id") === cov("doc_id") && col("pos") === col("cpos"),
+        col("doc_id") === col("cdoc") && col("pos") === col("cpos"),
         "left_anti")
       .groupBy("doc_id")
       .agg(count(lit(1)).as("n_kept"),
@@ -1246,14 +1236,14 @@ object Dedup {
     val cov = cand.join(spanAgg, "span")
       .where(!(col("doc_id") === col("first.doc_id") &&
         col("pos") === col("first.pos"))) // canonical occurrence survives
-      .select(col("doc_id"),
+      .select(col("doc_id").as("cdoc"), // see trimRepeatedSpans
         explode(expr(s"sequence(pos, pos + ${minLen - 1})")).as("cpos"))
       .distinct()
     val toks = d.select(col("doc_id"),
         posexplode(col("w")).as(Seq("p0", "tok")))
       .select(col("doc_id"), (col("p0") + 1).as("pos"), col("tok"))
     val kept = toks.join(cov,
-        toks("doc_id") === cov("doc_id") && col("pos") === col("cpos"),
+        col("doc_id") === col("cdoc") && col("pos") === col("cpos"),
         "left_anti")
       .groupBy("doc_id")
       .agg(count(lit(1)).as("n_kept"),

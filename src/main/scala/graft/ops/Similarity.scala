@@ -39,6 +39,22 @@ object Similarity {
         Seq(col("query_id")), Seq(col("sim").desc, col("neighbor_id").asc), k)
       .select("query_id", "rank", "neighbor_id", "sim")
 
+  /** The shared second half of every two-phase search (s05, s09, s12, the
+    * s15 θ seed, s14's probes): keep each query's `shortlist` best
+    * candidates by the approximate score column `approx`, then re-rank
+    * them exactly as `sim = v_q · v_n`. `scored` carries (query_id,
+    * neighbor_id, approx, v_q, v_n). (approx desc, neighbor_id asc) is a
+    * total order, so the shortlist is deterministic, and at most
+    * shortlist·|queries| rows leave the GroupedTopK heaps with their
+    * vectors. */
+  private def shortlistRerank(scored: DataFrame, approx: String,
+      shortlist: Int): DataFrame =
+    graft.plans.GroupedTopK.topK(
+        scored.select("query_id", "neighbor_id", approx, "v_q", "v_n"),
+        Seq(col("query_id")), Seq(col(approx).desc, col("neighbor_id").asc),
+        shortlist)
+      .withColumn("sim", dot(col("v_q"), col("v_n")))
+
   /** Exact top-k cosine neighbors for each query vector (vec_id ∈ queryIds).
     * Embeddings are L2-normalized ⇒ cosine = dot. */
   def knnBrute(emb: DataFrame, queryIds: Seq[Long], k: Int): DataFrame = {
@@ -209,14 +225,8 @@ object Similarity {
     val qscored = corpus
       .join(broadcast(queries), col("query_id") =!= col("neighbor_id"))
       .withColumn("qdot", dot(col("c_q"), col("c_n")))
-    // (qdot desc, neighbor_id asc) is total → deterministic shortlist;
-    // ≤ shortlist·|queries| rows (with their vectors) leave the heaps
-    val short = graft.plans.GroupedTopK.topK(
-      qscored.select("query_id", "neighbor_id", "qdot", "v_q", "v_n"),
-      Seq(col("query_id")), Seq(col("qdot").desc, col("neighbor_id").asc),
-      shortlist)
-    val rescored = short.withColumn("sim", dot(col("v_q"), col("v_n")))
-    topKPerQuery(rescored, k).orderBy("query_id", "rank")
+    topKPerQuery(shortlistRerank(qscored, "qdot", shortlist), k)
+      .orderBy("query_id", "rank")
   }
 
   /** RANDOM-PROJECTION kNN — the dimensionality-reduction ANN path (the
@@ -245,13 +255,8 @@ object Similarity {
     val qscored = corpus
       .join(broadcast(queries), col("query_id") =!= col("neighbor_id"))
       .withColumn("pdot", dot(col("p_q"), col("p_n")))
-    // (pdot desc, neighbor_id asc) is total → deterministic shortlist
-    val short = graft.plans.GroupedTopK.topK(
-      qscored.select("query_id", "neighbor_id", "pdot", "v_q", "v_n"),
-      Seq(col("query_id")), Seq(col("pdot").desc, col("neighbor_id").asc),
-      shortlist)
-    val rescored = short.withColumn("sim", dot(col("v_q"), col("v_n")))
-    topKPerQuery(rescored, k).orderBy("query_id", "rank")
+    topKPerQuery(shortlistRerank(qscored, "pdot", shortlist), k)
+      .orderBy("query_id", "rank")
   }
 
   /** HYBRID RETRIEVAL by RECIPROCAL RANK FUSION (Cormack, Clarke &
@@ -292,7 +297,8 @@ object Similarity {
     * (driver-sized: m·ksub·(dim/m) doubles). */
   def pqCodebooks(emb: DataFrame, m: Int = 16, ksub: Int = 16,
       iters: Int = 2, dim: Int = 64): Array[Array[Array[Double]]] = {
-    require(dim % m == 0, s"dim $dim not divisible into $m subspaces")
+    require(m > 0 && dim % m == 0,
+      s"dim $dim not divisible into $m codebook subspaces")
     val sub = dim / m
     (0 until m).map { j =>
       val v = emb.select(col("vec_id"),
@@ -302,119 +308,78 @@ object Similarity {
     }.toArray
   }
 
-  /** PQ kNN by ASYMMETRIC DISTANCE COMPUTATION: the corpus is stored as
-    * m small codes per vector (m·log₂(ksub) bits — here 16×4 bits = 8
-    * bytes vs 256 bytes of raw floats, a 32×-smaller resident index at
-    * 100 TB); the
-    * query stays full-precision and builds a LOOKUP TABLE of m×ksub
-    * subspace dots ONCE, so every corpus candidate scores with m table
-    * lookups and m−1 adds — no float multiply touches the corpus at query
-    * time. Shortlist by ADC score (deterministic total order), then exact
-    * re-rank on the raw vectors — the same two-phase economics as
-    * [[projectedKnn]]/[[quantizedKnn]], with the best compression of the
-    * three. Codebooks/codes are deterministic (vec_id % ksub seeding,
-    * DECIMAL means), so the result replays bit-exactly. */
-  def pqKnn(emb: DataFrame, queryIds: Seq[Long], k: Int, m: Int = 16,
-      ksub: Int = 16, iters: Int = 2, shortlist: Int = 20,
-      dim: Int = 64): DataFrame =
-    pqKnnWith(emb, pqCodebooks(emb, m, ksub, iters, dim), queryIds, k,
-      shortlist, dim)
-
-  /** [[pqKnn]] over PREBUILT codebooks — the production shape: the
-    * codebook train is a registration-time artifact ([[IndexCache]], like
-    * [[ivfIndex]]), queries pay only encode + ADC scan. */
-  def pqKnnWith(emb: DataFrame, cbs: Array[Array[Array[Double]]],
-      queryIds: Seq[Long], k: Int, shortlist: Int = 20,
-      dim: Int = 64): DataFrame = {
+  /** Codebook geometry (m subspaces, ksub centroids each, subspace width),
+    * checked wherever codebooks meet vectors — the PQ and IVF-PQ builds
+    * and every search over their indexes, including ones restored by
+    * [[loadPqIndex]]/[[loadIvfPqIndex]]. Malformed codebooks would
+    * silently slice misaligned subspaces and return plausible-but-wrong
+    * neighbors, so they fail loudly instead (and BEFORE touching
+    * `cbs.head`: an empty array must hit the message, not a
+    * NoSuchElementException). */
+  private def pqGeometry(cbs: Array[Array[Array[Double]]]): (Int, Int, Int) = {
     val m = cbs.length
-    // mismatched codebooks would silently slice misaligned subspaces and
-    // return plausible-but-wrong neighbors — fail loudly instead (and
-    // BEFORE touching cbs.head: an empty array must hit the message, not
-    // a NoSuchElementException)
-    require(m > 0 && dim % m == 0,
-      s"dim $dim not divisible into $m codebook subspaces")
+    require(m > 0, "no codebook subspaces")
     val ksub = cbs.head.length
+    require(ksub > 0, "codebook 0 has no centroids")
+    val sub = cbs.head.head.length
     cbs.zipWithIndex.foreach { case (cb, j) =>
       require(cb.length == ksub,
         s"codebook $j has ${cb.length} centroids, subspace 0 has $ksub")
-      require(cb.forall(_.length == dim / m),
-        s"codebook $j sub-vector width != ${dim / m} (dim $dim / m $m)")
+      require(cb.forall(_.length == sub),
+        s"codebook $j sub-vector width != $sub (subspace 0's)")
     }
-    val sub = dim / m
-    val v = emb.select(col("vec_id"), asDouble("embedding").as("v"))
-    def subv(c: Column, j: Int) = slice(c, j * sub + 1, sub)
-    // corpus side: encode once (the persisted PQ index at scale)
-    val corpus = v
-      .withColumn("codes", array((0 until m).map(j =>
-        nearestCluster(subv(col("v"), j), cbs(j)).cast("int")): _*))
-      .select(col("vec_id").as("neighbor_id"), col("v").as("v_n"),
-        col("codes"))
-    // query side: lut[j][c] = q_subj · codebook_j[c], computed once per
-    // query row in the broadcast projection
-    val queries = v.where(col("vec_id").isin(queryIds: _*))
-      .withColumn("lut", array((0 until m).map(j =>
-        array((0 until ksub).map(c =>
-          dot(subv(col("v"), j),
-            array(cbs(j)(c).map(lit).toIndexedSeq: _*))): _*)): _*))
-      .select(col("vec_id").as("query_id"), col("v").as("v_q"), col("lut"))
-    val qscored = corpus
-      .join(broadcast(queries), col("query_id") =!= col("neighbor_id"))
-      // left fold, subspace order — the bit-reproducible ADC sum
-      .withColumn("adc", aggregate(
-        zip_with(col("codes"), col("lut"),
-          (cd, l) => element_at(l, cd + 1)),
-        lit(0.0d), (acc, x) => acc + x))
-    val short = graft.plans.GroupedTopK.topK(
-      qscored.select("query_id", "neighbor_id", "adc", "v_q", "v_n"),
-      Seq(col("query_id")), Seq(col("adc").desc, col("neighbor_id").asc),
-      shortlist)
-    val rescored = short.withColumn("sim", dot(col("v_q"), col("v_n")))
-    topKPerQuery(rescored, k).orderBy("query_id", "rank")
+    (m, ksub, sub)
   }
 
-  /** θ-BOUND EXACT flat-PQ kNN — the production PQ path, and the answer
-    * to the fixed-shortlist recall decay ([[suggestedShortlist]]'s √n
-    * growth only slows it): make the shortlist SELF-CERTIFYING instead of
-    * hoping it was wide enough. The encode stage stores, next to each
-    * vector's codes, its quantization residual norm ‖v − v̂‖; by
-    * Cauchy-Schwarz the true score obeys
-    * `q·v ≤ adc + ‖q‖·‖v − v̂‖` (adc = q·v̂ exactly, via the lookup
-    * table). So after the normal ADC scan + shortlist + exact re-rank
-    * gives a provisional k-th score θ, EVERY vector whose upper bound
-    * reaches θ is re-ranked too — and anything not re-ranked provably
-    * cannot enter the top-k. Recall is 1.0 BY CONSTRUCTION at every
-    * corpus size: the design point the fixed- and √n-shortlist variants
-    * hold only statistically becomes a certificate.
+  /** The ADC lookup table of one query vector `v`: lut[j][c] =
+    * v_subj · codebook_j[c], m×ksub subspace dots computed once per query
+    * row in the broadcast projection. Shared by the flat PQ and IVF-PQ
+    * scans. */
+  private def pqLut(v: Column, cbs: Array[Array[Array[Double]]]): Column = {
+    val (m, ksub, sub) = pqGeometry(cbs)
+    array((0 until m).map(j =>
+      array((0 until ksub).map(c =>
+        dot(slice(v, j * sub + 1, sub),
+          array(cbs(j)(c).map(lit).toIndexedSeq: _*))): _*)): _*)
+  }
+
+  /** The ADC sum of one coded vector against a query's [[pqLut]]: m table
+    * lookups, left-folded in subspace order — the bit-reproducible sum
+    * every oracle replays as `t0 + t1 + …`. */
+  private def pqAdc(codes: Column, lut: Column): Column =
+    aggregate(zip_with(codes, lut, (cd, l) => element_at(l, cd + 1)),
+      lit(0.0d), (acc, x) => acc + x)
+
+  /** PQ kNN by ASYMMETRIC DISTANCE COMPUTATION over a [[PqIndex]]: the
+    * corpus is stored as m small codes per vector (m·log₂(ksub) bits —
+    * here 16×4 bits = 8 bytes vs 256 bytes of raw floats, a 32×-smaller
+    * resident index at 100 TB); the query stays full-precision and builds
+    * a LOOKUP TABLE of m×ksub subspace dots ONCE ([[pqLut]]), so every
+    * corpus candidate scores with m table lookups and m−1 adds — no float
+    * multiply touches the corpus at query time. Shortlist by ADC score,
+    * then exact re-rank on the raw vectors ([[shortlistRerank]]) — the
+    * same two-phase economics as [[projectedKnn]]/[[quantizedKnn]], with
+    * the best compression of the three. The index is the registration-time
+    * artifact ([[IndexCache]], shared with [[pqKnnBoundWith]] and
+    * [[pqRangeSearch]]); queries pay only the lookup table + ADC scan.
+    * Codebooks/codes are deterministic (vec_id % ksub seeding, DECIMAL
+    * means), so the result replays bit-exactly.
     *
-    * Cost shape at 100 TB: the extra bound-filter pass reads only the
-    * 8-byte codes + one double per vector (the 32×-compressed resident
-    * index, ~3% of a raw-vector pass); full vectors page in solely for
-    * the certified candidates. On a TIGHTLY QUANTIZED corpus (clustered
-    * real-world embeddings: small residuals) the certified set is barely
-    * larger than k and the scan stays compressed; on an isotropic corpus
-    * (residual ≈ the vector itself — the regime where NO index wins) the
-    * bound certifies a large fraction and [[pqKnnBoundAuto]]'s cutover
-    * serves the codegen'd brute scan instead, same planner decision as
-    * [[knnLshAuto]]. */
-  def pqKnnBound(emb: DataFrame, cbs: Array[Array[Array[Double]]],
-      queryIds: Seq[Long], k: Int, shortlist: Int = 20,
-      dim: Int = 64): DataFrame = {
-    val v = emb.select(col("vec_id"), asDouble("embedding").as("v"))
-    // localCheckpoint: the encoded corpus feeds the θ broadcast job AND
-    // the certified re-rank — without it the 16 nearestCluster passes per
-    // row run once per consumer (the pqIndex convention)
-    val qscored = pqAdcScores(
-      pqEncode(v, cbs, dim).localCheckpoint(),
-      pqQueries(v, cbs, queryIds, dim))
-    pqBoundFinish(pqCertified(qscored, k, shortlist), k)
-  }
+    * A FIXED shortlist decays recall as the corpus grows
+    * ([[suggestedShortlist]]); the served PQ path is [[pqKnnBoundWith]],
+    * whose residual-norm certificate makes the result exact. */
+  def pqKnnWith(idx: PqIndex, queryIds: Seq[Long], k: Int,
+      shortlist: Int = 20): DataFrame =
+    topKPerQuery(shortlistRerank(pqScan(idx, queryIds), "adc", shortlist), k)
+      .orderBy("query_id", "rank")
 
-  /** PQ INDEX — [[pqKnnBound]]'s encode stage as a build-once-per-ingest
-    * artifact (the [[IvfIndex]]/[[graft.ops.Dedup.LshIndex]] lifecycle
+  /** PQ INDEX — the build-once-per-ingest artifact every flat-PQ search
+    * serves from (the [[IvfIndex]]/[[graft.ops.Dedup.LshIndex]] lifecycle
     * applied to flat PQ): the shared codebooks plus the encoded corpus
-    * (8-byte codes, the per-vector residual norm the θ-bound needs, and
-    * the raw vectors for the exact re-rank). Serving pays only the query
-    * lookup table + the compressed scan. */
+    * (neighbor_id, v_n, codes, res) — 8-byte codes, the per-vector
+    * residual norm the θ-bound of [[pqKnnBoundWith]] needs, and the raw
+    * vectors for the exact re-rank. Serving pays only the query lookup
+    * table + the compressed scan. */
   final case class PqIndex(cbs: Array[Array[Array[Double]]],
       corpus: DataFrame) {
     /** Corpus size — an ingest-time invariant, memoized so the serving
@@ -430,7 +395,7 @@ object Similarity {
       dim: Int = 64): PqIndex = {
     val cbs = pqCodebooks(emb, m, ksub, iters, dim)
     PqIndex(cbs, pqEncode(
-      emb.select(col("vec_id"), asDouble("embedding").as("v")), cbs, dim)
+      emb.select(col("vec_id"), asDouble("embedding").as("v")), cbs)
       .localCheckpoint())
   }
 
@@ -475,14 +440,17 @@ object Similarity {
     * WHY THE STALE CODEBOOKS ARE ACCEPTABLE until the next rebuild:
     * codebooks trained on data that included the deleted vectors encode
     * no retrievable row — they are k-means cell centers, an aggregate
-    * geometry — and every serving path over a [[PqIndex]]
-    * ([[pqKnnBoundWith]], [[pqRangeSearch]]) is CERTIFICATE-EXACT: the
+    * geometry — and the exact serving paths over a [[PqIndex]]
+    * ([[pqKnnBoundWith]], [[pqRangeSearch]]) are CERTIFICATE-EXACT: the
     * ADC scan only seeds θ / prunes via a Cauchy-Schwarz upper bound, and
     * survivors re-rank on the raw vectors. Worse-fitting codebooks can
     * only loosen the bound (more candidates certified into the exact
     * re-rank), never change a returned row — so delete-then-query is
     * bit-identical to rebuild-on-survivors-then-query, which
-    * [[graft.OpsSpec]] proves. */
+    * [[graft.OpsSpec]] proves. The fixed-shortlist [[pqKnnWith]] is
+    * approximate: over a deleted index the forgotten vector never serves,
+    * but a survivors-retrained index may shortlist differently (the
+    * [[ivfPqDelete]] contract). */
   def pqDelete(idx: PqIndex, deletes: DataFrame): PqIndex = {
     val del = broadcast(deletes.select(col("vec_id").as("__del")).distinct())
     PqIndex(idx.cbs, idx.corpus
@@ -490,32 +458,41 @@ object Similarity {
       .localCheckpoint())
   }
 
-  /** Vector dimensionality a [[PqIndex]] was built for — m subspaces ×
-    * subspace width. The index is the authority: a caller-supplied dim
-    * that disagreed with the codebook geometry would slice query vectors
-    * at the wrong offsets and return silently wrong results, so the
-    * serving entry points derive it instead of accepting it. */
-  private def pqDim(idx: PqIndex): Int =
-    idx.cbs.length * idx.cbs.head.head.length
-
-  /** θ-bound exact search over a PREBUILT [[PqIndex]] — the serving
-    * shape: no codebook train, no encode; queries resolve against the
-    * index corpus itself. Same certificate as [[pqKnnBound]], so the
-    * result is exact regardless of shortlist; `shortlist ≤ 0` (the
-    * default) sizes the θ-seeding pass by [[suggestedShortlist]] from the
-    * index corpus count — a too-small seed θ is still exact but certifies
-    * a larger-than-necessary fraction for the re-rank. Query dim comes
-    * from the index geometry ([[pqDim]]), never the caller. */
+  /** θ-BOUND EXACT flat-PQ kNN over a PREBUILT [[PqIndex]] — the
+    * production PQ path, and the answer to the fixed-shortlist recall
+    * decay of [[pqKnnWith]] ([[suggestedShortlist]]'s √n growth only
+    * slows it): make the shortlist SELF-CERTIFYING instead of hoping it
+    * was wide enough. The index stores, next to each vector's codes, its
+    * quantization residual norm ‖v − v̂‖; by Cauchy-Schwarz the true score
+    * obeys `q·v ≤ adc + ‖q‖·‖v − v̂‖` (adc = q·v̂ exactly, via the lookup
+    * table). So after the normal ADC scan + shortlist + exact re-rank
+    * gives a provisional k-th score θ, EVERY vector whose upper bound
+    * reaches θ is re-ranked too — and anything not re-ranked provably
+    * cannot enter the top-k. Recall is 1.0 BY CONSTRUCTION at every
+    * corpus size, regardless of shortlist; `shortlist ≤ 0` (the default)
+    * sizes the θ-seeding pass by [[suggestedShortlist]] from the index
+    * corpus count — a too-small seed θ is still exact but certifies a
+    * larger-than-necessary fraction for the re-rank. Queries resolve
+    * against the index corpus itself; their dim comes from the codebook
+    * geometry, never the caller.
+    *
+    * Cost shape at 100 TB: the extra bound-filter pass reads only the
+    * 8-byte codes + one double per vector (the 32×-compressed resident
+    * index, ~3% of a raw-vector pass); full vectors page in solely for
+    * the certified candidates. On a TIGHTLY QUANTIZED corpus (clustered
+    * real-world embeddings: small residuals) the certified set is barely
+    * larger than k and the scan stays compressed; on an isotropic corpus
+    * (residual ≈ the vector itself — the regime where NO index wins) the
+    * bound certifies a large fraction and [[pqKnnBoundAuto]]'s cutover
+    * serves the codegen'd brute scan instead, same planner decision as
+    * [[knnLshAuto]]. */
   def pqKnnBoundWith(idx: PqIndex, queryIds: Seq[Long], k: Int,
       shortlist: Int = 0): DataFrame = {
     val sl =
       if (shortlist > 0) shortlist
       else suggestedShortlist(idx.size, k)
-    val qv = idx.corpus.select(col("neighbor_id").as("vec_id"),
-      col("v_n").as("v"))
-    val qscored = pqAdcScores(idx.corpus,
-      pqQueries(qv, idx.cbs, queryIds, pqDim(idx)))
-    pqBoundFinish(pqCertified(qscored, k, sl), k)
+    pqBoundFinish(pqBounded(pqScan(idx, queryIds), k, sl)
+      .where(col("certified")), k)
   }
 
   /** EXACT RANGE SEARCH over a [[PqIndex]] — every neighbor with
@@ -535,10 +512,7 @@ object Similarity {
     * deterministic shape; query dim derives from the index geometry. */
   def pqRangeSearch(idx: PqIndex, queryIds: Seq[Long], minSim: Double)
       : DataFrame = {
-    val qv = idx.corpus.select(col("neighbor_id").as("vec_id"),
-      col("v_n").as("v"))
-    val cand = pqAdcScores(idx.corpus,
-        pqQueries(qv, idx.cbs, queryIds, pqDim(idx)))
+    val cand = pqScan(idx, queryIds)
       .where(col("adc") + col("qn") * col("res") >=
         lit(minSim - pqEps * (math.abs(minSim) + 1.0)))
     cand.withColumn("sim", dot(col("v_q"), col("v_n")))
@@ -554,19 +528,14 @@ object Similarity {
     * `res` = ‖v − v̂‖, the per-vector ADC error bound stored WITH the
     * codes (one extra double beside the 8-byte code word). */
   private def pqEncode(v: DataFrame,
-      cbs: Array[Array[Array[Double]]], dim: Int): DataFrame = {
-    val m = cbs.length
-    require(m > 0 && dim % m == 0,
-      s"dim $dim not divisible into $m codebook subspaces")
-    val ksub = cbs.head.length
-    require(cbs.forall(_.length == ksub), "ragged codebooks")
-    val sub = dim / m
-    def subv(c: Column, j: Int) = slice(c, j * sub + 1, sub)
+      cbs: Array[Array[Array[Double]]]): DataFrame = {
+    val (m, _, sub) = pqGeometry(cbs)
     val decoded = flatten(array((0 until m).map(j =>
       element_at(typedLit(cbs(j).map(_.toSeq).toSeq),
         col("codes").getItem(j) + 1)): _*))
     v.withColumn("codes", array((0 until m).map(j =>
-        nearestCluster(subv(col("v"), j), cbs(j)).cast("int")): _*))
+        nearestCluster(slice(col("v"), j * sub + 1, sub), cbs(j))
+          .cast("int")): _*))
       .withColumn("res", sqrt(aggregate(
         zip_with(col("v"), decoded, (a, b) => (a - b) * (a - b)),
         lit(0.0d), (acc, x) => acc + x)))
@@ -574,33 +543,21 @@ object Similarity {
         col("codes"), col("res"))
   }
 
-  /** Query side of the bound search: per query, the m×ksub ADC lookup
-    * table and the query norm the Cauchy-Schwarz bound scales by. */
-  private def pqQueries(v: DataFrame, cbs: Array[Array[Array[Double]]],
-      queryIds: Seq[Long], dim: Int): DataFrame = {
-    val m = cbs.length
-    val ksub = cbs.head.length
-    val sub = dim / m
-    def subv(c: Column, j: Int) = slice(c, j * sub + 1, sub)
-    v.where(col("vec_id").isin(queryIds: _*))
-      .withColumn("lut", array((0 until m).map(j =>
-        array((0 until ksub).map(c =>
-          dot(subv(col("v"), j),
-            array(cbs(j)(c).map(lit).toIndexedSeq: _*))): _*)): _*))
-      .withColumn("qn", sqrt(dot(col("v"), col("v"))))
-      .select(col("vec_id").as("query_id"), col("v").as("v_q"),
-        col("lut"), col("qn"))
-  }
-
-  /** The compressed scan: every (query, vector) pair scores with m table
-    * lookups and m−1 adds — adc = q·v̂ exactly. */
-  private def pqAdcScores(corpus: DataFrame, queries: DataFrame): DataFrame =
-    corpus
+  /** The compressed scan of a [[PqIndex]]: every (query, vector) pair of
+    * the index corpus — queries resolve in the corpus itself, so a
+    * deleted vector is no query either — scored with m table lookups and
+    * m−1 adds, adc = q·v̂ exactly. Each row also carries the query norm
+    * `qn` the Cauchy-Schwarz bound scales by, and the vector's residual
+    * `res`. */
+  private def pqScan(idx: PqIndex, queryIds: Seq[Long]): DataFrame = {
+    val queries = idx.corpus.where(col("neighbor_id").isin(queryIds: _*))
+      .select(col("neighbor_id").as("query_id"), col("v_n").as("v_q"))
+      .withColumn("lut", pqLut(col("v_q"), idx.cbs))
+      .withColumn("qn", sqrt(dot(col("v_q"), col("v_q"))))
+    idx.corpus
       .join(broadcast(queries), col("query_id") =!= col("neighbor_id"))
-      .withColumn("adc", aggregate(
-        zip_with(col("codes"), col("lut"),
-          (cd, l) => element_at(l, cd + 1)),
-        lit(0.0d), (acc, x) => acc + x))
+      .withColumn("adc", pqAdc(col("codes"), col("lut")))
+  }
 
   /** Relative summation-error margin for the certificate filters. The
     * Cauchy-Schwarz bound holds in real arithmetic, but `adc` is the
@@ -630,57 +587,35 @@ object Similarity {
         coalesce(col("theta") - lit(pqEps) * (abs(col("theta")) + 1),
           lit(Double.MinValue)))
 
-  /** CERTIFIED candidate set — [[pqBounded]]'s marked rows. */
-  private def pqCertified(qscored: DataFrame, k: Int,
-      shortlist: Int): DataFrame =
-    pqBounded(qscored, k, shortlist).where(col("certified"))
-
   /** Exact re-rank of the certified set → final top-k. */
-  private def pqBoundFinish(cand: DataFrame, k: Int): DataFrame = {
-    val rescored = cand.withColumn("sim", dot(col("v_q"), col("v_n")))
-    topKPerQuery(rescored.select("query_id", "neighbor_id", "sim"), k)
+  private def pqBoundFinish(cand: DataFrame, k: Int): DataFrame =
+    topKPerQuery(cand.withColumn("sim", dot(col("v_q"), col("v_n"))), k)
       .orderBy("query_id", "rank")
-  }
 
   /** Provisional exact k-th score per query: ADC-shortlist, re-rank
     * exactly, take the k-th (the θ the bound certifies against). Queries
     * with fewer than k candidates get no row (the caller treats a missing
     * θ as −∞ and certifies everything). */
   private def pqTheta(qscored: DataFrame, k: Int, shortlist: Int)
-      : DataFrame = {
-    val short = graft.plans.GroupedTopK.topK(
-      qscored.select("query_id", "neighbor_id", "adc", "v_q", "v_n"),
-      Seq(col("query_id")), Seq(col("adc").desc, col("neighbor_id").asc),
-      shortlist)
-    val rescored = short.withColumn("sim", dot(col("v_q"), col("v_n")))
-    topKPerQuery(rescored.select("query_id", "neighbor_id", "sim"), k)
+      : DataFrame =
+    topKPerQuery(shortlistRerank(qscored, "adc", shortlist), k)
       .where(col("rank") === k)
       .select(col("query_id"), col("sim").as("theta"))
-  }
 
-  /** [[pqKnnBound]] with sizing + the index-vs-scan planner decision
+  /** [[pqKnnBoundWith]] with sizing + the index-vs-scan planner decision
     * wired in: √n shortlist seeds θ, then ONE pass over the compressed
     * codes counts how much of the corpus the bound certifies. When that
     * fraction reaches `bruteCutover`, re-ranking the certified set would
     * read a comparable share of the raw vectors through a join that the
     * codegen'd brute scan reads ONCE without join machinery — so the op
-    * serves [[knnBrute]] (also exact). Either way the served result is
-    * EXACT (recall 1.0); the decision only picks the cheaper plan, like
-    * [[knnLshAuto]]'s cutover. Returns (frame, shortlist, certified
-    * fraction, cutover engaged). */
-  def pqKnnBoundAuto(emb: DataFrame, queryIds: Seq[Long], k: Int,
-      m: Int = 16, ksub: Int = 16, iters: Int = 2, dim: Int = 64,
+    * serves [[knnBrute]] over the index corpus (also exact). Either way
+    * the served result is EXACT (recall 1.0); the decision only picks the
+    * cheaper plan, like [[knnLshAuto]]'s cutover. Returns (frame,
+    * shortlist, certified fraction, cutover engaged). */
+  def pqKnnBoundAuto(idx: PqIndex, queryIds: Seq[Long], k: Int,
       bruteCutover: Double = 0.5): (DataFrame, Int, Double, Boolean) = {
-    val n = emb.count()
-    val cbs = pqCodebooks(emb, m, ksub, iters, dim)
-    val v = emb.select(col("vec_id"), asDouble("embedding").as("v"))
-    // localCheckpoint: the encode feeds the θ job, the decision count,
-    // and the final re-rank — three consumers, one materialization
-    val qscored = pqAdcScores(
-      pqEncode(v, cbs, dim).localCheckpoint(),
-      pqQueries(v, cbs, queryIds, dim))
-    val shortlist = suggestedShortlist(n, k)
-    val bounded = pqBounded(qscored, k, shortlist)
+    val shortlist = suggestedShortlist(idx.size, k)
+    val bounded = pqBounded(pqScan(idx, queryIds), k, shortlist)
     // decision pass: codes + res only — the 32×-compressed index. ONE
     // aggregation counts candidates AND certified rows, so the fraction's
     // denominator is the actual candidate count (self-pairs excluded,
@@ -693,7 +628,8 @@ object Similarity {
     val certified = if (counts.isNullAt(1)) 0L else counts.getLong(1)
     val frac = certified.toDouble / math.max(1L, total)
     if (frac >= bruteCutover)
-      (knnBrute(emb, queryIds, k), shortlist, frac, true)
+      (knnBrute(idx.corpus.select(col("neighbor_id").as("vec_id"),
+        col("v_n").as("embedding")), queryIds, k), shortlist, frac, true)
     else
       (pqBoundFinish(bounded.where(col("certified")), k), shortlist, frac,
         false)
@@ -710,25 +646,10 @@ object Similarity {
     * roughly flat at these scales; floor 4k so tiny corpora still re-rank
     * a meaningful candidate pool. The third sizing knob next to
     * [[graft.ops.Dedup.suggestedLshBits]]/[[suggestedIvfLists]], wired
-    * into the *Auto entry points below and measured by
-    * [[graft.tools.ScaleSweep]]. */
+    * into [[pqKnnBoundWith]]/[[pqKnnBoundAuto]]/[[knnLshAuto]] and
+    * measured by [[graft.tools.ScaleSweep]]. */
   def suggestedShortlist(n: Long, k: Int): Int =
     math.max(4 * k, math.round(math.sqrt(n.toDouble)).toInt)
-
-  /** [[pqKnn]] with [[suggestedShortlist]] wired in (codebooks still train
-    * inline — memoize via [[graft.ops.IndexCache]] in a serving path).
-    * Returns (frame, shortlist used).
-    *
-    * MEASUREMENT path, not the served one: √n growth slows the
-    * fixed-shortlist recall decay but holds no target (BENCH_scaling
-    * knn_pq_auto vs knn_pq rows). Serving goes through [[pqKnnBoundAuto]],
-    * whose residual-norm certificate makes the result EXACT at every
-    * corpus size — this entry point stays as the documented contrast. */
-  def pqKnnAuto(emb: DataFrame, queryIds: Seq[Long], k: Int, m: Int = 16,
-      ksub: Int = 16, iters: Int = 2, dim: Int = 64): (DataFrame, Int) = {
-    val shortlist = suggestedShortlist(emb.count(), k)
-    (pqKnn(emb, queryIds, k, m, ksub, iters, shortlist, dim), shortlist)
-  }
 
   /** The IVF-PQ index (Jégou et al. §IV, "IVFADC" — the layout
     * billion-scale ANN deployments actually run): an IVF coarse quantizer
@@ -759,7 +680,8 @@ object Similarity {
   def ivfPqIndex(emb: DataFrame, nlist: Int = 8, m: Int = 16,
       ksub: Int = 16, ivfIters: Int = 2, pqIters: Int = 2,
       dim: Int = 64): IvfPqIndex = {
-    require(dim % m == 0, s"dim $dim not divisible into $m subspaces")
+    require(m > 0 && dim % m == 0,
+      s"dim $dim not divisible into $m codebook subspaces")
     val sub = dim / m
     val cs = kmeansCentroids(emb, nlist, ivfIters)
     val v = emb.select(col("vec_id"), asDouble("embedding").as("v"))
@@ -844,7 +766,7 @@ object Similarity {
     * `nprobe` cells' CODES with ADC (approx dot = q·c_cell + Σ_j
     * lut[j][code_j], the lookup table built once per query), shortlist on
     * the approximate score, exact re-rank on the raw vectors. Replaces
-    * [[pqKnn]]'s full-corpus ADC scan with a probed-cell scan — per-query
+    * [[pqKnnWith]]'s full-corpus ADC scan with a probed-cell scan — per-query
     * work drops from O(n·m lookups) to O(nprobe·n/nlist·m), the IVF-PQ
     * economics: probe cost ~flat as the corpus grows with √n-sized nlist
     * while the resident index stays 32× compressed. */
@@ -852,17 +774,10 @@ object Similarity {
       nprobe: Int = 3, shortlist: Int = 20, boundProbe: Boolean = false)
       : DataFrame = {
     val IvfPqIndex(cs, cbs, corpus, cellRes) = idx
-    val m = cbs.length
-    val ksub = cbs.head.length
-    val sub = cbs.head.head.length
-    def subv(c: Column, j: Int) = slice(c, j * sub + 1, sub)
     val queries = corpus.where(col("neighbor_id").isin(queryIds: _*))
       .select(col("neighbor_id").as("query_id"), col("v_n").as("v_q"))
-      // lut[j][c] = q_subj · codebook_j[c] — shared across cells
-      .withColumn("lut", array((0 until m).map(j =>
-        array((0 until ksub).map(c =>
-          dot(subv(col("v_q"), j),
-            array(cbs(j)(c).map(lit).toIndexedSeq: _*))): _*)): _*))
+      // one lookup table per query, shared across cells
+      .withColumn("lut", pqLut(col("v_q"), cbs))
     // coarse ranking — same (score desc, cdot desc, cell desc) total order
     // as knnIvfProbe's seed probes, replayed by the s14 oracle
     val qcells = queries
@@ -873,25 +788,16 @@ object Similarity {
         dot(col("v_q"), col("c")).as("cdot"))
     val probeW = Window.partitionBy("query_id")
       .orderBy(col("score").desc, col("cdot").desc, col("cell_q").desc)
-    // ADC scan of a probe set + exact re-rank of the shortlist — the
-    // shared per-phase kernel
-    def adcRerank(probes: DataFrame): DataFrame = {
-      val qscored = corpus.join(broadcast(probes),
+    // ADC scan of a probe set + exact re-rank of the shortlist, per phase
+    def adcRerank(probes: DataFrame): DataFrame =
+      shortlistRerank(corpus.join(broadcast(probes),
           col("cell_q") === col("cell_n") &&
             col("query_id") =!= col("neighbor_id"))
-        // adc = q·c_cell + Σ_j lut[j][code_j]; the Σ is the same left fold
-        // as pqKnnWith, added AFTER (0.0 + t0 ≡ t0, so the grouping matches
-        // the oracle's `cdot + (t0 + t1 + …)` exactly)
-        .withColumn("adc", col("cdot") + aggregate(
-          zip_with(col("codes"), col("lut"),
-            (cd, l) => element_at(l, cd + 1)),
-          lit(0.0d), (acc, x) => acc + x))
-      val short = graft.plans.GroupedTopK.topK(
-        qscored.select("query_id", "neighbor_id", "adc", "v_q", "v_n"),
-        Seq(col("query_id")), Seq(col("adc").desc, col("neighbor_id").asc),
-        shortlist)
-      short.withColumn("sim", dot(col("v_q"), col("v_n")))
-    }
+        // adc = q·c_cell + Σ_j lut[j][code_j]; the Σ is the flat-PQ left
+        // fold, added AFTER (0.0 + t0 ≡ t0, so the grouping matches the
+        // oracle's `cdot + (t0 + t1 + …)` exactly)
+        .withColumn("adc", col("cdot") + pqAdc(col("codes"), col("lut"))),
+        "adc", shortlist)
     val seeds = qcells.withColumn("__r", row_number().over(probeW))
       .where(col("__r") <= nprobe)
       .select("query_id", "v_q", "lut", "cell_q", "cdot")
@@ -939,7 +845,7 @@ object Similarity {
   /** Topic-clustering ASSIGNMENT — deterministic k-means surfaced as a
     * first-class corpus operator (the "cluster the embedding space, then
     * sample/filter per topic" step of a curation pipeline; same coarse
-    * quantizer [[knnIvf]] uses as its index). Output is one (vec_id,
+    * quantizer [[knnIvfProbe]] uses as its index). Output is one (vec_id,
     * cluster) row per vector; every arithmetic step is the decimal-mean /
     * sequential-dot recipe, so the full iterative procedure replays
     * bit-exactly in the SQL oracle (unrolled, [[graft.SparkEntry]] s06).
@@ -1211,20 +1117,17 @@ object Similarity {
     IvfPqIndex(idx.cs, idx.cbs, corpus, cellResFor(corpus, idx.cs))
   }
 
-  /** IVF ANN with an EXACTNESS guarantee: k-means coarse quantizer over the
-    * corpus (one assignment shuffle); each query probes its `nprobe` nearest
-    * cells for a provisional k-th score θ, then additionally probes every
-    * cell whose upper bound q·c_j + max‖x−c_j‖ (Cauchy-Schwarz, ‖q‖=1) can
-    * still reach θ. Any vector with sim > θ lives in a probed cell, so the
+  /** IVF ANN with an EXACTNESS guarantee, probing a prebuilt [[IvfIndex]]
+    * (k-means coarse quantizer over the corpus, one assignment shuffle —
+    * [[ivfIndex]]): each query probes its `nprobe` nearest cells for a
+    * provisional k-th score θ, then additionally probes every cell whose
+    * upper bound q·c_j + max‖x−c_j‖ (Cauchy-Schwarz, ‖q‖=1) can still
+    * reach θ. Any vector with sim > θ lives in a probed cell, so the
     * result equals exhaustive search — while clustered corpora prune most
-    * cells. On adversarially uniform data the bound degrades gracefully to a
-    * full scan (the curse of dimensionality, not an implementation limit). */
-  def knnIvf(emb: DataFrame, queryIds: Seq[Long], k: Int, nlist: Int,
-      nprobe: Int, iters: Int = 3): DataFrame =
-    knnIvfProbe(ivfIndex(emb, nlist, iters), queryIds, k, nprobe)
-
-  /** The per-query half of [[knnIvf]]: probe a prebuilt [[IvfIndex]].
-    * Queries are looked up in the index itself (vec_id ∈ queryIds). */
+    * cells. On adversarially uniform data the bound degrades gracefully to
+    * a full scan (the curse of dimensionality, not an implementation
+    * limit). Queries are looked up in the index itself (vec_id ∈
+    * queryIds). */
   def knnIvfProbe(idx: IvfIndex, queryIds: Seq[Long], k: Int,
       nprobe: Int): DataFrame = {
     val IvfIndex(cs, corpus, cellRes) = idx

@@ -24,7 +24,7 @@ import graft.ops.{Dedup, Similarity}
   * Fixed-parameter variants are SKIPPED at a factor once their estimated
   * within-bucket pair work exceeds `pairBudget` (that blowup is the point —
   * the skip is recorded in the JSON); auto variants run at every factor.
-  * knnIvf is exactness-guaranteed, so its probe results are additionally
+  * knnIvfProbe is exactness-guaranteed, so its probe results are additionally
   * asserted equal to brute force at every factor — scale-correctness, not
   * just scale-speed.
   *
@@ -395,21 +395,23 @@ object ScaleSweep {
     }
     ivf("ivf_build_fixed", "ivf_probe_fixed", 8)
     ivf("ivf_build_auto", "ivf_probe_auto", nlistAuto)
-    // PQ/ADC: codebook train + encode + lookup-table scan in one op —
-    // every stage is a linear corpus pass (16 subspace k-means of 4-dim
-    // slices, then an m-lookup scan per candidate); the 8-byte codes are
-    // the resident index, so the scan reads 32× fewer bytes than brute
+    // PQ/ADC: codebook train + encode + lookup-table scan, the index build
+    // timed with the search — every stage is a linear corpus pass (16
+    // subspace k-means of 4-dim slices, then an m-lookup scan per
+    // candidate); the 8-byte codes are the resident index, so the scan
+    // reads 32× fewer bytes than brute
     time("knn_pq") {
-      val rows = Similarity.pqKnn(emb, qids, K, shortlist = 100, dim = Dim)
-        .collect()
+      val rows = Similarity.pqKnnWith(Similarity.pqIndex(emb, dim = Dim),
+        qids, K, shortlist = 100).collect()
       (rows.length, Map("m" -> "16", "ksub" -> "16",
         "shortlist" -> "100") ++ knnMetrics(sets(rows)))
     }
     // the third sizing knob: shortlist grows as sqrt(n) so recall@k holds
     // while the fixed-100 row above decays (same codebooks, same scan)
     time("knn_pq_auto") {
-      val (df, shortlist) = Similarity.pqKnnAuto(emb, qids, K, dim = Dim)
-      val rows = df.collect()
+      val shortlist = Similarity.suggestedShortlist(n, K)
+      val rows = Similarity.pqKnnWith(Similarity.pqIndex(emb, dim = Dim),
+        qids, K, shortlist).collect()
       (rows.length, Map("m" -> "16", "ksub" -> "16",
         "shortlist" -> shortlist.toString) ++ knnMetrics(sets(rows)))
     }
@@ -423,8 +425,8 @@ object ScaleSweep {
     // tips to the scan — clustered real-world embeddings keep the
     // compressed path (OpsSpec pins both regimes)
     time("knn_pq_bound") {
-      val (df, shortlist, frac, cut) =
-        Similarity.pqKnnBoundAuto(emb, qids, K, dim = Dim)
+      val (df, shortlist, frac, cut) = Similarity.pqKnnBoundAuto(
+        Similarity.pqIndex(emb, dim = Dim), qids, K)
       val rows = df.collect()
       (rows.length, Map("m" -> "16", "ksub" -> "16",
         "shortlist" -> shortlist.toString,

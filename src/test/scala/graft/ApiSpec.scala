@@ -194,6 +194,10 @@ class ApiSpec extends AnyFunSuite {
       assert(rows(Similarity.pqKnnBoundWith(
         peek[Similarity.PqIndex]("pqidx:forget"), Seq(0L, 1L, 2L), 5))
         .sameElements(truth))
+      // the fixed-shortlist PQ search (s12) serves from the same index
+      assert(rows(Similarity.pqKnnWith(
+        peek[Similarity.PqIndex]("pqidx:forget"), Seq(0L, 1L, 2L), 5))
+        .forall(_._3 != 7L))
       assert(rows(Similarity.knnIvfProbe(
         peek[Similarity.IvfIndex]("ivf:forget"), Seq(0L, 1L, 2L), 5, 3))
         .sameElements(truth))

@@ -6,9 +6,10 @@ import SparkTestSession.spark
 
 /** Job budgets for the cube fast tail, for the pipeline ops that
   * iterate over a small state (MMR's shortlists, TextRank's vocabulary
-  * graph) and for the n-gram similarity joins: there per-action
-  * scheduling, not compute, dominates, so a change that adds Spark jobs
-  * to these queries is a regression even when every result stays right.
+  * graph), for the n-gram similarity joins and for the two-phase vector
+  * searches: there per-action scheduling, not compute, dominates, so a
+  * change that adds Spark jobs to these queries is a regression even when
+  * every result stays right.
   * Each query runs once to warm the catalog's memoization, then once
   * counted, written in full through the `noop` sink. */
 class JobBudgetSpec extends AnyFunSuite {
@@ -25,7 +26,15 @@ class JobBudgetSpec extends AnyFunSuite {
     "d04_ngram_jaccard" -> 12,
     "d24_ngram_jaccard_auto" -> 15,
     "d19_containment" -> 13,
-    "d23_containment_auto" -> 16)
+    "d23_containment_auto" -> 16,
+    // the two-phase vector searches; s12, s15 and s16 serve from one
+    // memoized PQ index, so none of them re-trains or re-encodes per run
+    "s05_knn_quantized" -> 5,
+    "s09_knn_projected" -> 5,
+    "s12_knn_pq" -> 5,
+    "s14_knn_ivfpq" -> 7,
+    "s15_knn_pq_exact" -> 8,
+    "s16_knn_range" -> 5)
 
   for ((q, budget) <- budgets) test(s"$q runs at most $budget Spark jobs") {
     val fn = SparkEntry.queries(q)

@@ -593,7 +593,8 @@ class OpsSpec extends AnyFunSuite {
     val k = 5
     val brute = Similarity.knnBrute(emb, qids, k).collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3)))
-    val ivf = Similarity.knnIvf(emb, qids, k, nlist = 8, nprobe = 3).collect()
+    val ivf = Similarity.knnIvfProbe(Similarity.ivfIndex(emb, nlist = 8),
+        qids, k, nprobe = 3).collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3)))
     assert(ivf.sameElements(brute))
   }
@@ -2555,17 +2556,18 @@ class OpsSpec extends AnyFunSuite {
       .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3)))
     // shortlist = whole corpus → the exact re-rank recovers brute force
     // regardless of ADC quantization error
-    val full = Similarity.pqKnn(emb, qids, k,
+    val idx = Similarity.pqIndex(emb, m = 16, ksub = 16, iters = 2)
+    val full = Similarity.pqKnnWith(idx, qids, k,
         shortlist = emb.count().toInt).collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3)))
     assert(full.sameElements(brute))
     // codebooks: m subspaces × ksub centroids × dim/m coords
-    val cbs = Similarity.pqCodebooks(emb, m = 16, ksub = 16, iters = 2)
+    val cbs = idx.cbs
     assert(cbs.length == 16 && cbs.forall(_.length == 16) &&
       cbs.flatten.forall(_.length == 4))
     // default shortlist: every returned sim is the TRUE dot product (the
     // re-rank is exact) even where the ADC shortlist diverges from brute
-    val pq = Similarity.pqKnn(emb, qids, k).collect()
+    val pq = Similarity.pqKnnWith(idx, qids, k).collect()
       .map(r => (r.getLong(0), r.getLong(2)) -> r.getDouble(3))
     val bruteMap = brute.map(r => (r._1, r._3) -> r._4).toMap
     pq.foreach { case (key, sim) =>
@@ -2578,7 +2580,7 @@ class OpsSpec extends AnyFunSuite {
     val overlap20 = pq.count { case (key, _) => bruteMap.contains(key) }
     assert(overlap20 >= (0.5 * brute.length).toInt,
       s"ADC recall $overlap20/${brute.length} at shortlist 20")
-    val wide = Similarity.pqKnn(emb, qids, k, shortlist = 100).collect()
+    val wide = Similarity.pqKnnWith(idx, qids, k, shortlist = 100).collect()
       .map(r => (r.getLong(0), r.getLong(2)))
     val overlap = wide.count(bruteMap.contains)
     assert(overlap >= (0.8 * brute.length).toInt,
@@ -2593,15 +2595,15 @@ class OpsSpec extends AnyFunSuite {
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3)))
     val brute = rows(Similarity.knnBrute(emb, qids, k))
-    val cbs = Similarity.pqCodebooks(emb, 16, 16, 2)
+    val idx = Similarity.pqIndex(emb, 16, 16, 2)
     // shortlist 8 < the 20 the plain path needs for even 0.68 recall here
     // — the residual bound re-ranks whatever could still beat θ, so the
     // result matches brute force bit-for-bit
-    val bound = rows(Similarity.pqKnnBound(emb, cbs, qids, k, 8))
+    val bound = rows(Similarity.pqKnnBoundWith(idx, qids, k, 8))
     assert(bound.sameElements(brute))
     // isotropic fixture: residual ≈ vector, the bound certifies most of
     // the corpus → the planner serves the (also exact) brute scan
-    val (iso, _, isoFrac, isoCut) = Similarity.pqKnnBoundAuto(emb, qids, k)
+    val (iso, _, isoFrac, isoCut) = Similarity.pqKnnBoundAuto(idx, qids, k)
     assert(isoCut, s"expected brute cutover, certified frac $isoFrac")
     assert(rows(iso).sameElements(brute))
     // clustered fixture (8 tight clusters): residuals are tiny, the bound
@@ -2620,7 +2622,8 @@ class OpsSpec extends AnyFunSuite {
     }.toDF("vec_id", "embedding")
     val cqids = (0L until 8L).toSeq
     val cbrute = rows(Similarity.knnBrute(cemb, cqids, k))
-    val (cl, _, clFrac, clCut) = Similarity.pqKnnBoundAuto(cemb, cqids, k)
+    val (cl, _, clFrac, clCut) =
+      Similarity.pqKnnBoundAuto(Similarity.pqIndex(cemb), cqids, k)
     assert(!clCut && clFrac < 0.5,
       s"expected index path on clustered data, certified frac $clFrac")
     assert(rows(cl).sameElements(cbrute))
@@ -4431,16 +4434,17 @@ class OpsSpec extends AnyFunSuite {
         .intersect(brute.getOrElse(q, Set.empty[Long])).size.toDouble / k)
         .sum / qids.size
     }
-    val starved = recallOf(Similarity.pqKnn(emb, qids, k, shortlist = k))
-    val (autoDf, autoShortlist) = Similarity.pqKnnAuto(emb, qids, k)
+    val idx = Similarity.pqIndex(emb)
+    val starved = recallOf(Similarity.pqKnnWith(idx, qids, k, shortlist = k))
+    val autoShortlist = Similarity.suggestedShortlist(idx.size, k)
     assert(autoShortlist == Similarity.suggestedShortlist(emb.count(), k))
-    val auto = recallOf(autoDf)
+    val auto = recallOf(Similarity.pqKnnWith(idx, qids, k, autoShortlist))
     assert(auto >= starved,
       s"auto shortlist $autoShortlist recall $auto < fixed-$k $starved")
     // recall is monotone in shortlist width — the property the sqrt(n)
     // growth converts into recall held across corpus growth
     val wide = recallOf(
-      Similarity.pqKnn(emb, qids, k, shortlist = 4 * autoShortlist))
+      Similarity.pqKnnWith(idx, qids, k, shortlist = 4 * autoShortlist))
     assert(wide >= auto,
       s"recall not monotone in shortlist: $auto -> $wide")
   }
@@ -4469,12 +4473,18 @@ class OpsSpec extends AnyFunSuite {
     val wide = Similarity.knnIvfPqProbe(idx, Seq(3L), 5, nprobe = 8)
       .collect()
     assert(wide.head.getLong(2) == 90003L)
-    // mismatched codebook geometry fails loudly instead of mis-slicing
-    val ex = intercept[IllegalArgumentException] {
-      Similarity.pqKnnWith(emb, Array(Array(Array(1.0, 2.0, 3.0))),
-        Seq(0L), 5)
+    // mismatched codebook geometry fails loudly instead of mis-slicing —
+    // at search time too, so a malformed loaded index cannot serve
+    val corpus = Similarity.pqIndex(emb).corpus
+    for (badCbs <- Seq(Array.empty[Array[Array[Double]]],
+        Array(Array(Array(1.0, 2.0, 3.0)), Array(Array(1.0, 2.0))),
+        Array(Array(Array(1.0, 2.0)), Array(Array(1.0, 2.0), Array(3.0, 4.0)))))
+    {
+      val ex = intercept[IllegalArgumentException] {
+        Similarity.pqKnnWith(Similarity.PqIndex(badCbs, corpus), Seq(0L), 5)
+      }
+      assert(ex.getMessage.contains("codebook"))
     }
-    assert(ex.getMessage.contains("codebook"))
   }
 
   test("exact-substring dedup: 60-token shared span trimmed everywhere " +
