@@ -297,15 +297,21 @@ object Similarity {
     * (driver-sized: m·ksub·(dim/m) doubles). */
   def pqCodebooks(emb: DataFrame, m: Int = 16, ksub: Int = 16,
       iters: Int = 2, dim: Int = 64): Array[Array[Array[Double]]] = {
-    require(m > 0 && dim % m == 0,
-      s"dim $dim not divisible into $m codebook subspaces")
-    val sub = dim / m
+    val sub = pqSubWidth(dim, m)
     (0 until m).map { j =>
       val v = emb.select(col("vec_id"),
         slice(asDouble("embedding"), j * sub + 1, sub).as("v")).persist()
       try kmeansLoop(v, ksub, iters)
       finally { v.unpersist(false); () }
     }.toArray
+  }
+
+  /** Subspace width of `dim`-wide vectors cut into `m` codebook subspaces
+    * (the PQ and IVF-PQ codebook trains). */
+  private def pqSubWidth(dim: Int, m: Int): Int = {
+    require(m > 0 && dim % m == 0,
+      s"dim $dim not divisible into $m codebook subspaces")
+    dim / m
   }
 
   /** Codebook geometry (m subspaces, ksub centroids each, subspace width),
@@ -315,7 +321,9 @@ object Similarity {
     * silently slice misaligned subspaces and return plausible-but-wrong
     * neighbors, so they fail loudly instead (and BEFORE touching
     * `cbs.head`: an empty array must hit the message, not a
-    * NoSuchElementException). */
+    * NoSuchElementException). This checks the codebooks against each
+    * other when the plan is built; [[pqWidthChecked]] checks them against
+    * the vectors when it runs. */
   private def pqGeometry(cbs: Array[Array[Array[Double]]]): (Int, Int, Int) = {
     val m = cbs.length
     require(m > 0, "no codebook subspaces")
@@ -329,6 +337,32 @@ object Similarity {
         s"codebook $j sub-vector width != $sub (subspace 0's)")
     }
     (m, ksub, sub)
+  }
+
+  /** `frame`, failing the query on any row whose vector `v` is not m×sub
+    * wide: codebooks that agree with each other can still disagree with
+    * the vectors they slice (the dot truncates to the shorter array, so a
+    * 3-wide codebook over 64-dim vectors would score 3 of 64 dims). A
+    * filter that every well-formed row passes, so the check runs inside
+    * the plan (no job of its own) with a message containing "codebook";
+    * it stays out of the lookup-table and encode projections, whose
+    * generated code is already near the JVM's 64 KB method limit. */
+  private def pqWidthChecked(frame: DataFrame, v: String,
+      cbs: Array[Array[Array[Double]]]): DataFrame = {
+    val (m, _, sub) = pqGeometry(cbs)
+    frame.where(when(size(col(v)) =!= lit(m * sub), raise_error(concat(
+        lit(s"codebook geometry $m x $sub does not match vector width "),
+        size(col(v)).cast("string"))))
+      .otherwise(lit(true)))
+  }
+
+  /** The PQ code word of one vector `v`: per subspace, the index of the
+    * nearest centroid in that subspace's codebook. Shared by the flat PQ
+    * and IVF-PQ encodes. */
+  private def pqCodes(v: Column, cbs: Array[Array[Array[Double]]]): Column = {
+    val (m, _, sub) = pqGeometry(cbs)
+    array((0 until m).map(j =>
+      nearestCluster(slice(v, j * sub + 1, sub), cbs(j)).cast("int")): _*)
   }
 
   /** The ADC lookup table of one query vector `v`: lut[j][c] =
@@ -529,13 +563,11 @@ object Similarity {
     * codes (one extra double beside the 8-byte code word). */
   private def pqEncode(v: DataFrame,
       cbs: Array[Array[Array[Double]]]): DataFrame = {
-    val (m, _, sub) = pqGeometry(cbs)
+    val m = pqGeometry(cbs)._1
     val decoded = flatten(array((0 until m).map(j =>
       element_at(typedLit(cbs(j).map(_.toSeq).toSeq),
         col("codes").getItem(j) + 1)): _*))
-    v.withColumn("codes", array((0 until m).map(j =>
-        nearestCluster(slice(col("v"), j * sub + 1, sub), cbs(j))
-          .cast("int")): _*))
+    pqWidthChecked(v, "v", cbs).withColumn("codes", pqCodes(col("v"), cbs))
       .withColumn("res", sqrt(aggregate(
         zip_with(col("v"), decoded, (a, b) => (a - b) * (a - b)),
         lit(0.0d), (acc, x) => acc + x)))
@@ -550,8 +582,10 @@ object Similarity {
     * `qn` the Cauchy-Schwarz bound scales by, and the vector's residual
     * `res`. */
   private def pqScan(idx: PqIndex, queryIds: Seq[Long]): DataFrame = {
-    val queries = idx.corpus.where(col("neighbor_id").isin(queryIds: _*))
-      .select(col("neighbor_id").as("query_id"), col("v_n").as("v_q"))
+    val queries = pqWidthChecked(
+        idx.corpus.where(col("neighbor_id").isin(queryIds: _*))
+          .select(col("neighbor_id").as("query_id"), col("v_n").as("v_q")),
+        "v_q", idx.cbs)
       .withColumn("lut", pqLut(col("v_q"), idx.cbs))
       .withColumn("qn", sqrt(dot(col("v_q"), col("v_q"))))
     idx.corpus
@@ -680,9 +714,7 @@ object Similarity {
   def ivfPqIndex(emb: DataFrame, nlist: Int = 8, m: Int = 16,
       ksub: Int = 16, ivfIters: Int = 2, pqIters: Int = 2,
       dim: Int = 64): IvfPqIndex = {
-    require(m > 0 && dim % m == 0,
-      s"dim $dim not divisible into $m codebook subspaces")
-    val sub = dim / m
+    val sub = pqSubWidth(dim, m)
     val cs = kmeansCentroids(emb, nlist, ivfIters)
     val v = emb.select(col("vec_id"), asDouble("embedding").as("v"))
     val centArr = typedLit(cs.map(_.toSeq).toSeq)
@@ -696,10 +728,8 @@ object Similarity {
       kmeansLoop(res.select(col("vec_id"),
         slice(col("r"), j * sub + 1, sub).as("v")), ksub, pqIters)
     }.toArray
-    val corpus = res
-      .withColumn("codes", array((0 until m).map(j =>
-        nearestCluster(slice(col("r"), j * sub + 1, sub), cbs(j))
-          .cast("int")): _*))
+    val corpus = pqWidthChecked(res, "r", cbs)
+      .withColumn("codes", pqCodes(col("r"), cbs))
       .select(col("cell").as("cell_n"), col("vec_id").as("neighbor_id"),
         col("v").as("v_n"), col("codes"))
       .localCheckpoint()
@@ -774,8 +804,10 @@ object Similarity {
       nprobe: Int = 3, shortlist: Int = 20, boundProbe: Boolean = false)
       : DataFrame = {
     val IvfPqIndex(cs, cbs, corpus, cellRes) = idx
-    val queries = corpus.where(col("neighbor_id").isin(queryIds: _*))
-      .select(col("neighbor_id").as("query_id"), col("v_n").as("v_q"))
+    val queries = pqWidthChecked(
+        corpus.where(col("neighbor_id").isin(queryIds: _*))
+          .select(col("neighbor_id").as("query_id"), col("v_n").as("v_q")),
+        "v_q", cbs)
       // one lookup table per query, shared across cells
       .withColumn("lut", pqLut(col("v_q"), cbs))
     // coarse ranking — same (score desc, cdot desc, cell desc) total order

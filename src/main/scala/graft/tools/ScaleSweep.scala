@@ -399,7 +399,9 @@ object ScaleSweep {
     // timed with the search — every stage is a linear corpus pass (16
     // subspace k-means of 4-dim slices, then an m-lookup scan per
     // candidate); the 8-byte codes are the resident index, so the scan
-    // reads 32× fewer bytes than brute
+    // reads 32× fewer bytes than brute. The build is the served pqIndex,
+    // so the timing includes its residual-norm pass and the checkpoint of
+    // the encoded corpus
     time("knn_pq") {
       val rows = Similarity.pqKnnWith(Similarity.pqIndex(emb, dim = Dim),
         qids, K, shortlist = 100).collect()

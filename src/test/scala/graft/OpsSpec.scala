@@ -4474,16 +4474,22 @@ class OpsSpec extends AnyFunSuite {
       .collect()
     assert(wide.head.getLong(2) == 90003L)
     // mismatched codebook geometry fails loudly instead of mis-slicing —
-    // at search time too, so a malformed loaded index cannot serve
+    // at search time too, so a malformed loaded index cannot serve: ragged
+    // codebooks when the search is planned, codebooks that agree with each
+    // other but not with the 64-dim vectors (1×1×3) when it runs
     val corpus = Similarity.pqIndex(emb).corpus
     for (badCbs <- Seq(Array.empty[Array[Array[Double]]],
+        Array(Array(Array(1.0, 2.0, 3.0))),
         Array(Array(Array(1.0, 2.0, 3.0)), Array(Array(1.0, 2.0))),
         Array(Array(Array(1.0, 2.0)), Array(Array(1.0, 2.0), Array(3.0, 4.0)))))
     {
-      val ex = intercept[IllegalArgumentException] {
+      val ex = intercept[Exception] {
         Similarity.pqKnnWith(Similarity.PqIndex(badCbs, corpus), Seq(0L), 5)
+          .collect()
       }
-      assert(ex.getMessage.contains("codebook"))
+      val msgs = Iterator.iterate[Throwable](ex)(_.getCause)
+        .takeWhile(_ != null).map(e => String.valueOf(e.getMessage))
+      assert(msgs.exists(_.contains("codebook")), ex.toString)
     }
   }
 
